@@ -64,7 +64,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 /**
- * Engine-recommended PRODUCTION session configuration.
+ * Engine-recommended PRODUCTION session settings, passed as
+ * `GraftSession.local(cpus, GraftConf.settings: _*)`.
  *
  * `spark.sql.autoBroadcastJoinThreshold = -1`: STATIC size estimates are
  * systematically wrong for this engine's core relations — Catalyst's
@@ -77,17 +78,43 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
  * broadcast at small scale — and explicit broadcast() hints (dictionaries,
  * probes, centroid relations) are unaffected.
  *
- * Applied by default in ScaleSmoke (where the hazard was measured, and
- * whose 100x tier a misestimate can OOM). The joins measured to hit the
- * hazard are additionally pinned to sort-merge in the operators
- * themselves (Align.alignToTokens, Bert.alignBertTokensToCorpusTokens),
- * so the engine is scale-safe there under ANY config; the small-scale
- * gate runs (Bench/Verify/tests) keep Spark defaults because the A/B at
- * sf0.1 measured this config at +20% wall (AQE promotion does not fully
+ * Applied in ScaleSmoke (where the hazard was measured, and whose 100x
+ * tier a misestimate can OOM). The joins measured to hit the hazard are
+ * additionally pinned to sort-merge in the operators themselves
+ * (Align.alignToTokens, Bert.alignBertTokensToCorpusTokens), so the
+ * engine is scale-safe there under ANY config; the small-scale gate runs
+ * (Bench/Verify/tests) keep Spark defaults because the A/B at sf0.1
+ * measured these settings at +20% wall (AQE promotion does not fully
  * recover static-broadcast stage fusion at toy scale) — a cluster-scale
- * deployment should apply it.
+ * deployment should apply them.
  */
 object GraftConf {
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    b.config("spark.sql.autoBroadcastJoinThreshold", "-1")
+  val settings: Seq[(String, String)] =
+    Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+}
+
+/** The one place a harness or test session is built. */
+object GraftSession {
+  /**
+   * A `local[cpus]` session with [[GraftExtensions]] injected, `cpus`
+   * shuffle partitions, UTC session time, UI off, WARN logging and
+   * bucketed scans pinned ([[graft.sources.Storage.pinBucketedScans]]).
+   * `conf` pairs are applied after these defaults, so they may override
+   * them.
+   */
+  def local(cpus: Int, conf: (String, String)*): SparkSession = {
+    val b = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .withExtensions(new GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      // events.ts is parquet TIMESTAMP(NANOS), which Spark rejects by
+      // default; read it as a nano-precision long instead.
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+    val spark = conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    graft.sources.Storage.pinBucketedScans(spark)
+    spark
+  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Prints formatted physical plans for selected declared queries — the
   * scale audit loop: check pushed filters, read schemas, broadcast vs
   * shuffle joins, and absence of single-partition exchanges. */
@@ -12,16 +10,7 @@ object PlanAudit {
       else Seq("q01_lineitem_agg", "q22_tokens", "q24_extract_regex_tok",
         "q28_overlap_join", "q75_overlap_rule", "q14_minhash_pairs",
         "q18_ann_brute", "q31_iob_to_spans", "q73_hash_split")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Storage.pinBucketedScans(spark)
+    val spark = GraftSession.local(4)
     names.foreach { n =>
       println(s"########## $n")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators._
 
@@ -28,25 +28,10 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val bigDir = "/tmp/graft_scale10"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-    // Default = the engine-recommended GraftConf (static broadcast off —
-    // see GraftConf for the Generate-passthrough misestimate this guards;
-    // it was MEASURED here, as a 2.6 GiB driver broadcast in the 100x
-    // align_bert row). SPARK_GRAFT_AQE_BCAST overrides BOTH the static and
-    // adaptive thresholds for A/B experiments against that default.
-    val spark = sys.env.get("SPARK_GRAFT_AQE_BCAST")
-      .fold(GraftConf.tune(builder))(v => builder
-        .config("spark.sql.autoBroadcastJoinThreshold", v)
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", v))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.sources.Storage.pinBucketedScans(spark)
+    // Static broadcast off: GraftConf's misestimate hazard was measured
+    // here, as a 2.6 GiB driver broadcast in the 100x align_bert row.
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt,
+      GraftConf.settings: _*)
 
     val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
     val emb1 = spark.read.parquet(s"$sfDir/embeddings.parquet")
