@@ -18,6 +18,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // Builder.withExtensions runs this before build() creates the SparkConf,
+    // which loads spark.* system properties; an explicit setting wins.
+    sys.props.getOrElseUpdate("spark.sql.codegen.cache.maxEntries",
+      GraftConf.CodegenCacheEntries.toString)
     ext.injectFunction((
       new FunctionIdentifier("portable_hash"),
       new ExpressionInfo(classOf[org.apache.spark.sql.graft.PortableHash].getName,
@@ -91,6 +95,26 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 object GraftConf {
   val settings: Seq[(String, String)] =
     Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
+
+  /**
+   * Size of Spark's process-wide generated-class cache
+   * (`StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES`, default 100), which
+   * [[GraftExtensions]] sets unless it is already set. The cache is an
+   * LRU read once per JVM, and one warm span-pipeline operation (CoNLL →
+   * IOB spans → extract → span joins → consolidate → BERT → F1) touches
+   * 191 distinct generated classes, so at 100 entries every class was
+   * evicted before its next use and recompiled: about 3 s of Janino
+   * compile per operation. Distinct classes over a seed-1 perfbench run:
+   * span_pipeline 197, ingest_loop 91, corpus_clean 58; 1024 is over 5×
+   * the largest and 2.5× all three in one JVM. The cache holds only
+   * classes actually compiled, so smaller working sets cost nothing more.
+   *
+   * An explicit `.config`, `--conf` or spark-defaults value wins. With
+   * `spark.sql.extensions=graft.GraftExtensions` the extension is created
+   * after the SparkConf, too late to set it, so such deployments must set
+   * the key themselves.
+   */
+  val CodegenCacheEntries = 1024
 }
 
 /** The one place a harness or test session is built. */

@@ -529,6 +529,12 @@ object Storage {
    * the store's server-side copy, same contract). Unpartitioned bucketed
    * tables only — a versioned table's clone would also need partition
    * recovery, which [[writeVersioned]] callers don't need cloned.
+   *
+   * On `file://` the clone HARDLINKS each file, so source and clone share
+   * bytes. That is safe only under this library's invariant that a written
+   * parquet file is never modified in place: appends add files, compaction
+   * writes a fresh directory, and deletes unlink. Code that rewrites a
+   * table file in place would change every clone of it too.
    */
   def cloneTable(spark: SparkSession, src: String, dst: String,
       dstPath: String): Unit = {
@@ -556,7 +562,8 @@ object Storage {
     // compaction writes a fresh directory and deletes the old one — an
     // unlink, which never affects the source's link), so a HARDLINK is a
     // byte-identical clone with the same lifecycle safety; fall back to a
-    // NIO copy per file (cross-device links), then to FileUtil.copy for
+    // NIO copy per file only when the link is refused (no hardlink support,
+    // cross-device link) and rethrow any other failure; use FileUtil.copy for
     // non-local schemes (where a production deployment would use the
     // store's server-side copy, as the doc below notes).
     if (srcFs.getScheme == "file" && fs.getScheme == "file") {
@@ -570,9 +577,11 @@ object Storage {
         else {
           java.nio.file.Files.createDirectories(t.getParent)
           try java.nio.file.Files.createLink(t, p)
-          catch { case _: Exception =>
-            java.nio.file.Files.copy(p, t,
-              java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          catch {
+            case _: UnsupportedOperationException |
+                 _: java.nio.file.FileSystemException =>
+              java.nio.file.Files.copy(p, t,
+                java.nio.file.StandardCopyOption.REPLACE_EXISTING)
           }
         }
       } finally it.close()

@@ -18,6 +18,11 @@ class GraftSessionSpec extends GraftSuite {
     assert(!row.isNullAt(0))
   }
 
+  test("GraftSession.local sizes the generated-class cache") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      GraftConf.CodegenCacheEntries.toString)
+  }
+
   test("GraftSession.local pins bucketed scans") {
     assert(spark.conf.get("spark.sql.sources.bucketing.autoBucketedScan.enabled") == "false")
   }
