@@ -3,62 +3,16 @@
 package org.apache.spark.sql.graft
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{ExpectsInputTypes, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.classic.ExpressionUtils
-import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
-
-/**
- * Fused single-pass corpus-quality statistics (round-21 optimization):
- * `(n_chars, n_punct, n_words, word_len_sum, n_stop_en)` in one struct.
- *
- * The quality family (qualityScore / punctRatio / meanWordLen and their
- * consumers q08/q11/q69/q77/q89/q115/q151 + cleanDocs) previously ran
- * FOUR separate passes per document — a words regex, a
- * `regexp_replace(text, "[^P]", "")` whose only purpose was to measure
- * the leftover length, an `aggregate` over the word array, and an
- * `array_contains` filter per word against the stopword list. This
- * expression computes all the counts in one scan; the Column-level
- * arithmetic downstream (least/greatest/when/round) is unchanged, so
- * every derived value is bit-identical (QualityStatsParitySpec pins each
- * field against the expression form it replaces).
- *
- * Count semantics, each matching the replaced form exactly:
- *  - n_chars   = length(text)  (code points of the ORIGINAL text);
- *  - n_punct   = ASCII-punctuation chars of the original text (the char
- *    class of Tokenize.PunctClass; multi-byte code points can never
- *    match, so a byte scan is exact);
- *  - n_words / word_len_sum / n_stop_en over [[WordShingles.wordsOf]]
- *    (identical word extraction to `words()` — same lowercase, same
- *    [a-z0-9] runs; words are ASCII so byte length == char length).
- */
-case class QualityStatsExpr(child: Expression)
-    extends UnaryExpression with ExpectsInputTypes {
-
-  override def dataType: DataType = QualityStatsExpr.schema
-  override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-
-  override def nullSafeEval(input: Any): Any =
-    QualityStatsExpr.statsOf(input.asInstanceOf[UTF8String])
-
-  // Round-22: codegen via a static call into the same single-pass kernel
-  // (was CodegenFallback, which excluded the host projection from
-  // whole-stage codegen entirely — see WordsExtract's note).
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      c => s"org.apache.spark.sql.graft.QualityStatsExpr.statsOf($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): QualityStatsExpr =
-    copy(child = newChild)
-}
 
 /** Shared shape of the round-22 fused SCALAR quality expressions: one
   * double out, never null, NULL input handled inside the kernel (the
-  * replaced Column forms fold a NULL struct through when/least into a
+  * replaced Column forms fold NULL text through when/least into a
   * non-null default, so `nullSafeEval` would be wrong here). */
 abstract class QualityScalarExpr extends UnaryExpression with ExpectsInputTypes {
   override def dataType: DataType = DoubleType
@@ -83,20 +37,19 @@ abstract class QualityScalarExpr extends UnaryExpression with ExpectsInputTypes 
 
 /**
  * Fused UNROUNDED quality score (round-22): the exact arithmetic of
- * [[graft.operators.TextAnalysis.qualityScore]]'s struct form — length
- * credit, punctuation penalty, word-shape and stopword credits — computed
- * in the counting pass itself. The struct form references the stats
- * struct ~9 times; whole-stage codegen eliminates common subexpressions
- * only inside ProjectExec, so every FILTER consumer (cleanDocs,
- * q88/q145/q146-style quality gates) re-scanned the document ~9× per row
- * once the struct expression joined codegen (measured: q69 0.37→0.77 s).
- * One expression, one scan. The final `round(_, 4)` stays at Column level
- * (single reference now), so Spark's own Round does the rounding —
- * nothing numeric is re-implemented.
+ * [[graft.operators.TextAnalysis.qualityScore]] — length credit,
+ * punctuation penalty, word-shape and stopword credits — computed in the
+ * counting pass itself. The round-21 form put the counts in a struct and
+ * referenced it ~9 times; whole-stage codegen eliminates common
+ * subexpressions only inside ProjectExec, so every FILTER consumer
+ * (cleanDocs, q88/q145/q146-style quality gates) re-scanned the document
+ * ~9× per row (measured: q69 0.37→0.77 s). One expression, one scan. The
+ * final `round(_, 4)` stays at Column level (single reference now), so
+ * Spark's own Round does the rounding — nothing numeric is re-implemented.
  *
- * NULL text mirrors the struct form's fold exactly: the NULL struct makes
- * `least(NULL/200, 1.0)` = 1.0 and every `when` fall to its otherwise →
- * 0.84 before rounding. QualityStatsParitySpec pins scalar==struct==regex.
+ * NULL text mirrors the Column form's fold exactly: `least(NULL/200, 1.0)`
+ * = 1.0 and every `when` falls to its otherwise → 0.84 before rounding.
+ * QualityStatsParitySpec pins scalar == regex.
  */
 case class QualityScoreRawExpr(child: Expression) extends QualityScalarExpr {
   override protected def kernel: String =
@@ -108,8 +61,8 @@ case class QualityScoreRawExpr(child: Expression) extends QualityScalarExpr {
 }
 
 /** Fused punctuation ratio — `when(n_chars > 0, n_punct/n_chars).otherwise(0.0)`
-  * in one byte scan (no word extraction at all: the struct form computed
-  * words it never used here). NULL text → 0.0, exactly the when-fold. */
+  * in one byte scan (no word extraction at all). NULL text → 0.0, exactly
+  * the when-fold. */
 case class PunctRatioExpr(child: Expression) extends QualityScalarExpr {
   override protected def kernel: String =
     "org.apache.spark.sql.graft.QualityStatsExpr.punctRatioOf"
@@ -131,14 +84,22 @@ case class MeanWordLenExpr(child: Expression) extends QualityScalarExpr {
     copy(child = newChild)
 }
 
+/**
+ * Single-pass corpus-quality kernels behind the fused scalar expressions.
+ * They replace four separate passes per document — a words regex, a
+ * `regexp_replace(text, "[^P]", "")` measured by length, an `aggregate`
+ * over the word array, and an `array_contains` stopword filter per word.
+ *
+ * Count semantics, each matching the replaced form exactly:
+ *  - n_chars   = length(text)  (code points of the ORIGINAL text);
+ *  - n_punct   = ASCII-punctuation chars of the original text (the char
+ *    class of Tokenize.PunctClass; multi-byte code points can never
+ *    match, so a byte scan is exact);
+ *  - n_words / word_len_sum / n_stop_en over [[WordShingles.wordsOf]]
+ *    (identical word extraction to `words()` — same lowercase, same
+ *    [a-z0-9] runs; words are ASCII so byte length == char length).
+ */
 object QualityStatsExpr {
-
-  val schema: StructType = StructType(Seq(
-    StructField("n_chars", LongType, nullable = false),
-    StructField("n_punct", LongType, nullable = false),
-    StructField("n_words", LongType, nullable = false),
-    StructField("word_len_sum", LongType, nullable = false),
-    StructField("n_stop_en", LongType, nullable = false)))
 
   /** StopwordsEn as byte arrays for allocation-free comparison. */
   private lazy val stopsEn: Array[Array[Byte]] =
@@ -200,14 +161,9 @@ object QualityStatsExpr {
     (nWords, lenSum, nStop)
   }
 
-  def statsOf(s: UTF8String): InternalRow = {
-    val (nWords, lenSum, nStop) = wordCounts(s, withStops = true)
-    InternalRow(s.numChars().toLong, punctCount(s), nWords, lenSum, nStop)
-  }
-
-  /** [[QualityScoreRawExpr]] kernel — the struct form's arithmetic with
-    * the `round(_, 4)` left to the Column layer. NULL text follows the
-    * struct form's fold: least(NULL, 1.0)=1.0, every `when` → otherwise. */
+  /** [[QualityScoreRawExpr]] kernel — the score arithmetic with the
+    * `round(_, 4)` left to the Column layer. NULL text follows the Column
+    * form's fold: least(NULL, 1.0)=1.0, every `when` → otherwise. */
   def scoreRawOf(s: UTF8String): Double = {
     var lengthCredit = 1.0 // least(NULL/200, 1.0) = 1.0 on NULL text
     var pr = 0.0
@@ -245,8 +201,6 @@ object QualityStatsExpr {
       if (nWords > 0) lenSum.toDouble / nWords.toDouble else 0.0
     }
 
-  def apply(c: Column): Column =
-    ExpressionUtils.column(QualityStatsExpr(ExpressionUtils.expression(c)))
   def scoreRaw(c: Column): Column =
     ExpressionUtils.column(QualityScoreRawExpr(ExpressionUtils.expression(c)))
   def punctRatio(c: Column): Column =

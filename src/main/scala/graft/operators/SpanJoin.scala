@@ -5,11 +5,18 @@ import org.apache.spark.sql.functions._
 import graft.spans
 
 /**
- * Span-predicate (theta/interval) joins, reduced to equi-joins exactly as
- * the reference does (reference: spanner/join.py) — the "blocking" pattern
- * from the entity-resolution literature. Reducing to equi-joins is what
- * makes these scale on Spark: Catalyst plans an ordinary shuffled (or
- * broadcast) hash join on `(doc_id, key)` instead of a nested-loop join.
+ * Span-predicate (theta/interval) joins (reference: spanner/join.py). Each
+ * operator is a plain declarative inner join: `doc_id` equality plus the
+ * span predicate.
+ *
+ * The reference reduces these joins to equi-joins by blocking; here the
+ * [[graft.plans.SpanJoinRewrite]] optimizer rule does that, and
+ * [[graft.GraftExtensions]] injects it into every engine session. The rule
+ * explodes both sides into fixed-width character blocks (overlap, contains)
+ * or replicates one side per gap value (adjacency), so Catalyst plans a hash
+ * join on `(doc_id, key)` instead of comparing every span pair within a
+ * document. Without the extension the results are the same, but the join is
+ * not blocked.
  */
 object SpanJoin {
 
@@ -18,101 +25,50 @@ object SpanJoin {
    * `first.end_tok + gap == second.begin_tok`, `gap ∈ [minGap, maxGap]`
    * (`adjacent_join`, reference: spanner/join.py:28-85).
    *
-   * The inner side replicates once per gap value (explode over a constant
-   * sequence — codegen'd, narrow), turning the band predicate into a pure
-   * equi-join on `(doc_id, end_tok)`.
-   *
    * Inputs: DataFrames with `doc_id` and a token-span struct column.
    * Output: doc_id, first, second.
    */
   def adjacentJoin(first: DataFrame, second: DataFrame,
       minGap: Int = 0, maxGap: Int = 0,
-      firstCol: String = "span", secondCol: String = "span"): DataFrame = {
-    val outer = first.select(col("doc_id"), col(firstCol).as("first"))
-    val inner = second.select(col("doc_id").as("doc_id2"), col(secondCol).as("second"),
-      explode(sequence(lit(minGap), lit(maxGap))).as("gap"))
-      .withColumn("join_key", col("second")("begin_tok") - col("gap"))
-    outer.join(inner,
-        outer("doc_id") === inner("doc_id2") &&
-          outer("first")("end_tok") === inner("join_key"))
-      .select(col("doc_id"), col("first"), col("second"))
-  }
+      firstCol: String = "span", secondCol: String = "span"): DataFrame =
+    spanJoin(first, second, firstCol, secondCol, Nil, (a, b) => {
+      val gap = b("begin_tok") - a("end_tok")
+      gap >= minGap && gap <= maxGap
+    })
 
   /**
    * All pairs of overlapping spans (`overlap_join`, reference:
-   * spanner/join.py:88-171). Blocking factor = ⌊mean span length⌋ over both
-   * inputs (join.py:129-134, computed with one cheap agg action); each span
-   * emits one row per covered block (explode of a sequence — no UDF);
-   * equi-join on `(doc_id, block)`; exact `overlaps` residual filter.
+   * spanner/join.py:88-171), one output row per overlapping input row pair.
    *
-   * @param carryCols extra FIRST-side columns carried through the block
-   *        join (narrow payload like an entity type). Carrying them costs
-   *        only their width times the ~1-2 block fan-out; recovering them
+   * @param carryCols extra FIRST-side columns carried through the join
+   *        (narrow payload like an entity type). Carrying them costs only
+   *        their width times the ~1-2 block fan-out; recovering them
    *        afterwards costs a whole extra join of the first relation onto
    *        the (larger) pair output — carry wins whenever the payload is
    *        small.
    */
   def overlapJoin(first: DataFrame, second: DataFrame,
       firstCol: String = "span", secondCol: String = "span",
-      blockChars: Int = 0, carryCols: Seq[String] = Nil): DataFrame =
-    blockedJoin(first, second, firstCol, secondCol,
-      (a, b) => spans.overlaps(a, b), blockChars, carryCols)
+      carryCols: Seq[String] = Nil): DataFrame =
+    spanJoin(first, second, firstCol, secondCol, carryCols, spans.overlaps)
 
   /**
    * All pairs where the first span contains the second (`contain_join`,
-   * reference: spanner/join.py:174-203): overlap blocking + contains filter.
+   * reference: spanner/join.py:174-203): overlap and contains.
    */
   def containJoin(first: DataFrame, second: DataFrame,
-      firstCol: String = "span", secondCol: String = "span",
-      blockChars: Int = 0): DataFrame =
-    blockedJoin(first, second, firstCol, secondCol,
-      (a, b) => spans.overlaps(a, b) && spans.containsSpan(a, b), blockChars)
+      firstCol: String = "span", secondCol: String = "span"): DataFrame =
+    spanJoin(first, second, firstCol, secondCol, Nil,
+      (a, b) => spans.overlaps(a, b) && spans.containsSpan(a, b))
 
-  /** Default blocking factor (chars per block) when the caller doesn't pass
-    * one: wide enough that typical token/phrase spans hit 1-2 blocks. The
-    * result is identical for any factor (exact residual filter +
-    * first-shared-block emission); only the candidate-pair count changes. */
-  val DefaultBlockChars = 32
-
-  private def blockedJoin(first: DataFrame, second: DataFrame,
-      firstCol: String, secondCol: String,
-      residual: (Column, Column) => Column, blockChars: Int,
-      carryCols: Seq[String] = Nil): DataFrame = {
-    // Multi-block pairs match once per shared block, so the join requires
-    // the block to be the pair's FIRST shared one:
-    // blk == greatest(first.begin, second.begin) div B, which every
-    // overlapping pair has (overlap bounds both begins below both ends)
-    // and has exactly once. That makes the join emit exactly one row per
-    // input ROW pair — the reference's multiplicity (spanner/join.py:
-    // 155-158) — with NO dedup pass at all. The earlier shape here
-    // (pre-aggregate to distinct values + dropDuplicates + multiplicity
-    // restore) spent three extra shuffles on the same result; never key
-    // such a dedup on monotonically_increasing_id either, which is
-    // nondeterministic across stage retries.
-    //
-    // Blocking factor: the reference derives ⌊mean span length⌋ with an
-    // eager stats pass over both inputs (spanner/join.py:129-134). At scale
-    // that is 2x input I/O per join call, so the default here is a fixed
-    // factor; callers holding better stats (or a cached sample) pass their
-    // own `blockChars`. Correctness never depends on the factor.
-    val b = if (blockChars > 0) blockChars.toLong else DefaultBlockChars.toLong
+  private def spanJoin(first: DataFrame, second: DataFrame,
+      firstCol: String, secondCol: String, carryCols: Seq[String],
+      predicate: (Column, Column) => Column): DataFrame = {
     val f = first.select(
       col("doc_id") +: col(firstCol).as("first") +: carryCols.map(col): _*)
     val s = second.select(col("doc_id").as("doc_id2"), col(secondCol).as("second"))
-
-    def blocks(df: DataFrame, c: String, blockName: String) = df.withColumn(blockName,
-      explode(sequence(floor(col(c)("begin") / b).cast("long"),
-        floor(col(c)("end") / b).cast("long"))))
-
-    // the __graft_blk prefix tells the SpanJoinRewrite optimizer rule this
-    // join is ALREADY blocked — without it, the rule would see the overlap
-    // residual pushed into the join condition and block it a second time
-    val fb = blocks(f, "first", "__graft_blk1")
-    val sb = blocks(s, "second", "__graft_blk2")
-    fb.join(sb, col("doc_id") === col("doc_id2") && col("__graft_blk1") === col("__graft_blk2"))
-      .filter(residual(col("first"), col("second")) &&
-        col("__graft_blk1") === floor(
-          greatest(col("first")("begin"), col("second")("begin")) / b).cast("long"))
+    f.join(s, col("doc_id") === col("doc_id2") &&
+        predicate(col("first"), col("second")))
       .select(col("doc_id") +: col("first") +: col("second") +:
         carryCols.map(col): _*)
   }

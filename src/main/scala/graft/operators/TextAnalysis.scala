@@ -244,20 +244,11 @@ object TextAnalysis {
 
   /** Fraction of characters that are ASCII punctuation. */
   def punctRatio(text: Column): Column =
-    // Fused scalar (round-22): the struct form below re-referenced the
-    // stats struct per field, which re-scanned the document per reference
-    // in codegen contexts without subexpression elimination (see
-    // QualityScoreRawExpr's doc). Value-identical incl. the NULL→0.0
-    // when-fold (QualityStatsParitySpec).
+    // Fused scalar (round-22): one byte scan, no re-scan per reference in
+    // codegen contexts without subexpression elimination (see
+    // QualityScoreRawExpr's doc). Value-identical to the regex form below
+    // incl. the NULL→0.0 when-fold (QualityStatsParitySpec).
     org.apache.spark.sql.graft.QualityStatsExpr.punctRatio(text)
-
-  /** Struct form of [[punctRatio]] — parity reference. */
-  private[graft] def punctRatioStructForm(text: Column): Column = {
-    val st = org.apache.spark.sql.graft.QualityStatsExpr(text)
-    when(st("n_chars") > 0,
-      st("n_punct").cast("double") / st("n_chars"))
-      .otherwise(lit(0.0))
-  }
 
   /** Regex form of [[punctRatio]] — parity reference for
     * QualityStatsParitySpec. */
@@ -270,14 +261,6 @@ object TextAnalysis {
   def meanWordLen(text: Column): Column =
     // Fused scalar (round-22), see [[punctRatio]].
     org.apache.spark.sql.graft.QualityStatsExpr.meanWordLen(text)
-
-  /** Struct form of [[meanWordLen]] — parity reference. */
-  private[graft] def meanWordLenStructForm(text: Column): Column = {
-    val st = org.apache.spark.sql.graft.QualityStatsExpr(text)
-    when(st("n_words") > 0,
-      st("word_len_sum").cast("double") / st("n_words"))
-      .otherwise(lit(0.0))
-  }
 
   /** Aggregate-over-words form of [[meanWordLen]] — parity reference for
     * QualityStatsParitySpec. */
@@ -297,30 +280,13 @@ object TextAnalysis {
   def qualityScore(text: Column): Column =
     // Fully fused scalar (round-22): ONE scan computes the unrounded
     // score; only Spark's own round(_, 4) stays at Column level (now a
-    // single reference). The struct form below evaluated the stats struct
-    // once per field reference (~9×/row) in codegen contexts without
-    // subexpression elimination — Filter consumers like cleanDocs paid it
-    // per row per predicate evaluation (measured q69 0.37→0.77 s on the
-    // naive codegen switch, restored to 0.2x by this fusion).
-    // QualityStatsParitySpec pins scalar == struct == regex forms.
+    // single reference). The round-21 struct form evaluated its stats
+    // struct once per field reference (~9×/row) in codegen contexts
+    // without subexpression elimination — Filter consumers like cleanDocs
+    // paid it per row per predicate evaluation (measured q69 0.37→0.77 s
+    // on the naive codegen switch, restored to 0.2x by this fusion).
+    // QualityStatsParitySpec pins scalar == regex forms.
     round(org.apache.spark.sql.graft.QualityStatsExpr.scoreRaw(text), 4)
-
-  /** Struct form of [[qualityScore]] — parity reference (round-21 shape). */
-  private[graft] def qualityScoreStructForm(text: Column): Column = {
-    val st = org.apache.spark.sql.graft.QualityStatsExpr(text)
-    val nWords = st("n_words").cast("double")
-    val lengthCredit = least(nWords / 200.0, lit(1.0))
-    val pr = when(st("n_chars") > 0,
-      st("n_punct").cast("double") / st("n_chars")).otherwise(lit(0.0))
-    val punctPenalty = greatest(lit(0.0), lit(1.0) - pr * 5)
-    val mwl = when(st("n_words") > 0,
-      st("word_len_sum").cast("double") / st("n_words")).otherwise(lit(0.0))
-    val wordShape = when(mwl >= 2 && mwl <= 12, 1.0).otherwise(0.5)
-    val sr = when(st("n_words") > 0,
-      st("n_stop_en").cast("double") / st("n_words")).otherwise(lit(0.0))
-    val stopCredit = when(sr > 0.05, 1.0).otherwise(0.7)
-    round(lengthCredit * 0.4 + punctPenalty * 0.2 + wordShape * 0.2 + stopCredit * 0.2, 4)
-  }
 
   /** The four-pass form [[qualityScore]] replaced — parity reference for
     * QualityStatsParitySpec. */

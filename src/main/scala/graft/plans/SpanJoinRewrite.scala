@@ -8,9 +8,10 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.LongType
 
 /**
- * Optimizer rule: rewrite a naive span-OVERLAP theta-join into the blocked
- * equi-join that [[graft.operators.SpanJoin.overlapJoin]] builds by hand —
- * so a user who writes the natural declarative form,
+ * Optimizer rule: rewrite a naive span-OVERLAP theta-join into a blocked
+ * equi-join. It is the only place span joins are blocked: the
+ * [[graft.operators.SpanJoin]] operators are declarative joins that rely
+ * on it, and a user who writes the natural declarative form,
  *
  * {{{ first.join(second, f("doc_id") === s("doc_id")
  *       && spans.overlaps(f("span"), s("span"))) }}}
@@ -39,9 +40,11 @@ import org.apache.spark.sql.types.LongType
  *
  * Safety: fires only for resolved inner joins; re-application to its own
  * output is blocked by the generated `__graft_blk` attributes. Disable
- * with `spark.graft.spanJoinRewrite.enabled=false`; block width in chars
- * via `spark.graft.spanJoinRewrite.blockChars` (default 32 — correctness
- * never depends on it, only the candidate count does).
+ * with `spark.graft.spanJoinRewrite.enabled=false`. Blocks are a fixed
+ * 32 chars wide; correctness never depends on the width, only the
+ * candidate count does. (The reference derives ⌊mean span length⌋ with an
+ * eager stats pass over both inputs, spanner/join.py:129-134; at scale that
+ * is a second read of both inputs per join.)
  *
  * Two further declarative shapes plan the same way (VERDICT r11 §missing-2):
  *
@@ -60,15 +63,15 @@ import org.apache.spark.sql.types.LongType
  *    native equi-join and is left alone). The x-side replicates once per
  *    gap value in the band and the join gains the equi-key
  *    `x − gap = y` — each qualifying pair matches for exactly one gap.
- *    Bands wider than `spark.graft.spanJoinRewrite.maxGapWidth`
- *    (default 256) are left untouched: replication would cost more than
- *    it saves, and a huge "band" is probably not a span gap at all.
+ *    Bands wider than 256 gap values are left untouched: replication
+ *    would cost more than it saves, and a huge "band" is probably not a
+ *    span gap at all.
  */
 object SpanJoinRewrite extends Rule[LogicalPlan] {
 
   val EnabledConf = "spark.graft.spanJoinRewrite.enabled"
-  val BlockCharsConf = "spark.graft.spanJoinRewrite.blockChars"
-  val MaxGapWidthConf = "spark.graft.spanJoinRewrite.maxGapWidth"
+  private val BlockChars = 32L
+  private val MaxGapWidth = 256L
   private val BlkPrefix = "__graft_blk"
   private val GapPrefix = "__graft_gap"
 
@@ -164,10 +167,10 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
 
   /** Block both sides on [lb,le] / [rb,re] and add the shared-block
     * equi-key plus the exactly-once `firstShared` condition to `cond`. */
-  private def blockedRewrite(j: Join, cond: Expression, blockChars: Long,
+  private def blockedRewrite(j: Join, cond: Expression,
       lb: Expression, le: Expression, rb: Expression, re: Expression,
       firstShared: (Expression, Attribute) => Expression): LogicalPlan = {
-    val b = Literal(blockChars, LongType)
+    val b = Literal(BlockChars, LongType)
     val (lGen, lBlk) = explodeBlocks(j.left, lb, le, s"${BlkPrefix}_l", b)
     val (rGen, rBlk) = explodeBlocks(j.right, rb, re, s"${BlkPrefix}_r", b)
     val newCond = And(And(cond, EqualTo(lBlk, rBlk)), firstShared(b, lBlk))
@@ -175,8 +178,7 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
   }
 
   /** OVERLAP: the canonical spans.overlaps expansion as one conjunct. */
-  private def rewriteOverlap(j: Join, cond: Expression,
-      blockChars: Long): Option[LogicalPlan] = {
+  private def rewriteOverlap(j: Join, cond: Expression): Option[LogicalPlan] = {
     val found = conjuncts(cond).collectFirst {
       // accept the predicate with its sides in either input order
       case p @ OverlapShape(b1, e1, b2, e2)
@@ -189,7 +191,7 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
         (b2, e2, b1, e1)
     }
     found.map { case (lb, le, rb, re) =>
-      blockedRewrite(j, cond, blockChars, lb, le, rb, re,
+      blockedRewrite(j, cond, lb, le, rb, re,
         (b, lBlk) => EqualTo(lBlk, Greatest(Seq(div(lb, b), div(rb, b)))))
     }
   }
@@ -201,8 +203,7 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
    * columns — two unrelated inequalities never fire the rule — and keeps
    * the block fan-out bounded by real span lengths.
    */
-  private def rewriteContains(j: Join, cond: Expression,
-      blockChars: Long): Option[LogicalPlan] = {
+  private def rewriteContains(j: Join, cond: Expression): Option[LogicalPlan] = {
     val cs = conjuncts(cond)
     // inner.begin >= outer.begin, either comparison orientation
     val lowers = cs.collect {
@@ -236,7 +237,7 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
         // containment bounds each side's widened range against the other
         // (inner.begin ≥ outer.begin keeps the greatest-of-minima inside
         // BOTH ranges, malformed spans included) — exactly once
-        blockedRewrite(j, cond, blockChars, lb, le, rb, re,
+        blockedRewrite(j, cond, lb, le, rb, re,
           (b, lBlk) => EqualTo(lBlk, Greatest(Seq(
             div(Least(Seq(lb, le)), b), div(Least(Seq(rb, re)), b)))))
       }
@@ -249,8 +250,7 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
    * once per gap in the band; the join gains equi-key `x − gap = y`, and
    * each qualifying pair matches for exactly one gap value.
    */
-  private def rewriteGapBand(j: Join, cond: Expression,
-      maxWidth: Long): Option[LogicalPlan] = {
+  private def rewriteGapBand(j: Join, cond: Expression): Option[LogicalPlan] = {
     val cs = conjuncts(cond)
     val lowers = cs.collect {
       case GreaterThanOrEqual(s: Subtract, IntLit(v)) => (s, v)
@@ -263,11 +263,11 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
     // Width guard ordered so it cannot wrap: `hi - lo` overflows Long for
     // extreme literal bounds (lo near Long.MinValue), wrapping NEGATIVE —
     // so require the difference itself non-negative before comparing.
-    // `hi - lo < maxWidth` ≡ band width (hi - lo + 1) ≤ maxWidth without
+    // `hi - lo < MaxGapWidth` ≡ band width (hi - lo + 1) ≤ MaxGapWidth without
     // ever computing the +1 that could overflow at hi = Long.MaxValue.
     val band = (for {
       (sl, lo) <- lowers; (su, hi) <- uppers
-      if sl.semanticEquals(su) && lo <= hi && hi - lo >= 0 && hi - lo < maxWidth
+      if sl.semanticEquals(su) && lo <= hi && hi - lo >= 0 && hi - lo < MaxGapWidth
     } yield (sl, lo, hi)).headOption
     band.flatMap { case (s, lo, hi) =>
       val (x, y) = (s.left, s.right)
@@ -297,9 +297,6 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!SQLConf.get.getConfString(EnabledConf, "true").toBoolean) return plan
-    val blockChars = SQLConf.get.getConfString(BlockCharsConf, "32").toLong
-    val maxGapWidth = SQLConf.get.getConfString(MaxGapWidthConf, "256").toLong
-
     plan.transformUp {
       case j @ Join(_, _, Inner, Some(cond), _)
           if j.resolved &&
@@ -307,9 +304,9 @@ object SpanJoinRewrite extends Rule[LogicalPlan] {
             // in the rewritten condition as the exact residual)
             !cond.references.exists(a =>
               a.name.startsWith(BlkPrefix) || a.name.startsWith(GapPrefix)) =>
-        rewriteOverlap(j, cond, blockChars)
-          .orElse(rewriteContains(j, cond, blockChars))
-          .orElse(rewriteGapBand(j, cond, maxGapWidth))
+        rewriteOverlap(j, cond)
+          .orElse(rewriteContains(j, cond))
+          .orElse(rewriteGapBand(j, cond))
           .getOrElse(j)
     }
   }

@@ -57,7 +57,7 @@ object DocumentStreams {
    * no earlier band b' < b also collides, which both sides can decide
    * locally because each row carries its (tiny, `bands`-long) band-key
    * array. This is the same trick the span overlap-join uses for blocked
-   * emission (operators/SpanJoin.scala), applied to LSH buckets.
+   * emission (plans/SpanJoinRewrite.scala), applied to LSH buckets.
    *
    * Scale shape: per micro-batch cost is the stream batch's band
    * probe against the static side; persist the corpus index bucketed by

@@ -150,7 +150,9 @@ class ExpressionSpec extends GraftSuite {
       WordShingles.ngrams(WordShingles.words(col("t")), 2).as("ng"),
       WordShingles.minhash(
         WordShingles.shingles(WordShingles.words(col("t")), 3), 4).as("mh"),
-      QualityStatsExpr(col("t")).as("qs"))
+      QualityStatsExpr.scoreRaw(col("t")).as("qs"),
+      QualityStatsExpr.punctRatio(col("t")).as("pr"),
+      QualityStatsExpr.meanWordLen(col("t")).as("mwl"))
     val codegenNode = df.queryExecution.executedPlan.find(
       _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
     assert(codegenNode.isDefined)
@@ -161,8 +163,8 @@ class ExpressionSpec extends GraftSuite {
       Seq("the", "quick", "brown", "fox", "40"))
     // interpreted-eval reference via the kernel directly
     import org.apache.spark.unsafe.types.UTF8String
-    val ws = org.apache.spark.sql.graft.WordShingles
-      .wordsOf(UTF8String.fromString("the quick brown fox 40"))
+    val text = UTF8String.fromString("the quick brown fox 40")
+    val ws = org.apache.spark.sql.graft.WordShingles.wordsOf(text)
     val sh = org.apache.spark.sql.graft.WordShingles.shingleHashes(ws, 3)
     assert(row.getSeq[Long](2) == sh.toLongArray().toSeq)
     assert(row.getSeq[Long](3) ==
@@ -171,9 +173,8 @@ class ExpressionSpec extends GraftSuite {
     assert(row.getSeq[Long](4) ==
       org.apache.spark.sql.graft.WordShingles.minhashSig(sh, 4)
         .toLongArray().toSeq)
-    val qs = row.getStruct(5)
-    val ref = QualityStatsExpr.statsOf(
-      UTF8String.fromString("the quick brown fox 40"))
-    assert((0 until 5).map(qs.getLong) == (0 until 5).map(ref.getLong))
+    assert(row.getDouble(5) == QualityStatsExpr.scoreRawOf(text))
+    assert(row.getDouble(6) == QualityStatsExpr.punctRatioOf(text))
+    assert(row.getDouble(7) == QualityStatsExpr.meanWordLenOf(text))
   }
 }

@@ -414,6 +414,14 @@ class PlanShapeSpec extends GraftSuite {
       .queryExecution.optimizedPlan.toString
     assert(p148.contains("__graft_gap"),
       s"gap-band rewrite did not fire on q148:\n${p148.take(1500)}")
+    // each explicit SpanJoin operator plans exactly like its declarative
+    // twin: the rule is the only thing that blocks either of them
+    Seq("q27_adjacent_join" -> "q148_adjacent_rule",
+        "q28_overlap_join" -> "q75_overlap_rule",
+        "q29_contain_join" -> "q147_contains_rule").foreach { case (op, twin) =>
+      assert(PlanDigest.of(SparkEntry.queries(op)(spark, d)) ==
+        PlanDigest.of(SparkEntry.queries(twin)(spark, d)), s"$op vs $twin")
+    }
   }
 
   test("plan digests of the ten most expensive queries stay pinned") {

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 import org.scalacheck.{Gen, Prop}
+import org.scalacheck.Prop.propBoolean
 import org.scalacheck.Test.{check, Parameters}
 import graft.operators.{Dedup, SpanJoin}
 
@@ -17,28 +19,39 @@ class PropertySpec extends GraftSuite {
   }
 
   test("blocked overlap join == brute-force overlap filter on random spans") {
+    // containJoin and adjacentJoin run on the same inputs; each span's
+    // token offsets equal its char offsets, so one brute force serves all
     val genSpans = Gen.listOfN(25, for {
       doc <- Gen.choose(0L, 3L)
       b <- Gen.choose(0, 120)
       len <- Gen.choose(0, 40)
     } yield (doc, b, b + len))
-    passed(Prop.forAll(genSpans, genSpans) { (ls, rs) =>
-      val l = ls.toDF("doc_id", "b", "e")
-        .select(col("doc_id"), spans.span(col("b"), col("e")).as("span"))
-      val r = rs.toDF("doc_id", "b", "e")
-        .select(col("doc_id"), spans.span(col("b"), col("e")).as("span"))
-      val got = SpanJoin.overlapJoin(l, r)
+    val genBand = for { lo <- Gen.choose(0, 3); hi <- Gen.choose(lo, 3) } yield (lo, hi)
+    passed(Prop.forAll(genSpans, genSpans, genBand) { (ls, rs, band) =>
+      def spanDf(xs: List[(Long, Int, Int)]) = xs.toDF("doc_id", "b", "e")
+        .select(col("doc_id"),
+          spans.tokenSpan(col("b"), col("e"), col("b"), col("e")).as("span"))
+      val (l, r) = (spanDf(ls), spanDf(rs))
+      def got(pairs: DataFrame) = pairs
         .select(col("doc_id"), col("first")("begin"), col("first")("end"),
           col("second")("begin"), col("second")("end"))
         .collect().map(_.toSeq).groupBy(identity).view.mapValues(_.length).toMap
-      // brute force on the driver: every row pair, reference overlap rule
-      def overlaps(a: (Long, Int, Int), c: (Long, Int, Int)): Boolean =
+      // brute force on the driver: every row pair, reference rules
+      type S = (Long, Int, Int)
+      def overlaps(a: S, c: S): Boolean =
         a._1 == c._1 && ((a._2 == c._2 && a._3 == c._3) || !(c._2 >= a._3 || c._3 <= a._2))
-      val want = (for {
-        a <- ls; c <- rs if overlaps(a, c)
+      def contains(a: S, c: S): Boolean = c._2 >= a._2 && c._3 <= a._3
+      def adjacent(a: S, c: S): Boolean =
+        a._1 == c._1 && c._2 - a._3 >= band._1 && c._2 - a._3 <= band._2
+      def want(rule: (S, S) => Boolean) = (for {
+        a <- ls; c <- rs if rule(a, c)
       } yield Seq[Any](a._1, a._2, a._3, c._2, c._3))
         .groupBy(identity).view.mapValues(_.length).toMap
-      got == want
+      (got(SpanJoin.overlapJoin(l, r)) == want(overlaps)) :| "overlapJoin" &&
+        (got(SpanJoin.containJoin(l, r)) ==
+          want((a, c) => overlaps(a, c) && contains(a, c))) :| "containJoin" &&
+        (got(SpanJoin.adjacentJoin(l, r, band._1, band._2)) == want(adjacent)) :|
+          s"adjacentJoin $band"
     })
   }
 

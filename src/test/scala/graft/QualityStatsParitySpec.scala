@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.TextAnalysis
 
-/** The round-21 fused quality-stats expression must reproduce the four
-  * separate passes it replaced bit-for-bit: punct ratio (regex-replace
+/** The fused quality-stats scalars must reproduce the four separate
+  * passes they replaced bit-for-bit: punct ratio (regex-replace
   * length), mean word length (aggregate over the word array), and the
   * composite quality score — including null text, empty text, all-punct
   * text and unicode. */
@@ -47,24 +47,13 @@ class QualityStatsParitySpec extends GraftSuite {
       collectCol(TextAnalysis.qualityScoreRegex(col("text"))))
   }
 
-  // round-22: the fused SCALAR kernels must also reproduce the round-21
-  // struct forms bit-for-bit (incl. the NULL-text when/least folds)
-  test("fused scalars == struct forms (round-22)") {
-    assert(collectCol(TextAnalysis.punctRatio(col("text"))) ==
-      collectCol(TextAnalysis.punctRatioStructForm(col("text"))))
-    assert(collectCol(TextAnalysis.meanWordLen(col("text"))) ==
-      collectCol(TextAnalysis.meanWordLenStructForm(col("text"))))
-    assert(collectCol(TextAnalysis.qualityScore(col("text"))) ==
-      collectCol(TextAnalysis.qualityScoreStructForm(col("text"))))
-  }
-
   // the motivating context: the score used as a FILTER predicate (where
   // whole-stage codegen does no subexpression elimination) must select
-  // the same rows as the struct form
+  // the same rows as the four-pass form
   test("qualityScore as a filter predicate selects identical rows") {
     val a = df.filter(TextAnalysis.qualityScore(col("text")) >= 0.5)
       .collect().map(_.getString(0)).toSeq
-    val b = df.filter(TextAnalysis.qualityScoreStructForm(col("text")) >= 0.5)
+    val b = df.filter(TextAnalysis.qualityScoreRegex(col("text")) >= 0.5)
       .collect().map(_.getString(0)).toSeq
     assert(a == b && a.nonEmpty)
   }

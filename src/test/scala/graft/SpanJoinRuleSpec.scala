@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec
 import graft.operators.SpanJoin
@@ -24,7 +25,7 @@ class SpanJoinRuleSpec extends GraftSuite {
       spans.overlaps(col("f.span"), col("s.span")))
     .select(col("f.doc_id"), col("f.span").as("first"), col("s.span").as("second"))
 
-  private def canon(df: org.apache.spark.sql.DataFrame) =
+  private def canon(df: DataFrame) =
     df.select(col("doc_id"), col("first")("begin"), col("first")("end"),
         col("second")("begin"), col("second")("end"))
       .collect().map(_.toSeq).sortBy(_.toString).toSeq
@@ -186,6 +187,38 @@ class SpanJoinRuleSpec extends GraftSuite {
       gap >= 0 && gap <= 100000)
     assert(!wide.queryExecution.optimizedPlan.toString.contains("__graft_gap"))
     assert(wide.count() == 1)
+  }
+
+  test("SpanJoin operators are declarative: only the rule blocks them") {
+    val l = tokDf(Seq((0L, 0, 1), (0L, 1, 3), (0L, 3, 3), (0L, 4, 6), (1L, 0, 2),
+      (1L, 2, 2)))
+    val r = tokDf(Seq((0L, 1, 2), (0L, 2, 3), (0L, 3, 3), (0L, 5, 6), (1L, 0, 1),
+      (1L, 2, 4)))
+    val ops = Seq[(String, () => DataFrame)](
+      "overlapJoin" -> (() => SpanJoin.overlapJoin(l, r)),
+      "containJoin" -> (() => SpanJoin.containJoin(l, r)),
+      "adjacentJoin" -> (() => SpanJoin.adjacentJoin(l, r, minGap = 0, maxGap = 2)))
+    def blocked(df: DataFrame) = {
+      val p = df.queryExecution.optimizedPlan.toString
+      p.contains("__graft_blk") || p.contains("__graft_gap")
+    }
+    def rows(df: DataFrame) = df.select(col("doc_id"),
+        col("first")("begin_tok"), col("first")("end_tok"),
+        col("second")("begin_tok"), col("second")("end_tok"))
+      .collect().map(_.toSeq).sortBy(_.toString).toSeq
+    ops.foreach { case (name, op) =>
+      val on = op()
+      assert(blocked(on), s"$name: the rule did not block the join")
+      val withRule = rows(on)
+      spark.conf.set(SpanJoinRewrite.EnabledConf, "false")
+      val (selfBlocked, without) = try {
+        val off = op()
+        (blocked(off), rows(off))
+      } finally spark.conf.set(SpanJoinRewrite.EnabledConf, "true")
+      assert(!selfBlocked, s"$name blocks the join by itself")
+      assert(withRule == without, name)
+      assert(withRule.nonEmpty, name)
+    }
   }
 
   test("overlap + contains residual composes (contain_join shape)") {
