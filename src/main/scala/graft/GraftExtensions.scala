@@ -67,35 +67,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 }
 
-/**
- * Engine-recommended PRODUCTION session settings, passed as
- * `GraftSession.local(cpus, GraftConf.settings: _*)`.
- *
- * `spark.sql.autoBroadcastJoinThreshold = -1`: STATIC size estimates are
- * systematically wrong for this engine's core relations — Catalyst's
- * Generate (explode) node passes its child's size estimate through, so a
- * corpus-scale token relation can be estimated below the broadcast
- * threshold. Measured at the 100x scale-smoke tier: a 2.6 GiB driver
- * broadcast (or outright driver OOM) inside the BERT-alignment chain,
- * 209 s vs 86 s with the config. AQE's RUNTIME broadcast promotion stays
- * on — it sees true shuffle sizes, so genuinely small sides still
- * broadcast at small scale — and explicit broadcast() hints (dictionaries,
- * probes, centroid relations) are unaffected.
- *
- * Applied in ScaleSmoke (where the hazard was measured, and whose 100x
- * tier a misestimate can OOM). The joins measured to hit the hazard are
- * additionally pinned to sort-merge in the operators themselves
- * (Align.alignToTokens, Bert.alignBertTokensToCorpusTokens), so the
- * engine is scale-safe there under ANY config; the small-scale gate runs
- * (Bench/Verify/tests) keep Spark defaults because the A/B at sf0.1
- * measured these settings at +20% wall (AQE promotion does not fully
- * recover static-broadcast stage fusion at toy scale) — a cluster-scale
- * deployment should apply them.
- */
+/** Engine-wide constants. */
 object GraftConf {
-  val settings: Seq[(String, String)] =
-    Seq("spark.sql.autoBroadcastJoinThreshold" -> "-1")
-
   /**
    * Size of Spark's process-wide generated-class cache
    * (`StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES`, default 100), which
@@ -123,11 +96,9 @@ object GraftSession {
    * A `local[cpus]` session with [[GraftExtensions]] injected, `cpus`
    * shuffle partitions, UTC session time, UI off, WARN logging and
    * bucketed scans pinned ([[graft.sources.Storage.pinBucketedScans]]).
-   * `conf` pairs are applied after these defaults, so they may override
-   * them.
    */
-  def local(cpus: Int, conf: (String, String)*): SparkSession = {
-    val b = SparkSession.builder()
+  def local(cpus: Int): SparkSession = {
+    val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .withExtensions(new GraftExtensions)
       .config("spark.sql.shuffle.partitions", cpus.toString)
@@ -136,7 +107,7 @@ object GraftSession {
       // default; read it as a nano-precision long instead.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-    val spark = conf.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     graft.sources.Storage.pinBucketedScans(spark)
     spark

@@ -13,9 +13,16 @@ import graft.{spans => S}
  * DuckDB SQL over the same parquet tables for the differential correctness
  * gate. Query lambdas take (session, sf-dir).
  *
- * Every lambda builds ONE lazy DataFrame plan — no driver-side actions —
- * so the driver can count/collect/write it and Catalyst sees the whole
- * pipeline (pushdown into the parquet scans, broadcast of small sides).
+ * Every lambda returns ONE lazy DataFrame plan, so the driver can
+ * count/collect/write it and Catalyst sees the whole pipeline (pushdown
+ * into the parquet scans, broadcast of small sides). Building a plan runs
+ * `DataFrameReader`'s schema-inference jobs, and some lambdas also
+ * run real actions while building: stored-table and sketch writes and
+ * appends, `localCheckpoint`, k-means/PQ/OPQ fits, Feather and CoNLL
+ * writes, and small reads that infer or validate (`extractDict`'s
+ * `maxLen`, `makeTable`'s pivot keys, duplicate-key checks).
+ * `AllQueriesPlanSpec` pins exactly which lambdas do, so a new action at
+ * plan build fails the suite.
  */
 object SparkEntry {
 
@@ -380,8 +387,7 @@ object SparkEntry {
   /** FROZEN quantizers, trained once per JVM per sf dir — the production
     * contract for every IVF/PQ query: a FAISS-style coarse quantizer and
     * PQ codebooks are trained OFFLINE once and reused across every index
-    * build, append, and probe for months (ScaleSmoke's frozenQuant makes
-    * the same accounting for the scale rows; q162 is DEFINED by frozen
+    * build, append, and probe for months (q162 is DEFINED by frozen
     * quantizers). Both fits are deterministic pure functions of the
     * embeddings relation (strict-oracle contract: smallest-id init,
     * 6dp-rounded means), so reuse cannot change any result — it only

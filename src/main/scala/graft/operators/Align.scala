@@ -45,7 +45,7 @@ object Align {
     // sort-merge: the plan that is correct at every scale. Cost at bench
     // scale (sf0.1): ~1.3x on the queries through this path — accepted;
     // a plan that is fast in a scale window and OOMs outside it is wrong.
-    // (GraftConf documents the config-level guard for the general class.)
+    // (README gives the config-level guard for the general class.)
     val joined = spansDf
       .join(beginToks.hint("merge"), col("doc_id") === col("b_doc_id") &&
         col(on)("begin") === col("b_off"), "left")

@@ -358,12 +358,13 @@ object Similarity {
    *    smallest-id members (label-blind capping could evict a bucket's
    *    only rare-label vectors and leave its anchors negative-less),
    *    bounding candidates per anchor at (nPlanes+1)·maxBucket·labels.
-   *    Deterministic (id order), and measured linear in ScaleSmoke's
-   *    `hard_negatives_scaled` row; the fixed-knob row is super-linear
-   *    at 10x by construction. The bound BINDING is measured too: the
-   *    `hard_negatives_saturated` row runs a dense-2-label corpus whose
-   *    buckets exceed maxBucket at every tier, so candidates/anchor sit
-   *    AT the bound and the tier ratio must be (and is) ~linear.
+   *    Deterministic (id order), and measured linear in the
+   *    `hard_negatives_scaled` scale-smoke row recorded in BASELINE.md;
+   *    the fixed-knob row is super-linear at 10x by construction. The
+   *    bound BINDING is measured too: the `hard_negatives_saturated` row
+   *    runs a dense-2-label corpus whose buckets exceed maxBucket at every
+   *    tier, so candidates/anchor sit AT the bound and the tier ratio must
+   *    be (and is) ~linear.
    *  - `maxCandPerAnchor` (0 = off): the HARD guarantee on top of the
    *    valve — after the bucket join, each anchor keeps only its first
    *    `maxCandPerAnchor` candidates in (n_id) order, applied to the

@@ -594,20 +594,21 @@ object DocumentStreams {
 
   /** Last-absorbed-batch marker (Hadoop FS, so the checkpoint can live
     * on hdfs://s3a:// like the tables): written AFTER a batch's pairs +
-    * absorb complete; a replayed batchId at-or-below it is skipped. */
+    * absorb complete; a replayed batchId at-or-below it is skipped. Only a
+    * missing marker means "nothing absorbed yet"; an unreadable or garbled
+    * one fails the batch, since reading it as -1 would re-absorb. */
   private def readAbsorbedMarker(spark: org.apache.spark.sql.SparkSession,
-      checkpointDir: String): Long =
-    try {
-      val marker = new org.apache.hadoop.fs.Path(checkpointDir,
-        "graft_absorbed_batch")
-      val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!fs.exists(marker)) -1L
-      else {
-        val in = fs.open(marker)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-        finally in.close()
-      }
-    } catch { case _: Exception => -1L }
+      checkpointDir: String): Long = {
+    val marker = new org.apache.hadoop.fs.Path(checkpointDir,
+      "graft_absorbed_batch")
+    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(marker)) -1L
+    else {
+      val in = fs.open(marker)
+      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
+      finally in.close()
+    }
+  }
 
   private def writeAbsorbedMarker(spark: org.apache.spark.sql.SparkSession,
       checkpointDir: String, batchId: Long): Unit = {

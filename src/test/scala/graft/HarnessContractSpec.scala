@@ -70,7 +70,7 @@ class HarnessContractSpec extends GraftSuite {
         objects.filter(_._1 < m.start).lastOption.map(_._2).getOrElse(f.getPath)
       }
     }
-    assert(mainObjects.sorted == Seq("Bench", "PlanAudit", "PlanDigest", "ScaleSmoke", "Verify"))
+    assert(mainObjects.sorted == Seq("Bench", "PlanAudit", "PlanDigest", "Verify"))
   }
 
   test("queries and oracleSql cover exactly the same names") {

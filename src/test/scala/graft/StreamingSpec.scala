@@ -612,6 +612,66 @@ class StreamingSpec extends GraftSuite {
     }
   }
 
+  test("crawlSelfUpdating fails loudly on a corrupt absorb marker instead " +
+      "of re-absorbing the replayed batch") {
+    import spark.implicits._
+    val corpus = Seq(
+      (0L, "the quick brown fox jumps over the lazy dog and runs far away today"))
+      .toDF("doc_id", "text")
+    val base = java.nio.file.Files.createTempDirectory("graft_corrupt_marker")
+    base.toFile.deleteOnExit()
+    graft.sources.Storage.writeBucketed(
+      graft.operators.Dedup.lshBandIndex(corpus, k = 8, bands = 4, shingleK = 3),
+      "corrupt_crawl_idx", s"$base/idx", bucketCol = "key", buckets = 8)
+    graft.sources.Storage.writeBucketed(corpus, "corrupt_crawl_cor",
+      s"$base/cor", bucketCol = "doc_id", buckets = 8)
+    val srcDir = s"$base/src"
+    def startCrawl() = graft.streaming.DocumentStreams.crawlSelfUpdating(
+      spark.readStream
+        .schema("page_id LONG, html STRING").json(srcDir),
+      "corrupt_crawl_idx", "corrupt_crawl_cor",
+      s"$base/pairs", s"$base/ckpt", threshold = 0.5, k = 8, bands = 4,
+      shingleK = 3)
+    Seq((11L, "<html><body><p>a genuinely novel page about glaciers carving " +
+        "deep mountain valleys</p></body></html>"))
+      .toDF("page_id", "html").write.mode("append").json(srcDir)
+    def tableRows(t: String): Long = {
+      spark.catalog.refreshTable(t); spark.table(t).count()
+    }
+    try {
+      val q1 = startCrawl()
+      try q1.processAllAvailable() finally q1.stop()
+      val idxRows = tableRows("corrupt_crawl_idx")
+      val corRows = tableRows("corrupt_crawl_cor")
+      // garble the marker, then lose batch 0's epoch commit so the
+      // restart replays the already-absorbed batch
+      val marker = java.nio.file.Paths.get(s"$base/ckpt/graft_absorbed_batch")
+      assert(java.nio.file.Files.exists(marker), "expected an absorb marker")
+      java.nio.file.Files.write(marker, "garbage".getBytes("UTF-8"))
+      // drop its checksum twin so the garbled text reaches the parser
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$base/ckpt/.graft_absorbed_batch.crc"))
+      assert(java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$base/ckpt/commits/0")),
+        "expected a commit file for batch 0")
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$base/ckpt/commits/.0.crc"))
+      val q2 = startCrawl()
+      try {
+        intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+          q2.processAllAvailable()
+        }
+      } finally q2.stop()
+      assert(tableRows("corrupt_crawl_idx") == idxRows,
+        "the replay re-absorbed the batch's index rows")
+      assert(tableRows("corrupt_crawl_cor") == corRows,
+        "the replay re-absorbed the batch's corpus rows")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS corrupt_crawl_idx")
+      spark.sql("DROP TABLE IF EXISTS corrupt_crawl_cor")
+    }
+  }
+
   test("nearDupAgainstCorpus batch path matches incrementalDupPairs corpus branch") {
     import spark.implicits._
     val t0 = "the quick brown fox jumps over the lazy dog and runs far away today"
