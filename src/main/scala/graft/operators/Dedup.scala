@@ -1075,18 +1075,22 @@ object Dedup {
    * Soft valve: a micro-batch's key set is small (that is the lever —
    * unprobed buckets are never opened), while a huge backfill batch
    * would touch every bucket anyway, so above `maxProbeKeys` the
-   * (semantically no-op) prune is skipped instead of growing the
+   * (semantically no-op) prune is skipped, with a WARN
+   * ([[graft.sources.Storage.collectWithinCap]]), instead of growing the
    * literal and the driver fetch.
    */
   def pruneIndexForBatch(index: DataFrame, batch: DataFrame, k: Int = 16,
       bands: Int = 4, shingleK: Int = 3, textCol: String = "text",
       maxProbeKeys: Int = 4096): DataFrame = {
+    import graft.sources.Storage
     val keys = batch.select(
         explode(lshBandKeys(
           minhashSignature(col(textCol), k, shingleK), k, bands)).as("key"))
-      .distinct().limit(maxProbeKeys + 1).collect().map(_.getLong(0))
-    if (keys.length > maxProbeKeys) index
-    else index.filter(col("key").isin(keys.map(java.lang.Long.valueOf): _*))
+      .distinct()
+    Storage.collectWithinCap(keys, maxProbeKeys, Storage.tableOf(index),
+        "distinct band keys")
+      .fold(index)(ks => index.filter(col("key").isin(
+        ks.map(r => java.lang.Long.valueOf(r.getLong(0))).toIndexedSeq: _*)))
   }
 
   /**

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 
 /**
  * Bucketed-storage helpers — the co-location lever for 100 TB pipelines.
@@ -31,21 +32,62 @@ object Storage {
 
   /**
    * Append `df` to an existing table written by [[writeBucketed]], with
-   * the SAME bucket spec — Spark hash-buckets the appended rows into a
-   * new file per (written task, bucket), so bucket pruning and
-   * co-located joins keep holding over the union of all appends. This is
-   * the incremental-index lever: a new batch lands as its own bucketed
-   * files (cost ∝ batch), the existing index files are never rewritten,
-   * and a probe still opens only the probed buckets' files across every
-   * append generation.
+   * the SAME bucket spec, so bucket pruning and co-located joins keep
+   * holding over the union of all appends. This is the incremental-index
+   * lever: a new batch lands as its own bucketed files (cost ∝ batch),
+   * the existing index files are never rewritten, and a probe still opens
+   * only the probed buckets' files across every append generation.
+   *
+   * Files per append: the bucketed writer emits one file per (write task,
+   * bucket). An input whose optimizer size estimate is at most
+   * `spark.sql.adaptive.advisoryPartitionSizeInBytes` (one partition's
+   * worth by Spark's own sizing rule) is coalesced to ONE write task, so
+   * it adds at most one file per non-empty bucket instead of one per
+   * (input slice, bucket); every later probe, and the next compaction,
+   * opens that many fewer files. A larger (or unestimated) input is
+   * written from its own partitions.
    */
   def appendBucketed(df: DataFrame, table: String,
-      bucketCol: String = "doc_id", buckets: Int = 32): Unit =
-    df.write.mode(SaveMode.Append)
+      bucketCol: String = "doc_id", buckets: Int = 32): Unit = {
+    val small = df.queryExecution.optimizedPlan.stats.sizeInBytes <=
+      df.sparkSession.sessionState.conf.getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    (if (small) df.coalesce(1) else df).write.mode(SaveMode.Append)
       .bucketBy(buckets, bucketCol)
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
+  }
+
+  private lazy val log = org.apache.logging.log4j.LogManager.getLogger("graft.sources.Storage")
+
+  /**
+   * The probe valve: collect at most `cap` rows of `rows` to the driver.
+   * `rows` is coalesced to one partition under the limit, so the fetch is
+   * one pass, not Spark's incremental take rounds. More than `cap` rows
+   * trips the valve: it returns None and logs one WARN naming `table`, the
+   * count and the cap, and the caller reads `table` unpruned instead of
+   * growing an `isin` literal and a driver fetch. Pruning is an
+   * optimization, so a trip changes cost, never rows; the WARN is what
+   * makes a batch that widened to a full scan visible.
+   */
+  private[graft] def collectWithinCap(rows: DataFrame, cap: Int, table: String,
+      what: String): Option[Array[Row]] = {
+    val got = rows.coalesce(1).limit(cap + 1).collect()
+    if (got.length <= cap) Some(got)
+    else {
+      log.warn(s"probe valve tripped on $table: at least ${got.length} $what " +
+        s"exceed the cap of $cap; reading $table unpruned")
+      None
+    }
+  }
+
+  /** The catalog table a relation reads (for valve messages), or a
+    * placeholder for a relation that reads none. */
+  private[graft] def tableOf(df: DataFrame): String =
+    df.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.execution.datasources.LogicalRelation
+          if r.catalogTable.isDefined => r.catalogTable.get.identifier.unquotedString
+    }.getOrElse("<unnamed relation>")
 
   /**
    * Create a VERSIONED bucketed table: rows land under a `gen` (append
@@ -382,11 +424,11 @@ object Storage {
   /**
    * Compact an appended table back to ONE FILE PER BUCKET.
    *
-   * [[appendBucketed]] lands one new file per (write task, bucket) per
-   * batch — the right write-side economics (existing files never
-   * rewritten, cost ∝ batch), but a 24/7 ingest accumulates files
-   * linearly in batch count until listing + parquet-footer overhead
-   * dominates even a bucket-pruned read. Compaction is the standard
+   * [[appendBucketed]] lands up to one new file per bucket per batch
+   * (one per (write task, bucket) for a large batch) — the right
+   * write-side economics (existing files never rewritten, cost ∝ batch),
+   * but a 24/7 ingest accumulates files linearly in batch count until
+   * listing + parquet-footer overhead dominates even a bucket-pruned read. Compaction is the standard
    * answer: rewrite the table's rows bucketed under the SAME spec, with
    * the rows pre-partitioned BY THE BUCKET COLUMN into `buckets`
    * partitions — `repartition(n, col)` and the bucketed writer share

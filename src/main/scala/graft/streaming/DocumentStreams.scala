@@ -105,26 +105,56 @@ object DocumentStreams {
    */
   def semanticDupAgainstIndex(batch: DataFrame, index: DataFrame,
       corpus: DataFrame, tau: Double = 0.3, nPlanes: Int = 8,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    cosineVerify(signProbeRows(batch, nPlanes, idCol, vecCol), index, corpus,
+      tau, idCol, vecCol)
+
+  /** A vector batch's probe rows `(batch_id, v_b, pb)`: one per vector and
+    * probe bucket (its own sign-LSH bucket and every single-bit flip). */
+  private def signProbeRows(batch: DataFrame, nPlanes: Int, idCol: String,
+      vecCol: String): DataFrame = {
     import graft.operators.Dedup
     val vecD = col(vecCol).cast("array<double>")
-    val probe = batch.select(col(idCol).as("batch_id"), vecD.as("v_b"),
+    batch.select(col(idCol).as("batch_id"), vecD.as("v_b"),
         Dedup.signBucketHashed(vecD, nPlanes).as("bucket"))
       .select(col("batch_id"), col("v_b"),
         explode(Dedup.probeBuckets(col("bucket"), nPlanes)).as("pb"))
+  }
+
+  /** Probe rows ⋈ sign-LSH index on `pb`, then the exact cosine verify
+    * against the corpus vectors: `(batch_id, dup_id, cos)` with cos ≥ tau. */
+  private def cosineVerify(probe: DataFrame, index: DataFrame,
+      corpus: DataFrame, tau: Double, idCol: String, vecCol: String): DataFrame =
     // vector cast applied ABOVE the join (round-22, same reasoning as
-    // nearDupAgainstIndex's verify shingles): the float→double cast
-    // allocated a fresh array for EVERY corpus row per probe; post-join
-    // only candidates pay it. Single reference, so CollapseProject can
-    // never duplicate it.
+    // jaccardVerify's shingles): the float→double cast allocated a fresh
+    // array for EVERY corpus row per probe; post-join only candidates pay
+    // it. Single reference, so CollapseProject can never duplicate it.
     probe.join(index.select(col("dup_id"), col("pb")), "pb")
       .filter(col("batch_id") =!= col("dup_id"))
       .join(corpus.select(col(idCol).as("dup_id"), col(vecCol).as("__vc0")),
         "dup_id")
-      .withColumn("cos", Dedup.halfUp4Signed(
+      .withColumn("cos", graft.operators.Dedup.halfUp4Signed(
         graft.tensor.cosine(col("v_b"), col("__vc0").cast("array<double>"))))
       .filter(col("cos") >= tau)
       .select("batch_id", "dup_id", "cos")
+
+  /** The driver-pinning step of both stored-index probes: collect `rows`,
+    * hold them as a local relation, and prune `target` to the distinct
+    * `rowKey` values they carry — an `isin` on `targetKey` that the
+    * target table's bucket spec turns into physical bucket pruning.
+    * Valve: above `cap` rows, `rows` stays lazy and `target` unpruned
+    * ([[graft.sources.Storage.collectWithinCap]] logs the trip). */
+  private def pinAndPrune(rows: DataFrame, rowKey: String, target: DataFrame,
+      targetKey: String, cap: Int, table: String,
+      what: String): (DataFrame, DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    graft.sources.Storage.collectWithinCap(rows, cap, table, what)
+      .fold((rows, target)) { got =>
+        val keys = got.map(_.getAs[Long](rowKey)).distinct
+        (rows.sparkSession.createDataFrame(got.toSeq.asJava, rows.schema),
+          target.filter(col(targetKey).isin(
+            keys.map(java.lang.Long.valueOf).toIndexedSeq: _*)))
+      }
   }
 
   /**
@@ -154,28 +184,29 @@ object DocumentStreams {
 
   /** The read half of the semantic self-updating loop: probe the stored
     * [[graft.operators.Dedup.signBucketIndex]] table (pruned to the
-    * batch's probe buckets, soft-valved; tombstones anti-joined) and
-    * cosine-verify the candidates against the stored vector corpus. */
+    * batch's probe buckets; tombstones anti-joined) and cosine-verify the
+    * candidates against the stored vector corpus.
+    *
+    * Job budget: the batch's probe rows are computed once, in one job, and
+    * held on the driver as a local relation (soft valve: above
+    * `maxProbeBuckets` rows they stay lazy and the index is read
+    * unpruned, with a WARN); the `pb` keys of the pruned scan come from
+    * those rows. The returned plan stays LAZY: sign-LSH candidate sets
+    * are large, so they are verified where they are joined, by whatever
+    * action the caller runs. */
   def probeStoredSemanticIndex(batch: DataFrame, indexTable: String,
       corpusTable: String, tau: Double = 0.3, nPlanes: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxProbeBuckets: Int = 4096,
       tombstoneTable: Option[String] = None): DataFrame = {
-    import graft.operators.Dedup
     import graft.sources.Storage
     val spark = batch.sparkSession
-    val vecD = col(vecCol).cast("array<double>")
-    val index0 = Storage.readTable(spark, indexTable)
-    val pbs = batch.select(
-        explode(Dedup.probeBuckets(
-          Dedup.signBucketHashed(vecD, nPlanes), nPlanes)).as("pb"))
-      .distinct().limit(maxProbeBuckets + 1).collect().map(_.getLong(0))
-    val pruned = dropTombstoned(
-      if (pbs.length > maxProbeBuckets) index0
-      else index0.filter(col("pb").isin(pbs.map(java.lang.Long.valueOf): _*)),
-      spark, tombstoneTable)
-    semanticDupAgainstIndex(batch, pruned,
-      Storage.readTable(spark, corpusTable), tau, nPlanes, idCol, vecCol)
+    val (probe, index) = pinAndPrune(
+      signProbeRows(batch, nPlanes, idCol, vecCol), "pb",
+      Storage.readTable(spark, indexTable), "pb", maxProbeBuckets, indexTable,
+      "probe rows")
+    cosineVerify(probe, dropTombstoned(index, spark, tombstoneTable),
+      Storage.readTable(spark, corpusTable), tau, idCol, vecCol)
   }
 
   /** The write half: absorb the batch into the stored sign-LSH index +
@@ -215,23 +246,36 @@ object DocumentStreams {
   def nearDupAgainstIndex(docs: DataFrame, index: DataFrame,
       corpus: DataFrame, threshold: Double = 0.8, k: Int = 16,
       bands: Int = 4, shingleK: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame =
+    jaccardVerify(
+      bandCandidates(bandProbeRows(docs, k, bands, shingleK, idCol, textCol),
+        index),
+      corpus, threshold, shingleK, idCol, textCol)
+
+  /** A text batch's probe rows `(batch_id, set_b, kb, band, key)`: one per
+    * (document, band), carrying the document's shingle set and band-key
+    * array — micro-batches are small, so width costs nothing here. */
+  private def bandProbeRows(docs: DataFrame, k: Int, bands: Int,
+      shingleK: Int, idCol: String, textCol: String): DataFrame = {
     import graft.operators.Dedup
-    // Stream side: one row per (doc, band), carrying its shingle set —
-    // micro-batches are small, so width costs nothing here.
-    val probe = docs.select(col(idCol).as("batch_id"),
+    docs.select(col(idCol).as("batch_id"),
         TextAnalysis.shingleHashes(col(textCol), shingleK).as("set_b"),
         Dedup.lshBandKeys(
           Dedup.minhashSignature(col(textCol), k, shingleK), k, bands)
           .as("kb"))
       .select(col("batch_id"), col("set_b"), col("kb"),
         posexplode(col("kb")).as(Seq("band", "key")))
+  }
+
+  /** Probe rows ⋈ band index on (band, key), each (batch, corpus) pair
+    * emitted once at its first shared band: `(batch_id, set_b, dup_id)`. */
+  private def bandCandidates(probe: DataFrame, index: DataFrame): DataFrame = {
     // Index side stays NARROW — (id, band keys) only; the corpus-sized
-    // shingle sets join back on the (few) candidates below instead of
-    // riding every band row.
+    // shingle sets join back on the (few) candidates in jaccardVerify
+    // instead of riding every band row.
     val indexC = index.select(col("dup_id"), col("kc"),
       col("band").as("band_c"), col("key").as("key_c"))
-    val candidates = probe.join(indexC,
+    probe.join(indexC,
         col("band") === col("band_c") && col("key") === col("key_c"))
       // first-shared-band: drop this collision if any EARLIER band pair
       // is also equal (slice of length `band` = bands 0..band-1; empty
@@ -241,6 +285,14 @@ object DocumentStreams {
           slice(col("kc"), lit(1), col("band")), (a, b) => a === b),
         x => x))
       .select("batch_id", "set_b", "dup_id")
+  }
+
+  /** The exact shingle-Jaccard verify of `(batch_id, set_b, dup_id)`
+    * candidates against the corpus text: `(batch_id, dup_id, jaccard)`
+    * with jaccard ≥ threshold. */
+  private def jaccardVerify(candidates: DataFrame, corpus: DataFrame,
+      threshold: Double, shingleK: Int, idCol: String,
+      textCol: String): DataFrame =
     // The exact shingle sets are computed ABOVE the candidates join
     // (round-22): computing them inside the corpus-side projection meant
     // the streamed join side evaluated shingleHashes for EVERY stored
@@ -261,7 +313,6 @@ object DocumentStreams {
           size(array_union(col("set_b"), col("set_c"))) * 1e4 + 0.5) / 1e4)
       .filter(col("jaccard") >= threshold)
       .select("batch_id", "dup_id", "jaccard")
-  }
 
   /**
    * Streaming CRAWL ingest — the 24/7 front door of a crawl pipeline:
@@ -394,13 +445,23 @@ object DocumentStreams {
   /**
    * Probe the PERSISTED corpus for one ingest batch — the read half of
    * the self-updating loop: the stored [[graft.operators.Dedup.lshBandIndex]]
-   * table (bucketed by `key`) supplies candidates through
-   * [[graft.operators.Dedup.pruneIndexForBatch]]'s bucket-pruned scan
-   * (tombstoned candidates anti-joined out), and the stored corpus
+   * table (bucketed by `key`) supplies candidates through a bucket-pruned
+   * scan (tombstoned candidates anti-joined out), and the stored corpus
    * relation `(idCol, textCol)` supplies the exact shingle-Jaccard
    * verify for just those candidates. Per-batch cost: a pruned index
    * read + the candidates' verify join — no corpus signature recompute
    * anywhere.
+   *
+   * Job budget: the batch's probe rows `(batch_id, set_b, kb, band, key)`
+   * are computed once, in one job, and held on the driver as a local
+   * relation; the index's `isin` keys come from them (soft valve: above
+   * `maxProbeKeys` rows they stay lazy and the index is read unpruned,
+   * with a WARN). With `pruneCorpusByCandidates` the bucket-pruned,
+   * tombstone-filtered index is scanned ONCE, by the job that collects
+   * the candidate `(batch_id, set_b, dup_id)` rows; the returned plan
+   * verifies those local rows against the candidate-pruned corpus and
+   * never re-reads the index. Without it the returned plan stays lazy
+   * over the pruned index.
    */
   def probeStoredIndex(batch: DataFrame, indexTable: String,
       corpusTable: String, threshold: Double = 0.8, k: Int = 16,
@@ -409,39 +470,32 @@ object DocumentStreams {
       pruneCorpusByCandidates: Boolean = false,
       maxCandidateIds: Int = 4096,
       tombstoneTable: Option[String] = None): DataFrame = {
-    import graft.operators.Dedup
     import graft.sources.Storage
     val spark = batch.sparkSession
-    val pruned = dropTombstoned(Dedup.pruneIndexForBatch(
-      Storage.readTable(spark, indexTable), batch, k, bands, shingleK,
-      textCol, maxProbeKeys), spark, tombstoneTable)
+    val (probe, index) = pinAndPrune(
+      bandProbeRows(batch, k, bands, shingleK, idCol, textCol), "key",
+      Storage.readTable(spark, indexTable), "key", maxProbeKeys, indexTable,
+      "probe rows")
+    val candidates = bandCandidates(probe,
+      dropTombstoned(index, spark, tombstoneTable))
     // The verify side reads the stored corpus for the candidates' exact
-    // shingle sets. With `pruneCorpusByCandidates` the candidate ids —
-    // known from the (narrow, shingle-free) band join — reach the corpus
+    // shingle sets. With `pruneCorpusByCandidates` the candidate rows are
+    // collected (few by construction) and their ids reach the corpus
     // scan as an `isin` literal, which the doc_id-bucketed corpus table
     // turns into physical BUCKET PRUNING: per batch, only the buckets
     // holding candidate documents are opened instead of the whole stored
     // corpus. At 100 TB the corpus text scan is the verify's dominant
     // cost, so this is the read-side lever; semantically a no-op (rows
     // outside candidate ids can never survive the verify equi-join).
-    // Soft valve like pruneIndexForBatch: above `maxCandidateIds` the
-    // prune is skipped rather than growing the literal — a batch with
-    // that many collisions touches most buckets anyway.
+    // Soft valve: above `maxCandidateIds` rows the candidates stay lazy
+    // and the corpus unpruned — a batch with that many collisions
+    // touches most buckets anyway.
     val corpus0 = Storage.readTable(spark, corpusTable)
-    val corpus = if (!pruneCorpusByCandidates) corpus0 else {
-      val candIds = batch.select(col(idCol).as("batch_id"),
-          explode(Dedup.lshBandKeys(
-            Dedup.minhashSignature(col(textCol), k, shingleK), k, bands))
-            .as("key"))
-        .join(pruned.select(col("dup_id"), col("key")), "key")
-        .select("dup_id").distinct()
-        .limit(maxCandidateIds + 1).collect().map(_.getLong(0))
-      if (candIds.length > maxCandidateIds) corpus0
-      else corpus0.filter(col(idCol).isin(
-        candIds.map(java.lang.Long.valueOf): _*))
-    }
-    nearDupAgainstIndex(batch, pruned, corpus,
-      threshold, k, bands, shingleK, idCol, textCol)
+    val (verified, corpus) =
+      if (!pruneCorpusByCandidates) (candidates, corpus0)
+      else pinAndPrune(candidates, "dup_id", corpus0, idCol, maxCandidateIds,
+        corpusTable, "candidate rows")
+    jaccardVerify(verified, corpus, threshold, shingleK, idCol, textCol)
   }
 
   /**
@@ -777,8 +831,8 @@ object DocumentStreams {
             col(vecCol).as(vecCol))
           val probes = Similarity.ivfPqResidualProbesAgg(q, cents, nprobe,
             vecCol = vecCol)
-          val cells = probes.select("cell_id").distinct()
-            .limit(maxProbeCells + 1).collect().map(_.getInt(0))
+          val cells = Storage.collectWithinCap(probes.select("cell_id").distinct(),
+            maxProbeCells, indexTable, "distinct probe cells")
           val index0 = Storage.readTable(spark, indexTable)
           // Self-exclusion BEFORE ranking (ADVICE r20): on an
           // at-least-once replay (crash between the index append and the
@@ -791,9 +845,8 @@ object DocumentStreams {
           // and this is a no-op. The post-rank self filter below stays
           // as defense in depth.
           val prunedNoSelf = dropTombstoned(
-            if (cells.length > maxProbeCells) index0
-            else index0.filter(col("cell_id").isin(
-              cells.map(Integer.valueOf): _*)),
+            cells.fold(index0)(cs => index0.filter(col("cell_id").isin(
+              cs.map(r => Integer.valueOf(r.getInt(0))).toIndexedSeq: _*))),
             spark, tombstoneTable, idCol)
             .join(broadcast(batch.select(col(idCol).as("__self_id"))),
               col(idCol) === col("__self_id"), "left_anti")

@@ -13,6 +13,55 @@ import graft.sources.Storage
 class StorageSpec extends GraftSuite {
   import spark.implicits._
 
+  /** Runs `body` and returns its value with every file scan of every
+    * query it ran: (table, Some((selected, total)) buckets when the scan
+    * is bucket-pruned). */
+  private def scansDuring[T](body: => T): (T, Seq[(String, Option[(Int, Int)])]) = {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val out = try {
+      val v = body
+      org.apache.spark.GraftTestAccess.drainListeners(spark.sparkContext)
+      v
+    } finally spark.listenerManager.unregister(listener)
+    val sel = "(\\d+) out of (\\d+)".r
+    val walk = new AdaptiveSparkPlanHelper {}
+    (out, plans.asScala.toSeq.flatMap(p => walk.collectWithSubqueries(p) {
+      case s: FileSourceScanExec =>
+        (s.tableIdentifier.fold("")(_.table),
+          s.metadata.get("SelectedBucketsCount").flatMap(sel.findFirstMatchIn)
+            .map(m => (m.group(1).toInt, m.group(2).toInt)))
+    }))
+  }
+
+  /** Runs `body` and returns its value with the WARN messages logged to
+    * `logger` meanwhile. */
+  private def warningsDuring[T](logger: String)(body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val app = new AbstractAppender("graft-warn-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) got.add(e.getMessage.getFormattedMessage)
+    }
+    app.start()
+    val log = LogManager.getLogger(logger).asInstanceOf[Logger]
+    log.addAppender(app)
+    try (body, got.asScala.toSeq)
+    finally { log.removeAppender(app); app.stop() }
+  }
+
   test("co-bucketed doc_id join has no Exchange in the physical plan") {
     val docs = Seq((0L, "key agg row scan"), (1L, "slow fast join")).toDF("doc_id", "text")
     val toks = Tokenize.normalizedTokens(docs)
@@ -386,18 +435,22 @@ class StorageSpec extends GraftSuite {
       // corpus scan now bucket-prunes too (the candidate ids reach the
       // doc_id-bucketed corpus table as an isin literal) — at 100 TB the
       // corpus text scan is the verify's dominant per-batch cost
-      val probe3p = DocumentStreams.probeStoredIndex(
+      // The index scan runs in the candidate pass and the corpus scan in
+      // the returned plan, so both are read off every query the call runs.
+      val (pairs3p, scans3p) = scansDuring(DocumentStreams.probeStoredIndex(
         Seq((30L, t0)).toDF("doc_id", "text"), "self_idx_spec",
         "self_cor_spec", threshold = 0.5, k = 8, bands = 4, shingleK = 3,
         pruneCorpusByCandidates = true)
-      assert(probe3p.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ==
-        Set((30L, 0L), (30L, 10L)))
-      val prunedScans = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
-        .findAllMatchIn(probe3p.queryExecution.executedPlan.toString).toSeq
-      assert(prunedScans.size >= 2,
-        s"expected BOTH the index and corpus scans bucket-pruned:\n" +
-          probe3p.queryExecution.executedPlan)
-      assert(prunedScans.forall(m => m.group(1).toInt < m.group(2).toInt))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(pairs3p == Set((30L, 0L), (30L, 10L)))
+      Seq("self_idx_spec", "self_cor_spec").foreach { t =>
+        val sel = scans3p.filter(_._1 == t).map(_._2)
+        assert(sel.nonEmpty && sel.forall {
+            case Some((chosen, total)) => chosen < total && total == 8
+            case None => false
+          }, s"expected BOTH the index and corpus scans bucket-pruned, " +
+          s"got $t: $sel")
+      }
     } finally {
       spark.sql("DROP TABLE IF EXISTS self_idx_spec")
       spark.sql("DROP TABLE IF EXISTS self_cor_spec")
@@ -1185,5 +1238,130 @@ class StorageSpec extends GraftSuite {
       graft.operators.Skew.saltedJoin(tainted, small, "doc_id")
     }
     assert(e2.getMessage.contains("__salt"))
+  }
+
+  test("appendBucketed: 100 rows from a 4-slice relation add at most one " +
+      "file per bucket") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_append_files_t")
+    dir.toFile.deleteOnExit()
+    val mk = (ids: Range) => ids.map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
+    Storage.writeBucketed(mk(0 until 10), "append_files_spec", s"$dir/t",
+      buckets = 8)
+    def files(): Int = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/t"))
+      .iterator().asScala.count(_.getFileName.toString.startsWith("part-"))
+    try {
+      val before = files()
+      val batch = mk(100 until 200).repartition(4)
+      assert(batch.rdd.getNumPartitions == 4)
+      Storage.appendBucketed(batch, "append_files_spec", buckets = 8)
+      val added = files() - before
+      assert(added >= 1 && added <= 8,
+        s"expected at most one new file per bucket (8), got $added")
+      spark.catalog.refreshTable("append_files_spec")
+      assert(Storage.readTable(spark, "append_files_spec").count() == 110)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS append_files_spec")
+    }
+  }
+
+  test("probeStoredIndex(pruneCorpusByCandidates) scans the index table " +
+      "exactly once across every query it runs") {
+    import graft.streaming.DocumentStreams
+    val t0 = "the quick brown fox jumps over the lazy dog and runs far away today"
+    val corpus = Seq((0L, t0), (1L, t0 + " tonight"),
+      (2L, "completely different text about database engines and query planners"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_once_t")
+    dir.toFile.deleteOnExit()
+    Storage.writeBucketed(
+      graft.operators.Dedup.lshBandIndex(corpus, k = 8, bands = 4, shingleK = 3),
+      "once_idx_spec", s"$dir/idx", bucketCol = "key", buckets = 8)
+    Storage.writeBucketed(corpus, "once_cor_spec", s"$dir/cor",
+      bucketCol = "doc_id", buckets = 8)
+    try {
+      val (pairs, scans) = scansDuring(DocumentStreams.probeStoredIndex(
+        Seq((30L, t0)).toDF("doc_id", "text"), "once_idx_spec",
+        "once_cor_spec", threshold = 0.5, k = 8, bands = 4, shingleK = 3,
+        pruneCorpusByCandidates = true)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet)
+      assert(pairs == Set((30L, 0L), (30L, 1L)))
+      assert(scans.count(_._1 == "once_idx_spec") == 1,
+        s"expected one index scan, got ${scans.mkString(", ")}")
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS once_idx_spec")
+      spark.sql("DROP TABLE IF EXISTS once_cor_spec")
+    }
+  }
+
+  test("probe valves: every cap at 0 gives the same pairs as at its " +
+      "default, and each trip logs one WARN naming the table and the cap") {
+    import graft.operators.Dedup
+    import graft.streaming.DocumentStreams
+    val t0 = "the quick brown fox jumps over the lazy dog and runs far away today"
+    val corpus = Seq((0L, t0), (1L, t0 + " tonight"),
+      (2L, "completely different text about database engines and query planners"))
+      .toDF("doc_id", "text")
+    val base = Array.tabulate(8)(i => 1.0 + i * 0.1)
+    val vecs = Seq((0L, base), (5L, base.map(-_))).toDF("vec_id", "embedding")
+    val dir = java.nio.file.Files.createTempDirectory("graft_valve_t")
+    dir.toFile.deleteOnExit()
+    Storage.writeBucketed(Dedup.lshBandIndex(corpus, k = 8, bands = 4, shingleK = 3),
+      "valve_idx", s"$dir/idx", bucketCol = "key", buckets = 8)
+    Storage.writeBucketed(corpus, "valve_cor", s"$dir/cor", bucketCol = "doc_id",
+      buckets = 8)
+    Storage.writeBucketed(Dedup.signBucketIndex(vecs), "valve_sidx",
+      s"$dir/sidx", bucketCol = "pb", buckets = 8)
+    Storage.writeBucketed(vecs, "valve_scor", s"$dir/scor", bucketCol = "vec_id",
+      buckets = 8)
+    try {
+      val batch = Seq((30L, t0)).toDF("doc_id", "text")
+      def text(keys: Int, cands: Int, prune: Boolean) =
+        DocumentStreams.probeStoredIndex(batch, "valve_idx", "valve_cor",
+          threshold = 0.5, k = 8, bands = 4, shingleK = 3, maxProbeKeys = keys,
+          pruneCorpusByCandidates = prune, maxCandidateIds = cands)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      def sem(buckets: Int) = DocumentStreams.probeStoredSemanticIndex(
+        Seq((40L, base.map(_ + 0.01))).toDF("vec_id", "embedding"),
+        "valve_sidx", "valve_scor", tau = 0.9, maxProbeBuckets = buckets)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      def indexed(keys: Int) = DocumentStreams.nearDupAgainstIndex(batch,
+        Dedup.pruneIndexForBatch(Storage.readTable(spark, "valve_idx"), batch,
+          k = 8, bands = 4, shingleK = 3, maxProbeKeys = keys),
+        corpus, threshold = 0.5, k = 8, bands = 4, shingleK = 3)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val (want, quiet) = warningsDuring("graft.sources.Storage") {
+        (text(4096, 4096, prune = true), text(4096, 4096, prune = false),
+          sem(4096), indexed(4096))
+      }
+      assert(quiet.isEmpty, s"valve tripped at the default caps: $quiet")
+      assert(want._1 == Set((30L, 0L), (30L, 1L)) && want._2 == want._1 &&
+        want._4 == want._1 && want._3 == Set((40L, 0L)))
+      // (result, expected pairs, WARNs the call must log: table, what)
+      val cases = Seq(
+        ("maxProbeKeys = 0", () => text(0, 4096, prune = true), want._1,
+          Seq("valve_idx" -> "probe rows")),
+        ("maxProbeKeys = 0, lazy corpus", () => text(0, 4096, prune = false),
+          want._1, Seq("valve_idx" -> "probe rows")),
+        ("maxCandidateIds = 0", () => text(4096, 0, prune = true), want._1,
+          Seq("valve_cor" -> "candidate rows")),
+        ("both text caps = 0", () => text(0, 0, prune = true), want._1,
+          Seq("valve_idx" -> "probe rows", "valve_cor" -> "candidate rows")),
+        ("maxProbeBuckets = 0", () => sem(0), want._3,
+          Seq("valve_sidx" -> "probe rows")),
+        ("pruneIndexForBatch maxProbeKeys = 0", () => indexed(0), want._1,
+          Seq("valve_idx" -> "distinct band keys")))
+      cases.foreach { case (name, run, expect, trips) =>
+        val (got, warns) = warningsDuring("graft.sources.Storage")(run())
+        assert(got == expect, s"$name: $got vs $expect")
+        assert(warns.size == trips.size, s"$name: expected ${trips.size} WARN, got $warns")
+        trips.zip(warns).foreach { case ((table, what), w) =>
+          assert(w.contains(table) && w.contains(s"at least 1 $what") &&
+            w.contains("cap of 0"), s"$name: $w")
+        }
+      }
+    } finally {
+      Seq("valve_idx", "valve_cor", "valve_sidx", "valve_scor")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
   }
 }
