@@ -253,6 +253,15 @@ object SparkEntry {
         t, s"$o/idx", bucketCol = "cell_id", buckets = 8); t
     }
 
+  /** The stored cell_id-bucketed index `tbl`, pruned to the cells `probes`
+    * route to: the q154 probe-cell valve ([[sources.Storage.pinAndPrune]]).
+    * |cells| ≤ min(queries × nprobe, k_cells), so the 4096 cap never trips
+    * here; a trip would WARN and read the index unpruned (same rows). */
+  private def storedCells(s: SparkSession, tbl: String,
+      probes: DataFrame): DataFrame =
+    sources.Storage.pinAndPrune[Int](probes.select("cell_id").distinct(), "cell_id",
+      sources.Storage.readTable(s, tbl), "cell_id", 4096, "distinct probe cells")._2
+
   /** q156's extracted crawl corpus (parquet path, not a table). */
   private def seedCrawlCorpusPath(s: SparkSession, dir: String): String =
     seedOnce("graft_crawlcorpus", dir) { (sOut, _) =>
@@ -1294,7 +1303,9 @@ object SparkEntry {
     // PRUNING at the scan (SelectedBucketsCount < total; asserted in
     // StorageSpec). The probe-cell set is bounded by queries×nprobe
     // (10 here), so collecting it is a bounded driver action like the
-    // centroid fit. Results identical to q149 — shares its oracle.
+    // centroid fit, behind the shared soft valve (storedCells: above 4096
+    // cells it WARNs and reads the index unpruned). Results identical to
+    // q149 — shares its oracle.
     "q154_ivfpq_bucketed" -> ((s, dir) => {
       val e = embedsD(s, dir)
       val q = e.filter(col("vec_id") < 5).select(col("vec_id").as("query_id"), col("embedding"))
@@ -1306,24 +1317,9 @@ object SparkEntry {
       // production economics
       val tbl = seedIvfPqIdxRo(s, dir)
       val probes = Similarity.ivfPqProbes(q, centroids, nprobe = 2)
-      // The probe-cell collect is a VALVE, not an unbounded driver action:
-      // |cells| ≤ min(queries x nprobe, k_cells) and the require turns a
-      // misuse at production query-batch sizes into an explicit error
-      // instead of a silently growing isin literal + driver fetch. Within
-      // the cap, the literal isin is what Spark turns into physical
-      // bucket pruning at the scan (SelectedBucketsCount, StorageSpec);
-      // beyond it, route the batch through q155's aggregate form (no
-      // index persistence) or shard the query batch.
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch " +
-          "or use the aggregate (q155) form")
-      Similarity.ivfPqTopKFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
-        probes, books, k = 10)
+      // Beyond the valve's cap (a production-size query batch), route
+      // the batch through q155's aggregate form or shard it.
+      Similarity.ivfPqTopKFromIndex(storedCells(s, tbl, probes), probes, books, k = 10)
     }),
 
     // q149 with BOTH rank windows (probe routing + final top-k) swapped
@@ -1364,17 +1360,7 @@ object SparkEntry {
         Similarity.ivfPqIndex(batch, centroids, books),
         tbl, bucketCol = "cell_id", buckets = 8)
       val probes = Similarity.ivfPqProbes(q, centroids, nprobe = 2)
-      // same bounded probe-cell valve as q154
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch " +
-          "or use the aggregate (q155) form")
-      Similarity.ivfPqTopKFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
-        probes, books, k = 10)
+      Similarity.ivfPqTopKFromIndex(storedCells(s, tbl, probes), probes, books, k = 10)
     }),
 
     // BM25 keyword retrieval (Okapi, Lucene idf form): three term
@@ -2388,17 +2374,7 @@ object SparkEntry {
       val (cents, books) = Similarity.refreshStoredIvfPqIndex(s, e, tbl,
         k = 8, m = 8, ksub = 16, iters = 2, buckets = 8)
       val probes = Similarity.ivfPqProbes(q, cents, nprobe = 2)
-      // q154's probe-cell valve: bounded by queries×nprobe, isin →
-      // physical bucket pruning on the refreshed table
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch")
-      Similarity.ivfPqTopKFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
-        probes, books, k = 10)
+      Similarity.ivfPqTopKFromIndex(storedCells(s, tbl, probes), probes, books, k = 10)
     }),
 
     // BLOOM decontamination (round-17 extension): the MEMBERSHIP member
@@ -2496,14 +2472,8 @@ object SparkEntry {
       val (r, books) = opq816(s, dir)
       val tbl = seedOpqIdxRo(s, dir)
       val probes = Similarity.ivfPqOpqProbes(q, cents, r, nprobe = 2)
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch")
       Similarity.ivfPqResidualTopKRerankFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
+        storedCells(s, tbl, probes),
         probes, q, e, books, k = 10, r = 40)
     }),
 
@@ -2519,15 +2489,7 @@ object SparkEntry {
       val (r, books) = opq816(s, dir)
       val tbl = seedOpqIdxRo(s, dir)
       val probes = Similarity.ivfPqOpqProbes(q, cents, r, nprobe = 2)
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch")
-      Similarity.ivfPqTopKFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
-        probes, books, k = 10)
+      Similarity.ivfPqTopKFromIndex(storedCells(s, tbl, probes), probes, books, k = 10)
     }),
 
     // q180's PERSISTED-index form (the q154 pattern applied to the
@@ -2544,15 +2506,7 @@ object SparkEntry {
       val books = pq816r(s, dir)
       val tbl = seedResIdxRo(s, dir)
       val probes = Similarity.ivfPqResidualProbes(q, cents, nprobe = 2)
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch")
-      Similarity.ivfPqTopKFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
-        probes, books, k = 10)
+      Similarity.ivfPqTopKFromIndex(storedCells(s, tbl, probes), probes, books, k = 10)
     }),
 
     // FILTERED ANN (round-20, r19 verdict item 3): the standard
@@ -2575,15 +2529,8 @@ object SparkEntry {
       val books = pq816r(s, dir)
       val tbl = seedResIdxLblRo(s, dir)
       val probes = Similarity.ivfPqResidualProbes(q, cents, nprobe = 2)
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch")
       Similarity.ivfPqResidualTopKRerankFromIndex(
-        sources.Storage.readTable(s, tbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*) &&
-            col("label") % 2 === 0),
+        storedCells(s, tbl, probes).filter(col("label") % 2 === 0),
         probes, q, e.filter(col("label") % 2 === 0), books, k = 10, r = 40)
     }),
 
@@ -2638,16 +2585,8 @@ object SparkEntry {
       val books = pq816(s, dir)
       val idxTbl = seedIvfPqIdxRo(s, dir)
       val probes = Similarity.ivfPqProbesAgg(q, cents, nprobe = 2)
-      // q154's probe-cell valve: bounded by queries×nprobe; isin →
-      // physical bucket pruning on the stored index
-      val maxProbeCells = 4096
-      val cells = probes.select("cell_id").distinct()
-        .limit(maxProbeCells + 1).collect().map(_.getInt(0)).sorted
-      require(cells.length <= maxProbeCells,
-        s"probe-cell set exceeds $maxProbeCells: shard the query batch")
       val sem = Similarity.ivfPqTopKRerankFromIndex(
-        sources.Storage.readTable(s, idxTbl)
-          .filter(col("cell_id").isin(cells.map(Integer.valueOf): _*)),
+        storedCells(s, idxTbl, probes),
         probes, e, books, k = 10, r = 40)
         .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
       Similarity.rrfFuse(Seq(lex, sem), k = 10)

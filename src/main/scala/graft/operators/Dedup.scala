@@ -1076,22 +1076,17 @@ object Dedup {
    * unprobed buckets are never opened), while a huge backfill batch
    * would touch every bucket anyway, so above `maxProbeKeys` the
    * (semantically no-op) prune is skipped, with a WARN
-   * ([[graft.sources.Storage.collectWithinCap]]), instead of growing the
+   * ([[graft.sources.Storage.pinAndPrune]]), instead of growing the
    * literal and the driver fetch.
    */
   def pruneIndexForBatch(index: DataFrame, batch: DataFrame, k: Int = 16,
       bands: Int = 4, shingleK: Int = 3, textCol: String = "text",
-      maxProbeKeys: Int = 4096): DataFrame = {
-    import graft.sources.Storage
-    val keys = batch.select(
-        explode(lshBandKeys(
+      maxProbeKeys: Int = 4096): DataFrame =
+    graft.sources.Storage.pinAndPrune[Long](
+      batch.select(explode(lshBandKeys(
           minhashSignature(col(textCol), k, shingleK), k, bands)).as("key"))
-      .distinct()
-    Storage.collectWithinCap(keys, maxProbeKeys, Storage.tableOf(index),
-        "distinct band keys")
-      .fold(index)(ks => index.filter(col("key").isin(
-        ks.map(r => java.lang.Long.valueOf(r.getLong(0))).toIndexedSeq: _*)))
-  }
+        .distinct(),
+      "key", index, "key", maxProbeKeys, "distinct band keys")._2
 
   /**
    * [[incrementalDupPairs]] with the corpus branch probing a pre-built

@@ -61,16 +61,13 @@ object Storage {
   private lazy val log = org.apache.logging.log4j.LogManager.getLogger("graft.sources.Storage")
 
   /**
-   * The probe valve: collect at most `cap` rows of `rows` to the driver.
-   * `rows` is coalesced to one partition under the limit, so the fetch is
-   * one pass, not Spark's incremental take rounds. More than `cap` rows
-   * trips the valve: it returns None and logs one WARN naming `table`, the
-   * count and the cap, and the caller reads `table` unpruned instead of
-   * growing an `isin` literal and a driver fetch. Pruning is an
-   * optimization, so a trip changes cost, never rows; the WARN is what
-   * makes a batch that widened to a full scan visible.
+   * The probe valve: collect at most `cap` rows of `rows` to the driver,
+   * in one pass (coalesced to one partition under the limit). More than
+   * `cap` rows trips it: None, and one WARN naming `table`, the count and
+   * the cap — the caller reads `table` unpruned instead of growing an
+   * `isin` literal and a driver fetch. A trip changes cost, never rows.
    */
-  private[graft] def collectWithinCap(rows: DataFrame, cap: Int, table: String,
+  private def collectWithinCap(rows: DataFrame, cap: Int, table: String,
       what: String): Option[Array[Row]] = {
     val got = rows.coalesce(1).limit(cap + 1).collect()
     if (got.length <= cap) Some(got)
@@ -81,9 +78,29 @@ object Storage {
     }
   }
 
+  /**
+   * The one probe-key prune path: collect `rows` within `cap`
+   * ([[collectWithinCap]]), hold them as a local relation, and prune
+   * `target` to the distinct `rowKey` values they carry (`Long` band/sign
+   * keys, `Int` cell ids) — an `isin` on `targetKey` that the table's
+   * bucket spec turns into physical bucket pruning. Returns `(pinned
+   * rows, pruned target)`; on a valve trip (WARN naming `target`'s
+   * table), `(rows, target)` unchanged.
+   */
+  private[graft] def pinAndPrune[K: Ordering](rows: DataFrame, rowKey: String,
+      target: DataFrame, targetKey: String, cap: Int,
+      what: String): (DataFrame, DataFrame) = {
+    import scala.jdk.CollectionConverters._
+    collectWithinCap(rows, cap, tableOf(target), what).fold((rows, target)) { got =>
+      val keys = got.toIndexedSeq.map(_.getAs[K](rowKey)).distinct.sorted
+      (rows.sparkSession.createDataFrame(got.toSeq.asJava, rows.schema),
+        target.filter(org.apache.spark.sql.functions.col(targetKey).isin(keys: _*)))
+    }
+  }
+
   /** The catalog table a relation reads (for valve messages), or a
     * placeholder for a relation that reads none. */
-  private[graft] def tableOf(df: DataFrame): String =
+  private def tableOf(df: DataFrame): String =
     df.queryExecution.analyzed.collectFirst {
       case r: org.apache.spark.sql.execution.datasources.LogicalRelation
           if r.catalogTable.isDefined => r.catalogTable.get.identifier.unquotedString

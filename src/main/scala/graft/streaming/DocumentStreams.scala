@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import java.util.concurrent.atomic.{AtomicLong, AtomicReference}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.operators.TextAnalysis
+import org.apache.spark.sql.streaming.StreamingQuery
+import graft.operators.{Dedup, Html, Similarity, TextAnalysis}
+import graft.sources.Storage
 
 /**
  * Streaming document-ingest cleaning — the LLM-pipeline counterpart of
@@ -43,30 +46,6 @@ object DocumentStreams {
   }
 
   /**
-   * Streaming ingest near-dup detection — the streaming form of
-   * [[graft.operators.Dedup.incrementalDupPairs]]'s corpus probe: each
-   * arriving document is checked against the EXISTING corpus via a
-   * stream-STATIC equi-join on MinHash-LSH band keys, with the exact
-   * shingle-Jaccard verify inline. Emits one `(batch_id, dup_id,
-   * jaccard)` row per detected duplication, in append mode.
-   *
-   * The plan is completely STATELESS — no watermark, no state store, no
-   * streaming aggregation: candidate de-duplication (a pair colliding in
-   * several bands) is handled by FIRST-SHARED-BAND emission instead of a
-   * stateful `dropDuplicates` — a band-b collision is emitted only when
-   * no earlier band b' < b also collides, which both sides can decide
-   * locally because each row carries its (tiny, `bands`-long) band-key
-   * array. This is the same trick the span overlap-join uses for blocked
-   * emission (plans/SpanJoinRewrite.scala), applied to LSH buckets.
-   *
-   * Scale shape: per micro-batch cost is the stream batch's band
-   * probe against the static side; persist the corpus index bucketed by
-   * (band, key) (sources/Storage) so the join prunes to matching
-   * buckets instead of re-scanning the corpus. State held between
-   * batches: zero. The same plan runs in batch (the declared query's
-   * gate) because every operator in it is streaming-stateless.
-   */
-  /**
    * Streaming ingest SEMANTIC near-dup detection — the embedding
    * analogue of [[nearDupAgainstCorpus]]: each arriving embedding probes
    * the EXISTING corpus's sign-LSH index (its own bucket plus every
@@ -91,7 +70,7 @@ object DocumentStreams {
       tau: Double = 0.3, nPlanes: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding"): DataFrame =
     semanticDupAgainstIndex(batch,
-      graft.operators.Dedup.signBucketIndex(corpus, nPlanes, idCol, vecCol),
+      Dedup.signBucketIndex(corpus, nPlanes, idCol, vecCol),
       corpus, tau, nPlanes, idCol, vecCol)
 
   /**
@@ -113,7 +92,6 @@ object DocumentStreams {
     * probe bucket (its own sign-LSH bucket and every single-bit flip). */
   private def signProbeRows(batch: DataFrame, nPlanes: Int, idCol: String,
       vecCol: String): DataFrame = {
-    import graft.operators.Dedup
     val vecD = col(vecCol).cast("array<double>")
     batch.select(col(idCol).as("batch_id"), vecD.as("v_b"),
         Dedup.signBucketHashed(vecD, nPlanes).as("bucket"))
@@ -133,105 +111,92 @@ object DocumentStreams {
       .filter(col("batch_id") =!= col("dup_id"))
       .join(corpus.select(col(idCol).as("dup_id"), col(vecCol).as("__vc0")),
         "dup_id")
-      .withColumn("cos", graft.operators.Dedup.halfUp4Signed(
+      .withColumn("cos", Dedup.halfUp4Signed(
         graft.tensor.cosine(col("v_b"), col("__vc0").cast("array<double>"))))
       .filter(col("cos") >= tau)
       .select("batch_id", "dup_id", "cos")
 
-  /** The driver-pinning step of both stored-index probes: collect `rows`,
-    * hold them as a local relation, and prune `target` to the distinct
-    * `rowKey` values they carry — an `isin` on `targetKey` that the
-    * target table's bucket spec turns into physical bucket pruning.
-    * Valve: above `cap` rows, `rows` stays lazy and `target` unpruned
-    * ([[graft.sources.Storage.collectWithinCap]] logs the trip). */
-  private def pinAndPrune(rows: DataFrame, rowKey: String, target: DataFrame,
-      targetKey: String, cap: Int, table: String,
-      what: String): (DataFrame, DataFrame) = {
-    import scala.jdk.CollectionConverters._
-    graft.sources.Storage.collectWithinCap(rows, cap, table, what)
-      .fold((rows, target)) { got =>
-        val keys = got.map(_.getAs[Long](rowKey)).distinct
-        (rows.sparkSession.createDataFrame(got.toSeq.asJava, rows.schema),
-          target.filter(col(targetKey).isin(
-            keys.map(java.lang.Long.valueOf).toIndexedSeq: _*)))
-      }
-  }
-
   /**
-   * The self-updating loop for EMBEDDINGS — [[ingestProbeThenUpdate]]'s
-   * semantic twin: probe the stored [[graft.operators.Dedup.signBucketIndex]]
-   * (pruned to the batch's probe buckets — own bucket + single-bit
-   * flips — pushed as an isin literal the pb-bucketed table turns into
-   * physical bucket pruning; soft-valved), emit `(batch_id, dup_id,
-   * cos)` pairs, then absorb the batch: its bucket rows append under
-   * the index's spec, its `(id, vector)` rows under the corpus's. The
-   * pairs are materialized before the append, so the returned relation
-   * can never see the batch's own index rows.
+   * The batch form of the semantic self-updating loop —
+   * [[ingestProbeThenUpdate]]'s embedding twin: [[probeStoredSemanticIndex]],
+   * then [[updateStoredSemanticIndex]], with the pairs materialized in
+   * between ([[pinThenAbsorb]]).
    */
   def semanticIngestProbeThenUpdate(batch: DataFrame, indexTable: String,
       corpusTable: String, tau: Double = 0.3, nPlanes: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       indexBuckets: Int = 8, corpusBuckets: Int = 8,
       maxProbeBuckets: Int = 4096,
-      tombstoneTable: Option[String] = None): DataFrame = {
-    val pairs = probeStoredSemanticIndex(batch, indexTable, corpusTable,
-      tau, nPlanes, idCol, vecCol, maxProbeBuckets, tombstoneTable)
-      .localCheckpoint(true)
-    updateStoredSemanticIndex(batch, indexTable, corpusTable, nPlanes,
-      idCol, vecCol, indexBuckets, corpusBuckets)
-    pairs
-  }
+      tombstoneTable: Option[String] = None): DataFrame =
+    pinThenAbsorb(
+      probeStoredSemanticIndex(batch, indexTable, corpusTable, tau, nPlanes,
+        idCol, vecCol, maxProbeBuckets, tombstoneTable),
+      batch, signIndex(indexTable, corpusTable, nPlanes, idCol, vecCol,
+        indexBuckets, corpusBuckets))
 
   /** The read half of the semantic self-updating loop: probe the stored
     * [[graft.operators.Dedup.signBucketIndex]] table (pruned to the
-    * batch's probe buckets; tombstones anti-joined) and cosine-verify the
-    * candidates against the stored vector corpus.
+    * batch's probe buckets — own bucket + single-bit flips; tombstones
+    * anti-joined) and cosine-verify the candidates against the stored
+    * vector corpus.
     *
     * Job budget: the batch's probe rows are computed once, in one job, and
-    * held on the driver as a local relation (soft valve: above
-    * `maxProbeBuckets` rows they stay lazy and the index is read
-    * unpruned, with a WARN); the `pb` keys of the pruned scan come from
-    * those rows. The returned plan stays LAZY: sign-LSH candidate sets
-    * are large, so they are verified where they are joined, by whatever
-    * action the caller runs. */
+    * pinned with the index's `pb` keys ([[graft.sources.Storage.pinAndPrune]],
+    * soft valve `maxProbeBuckets`). The returned plan stays LAZY: sign-LSH
+    * candidate sets are large, so they are verified where they are
+    * joined, by whatever action the caller runs. */
   def probeStoredSemanticIndex(batch: DataFrame, indexTable: String,
       corpusTable: String, tau: Double = 0.3, nPlanes: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding",
       maxProbeBuckets: Int = 4096,
       tombstoneTable: Option[String] = None): DataFrame = {
-    import graft.sources.Storage
     val spark = batch.sparkSession
-    val (probe, index) = pinAndPrune(
+    val (probe, index) = Storage.pinAndPrune[Long](
       signProbeRows(batch, nPlanes, idCol, vecCol), "pb",
-      Storage.readTable(spark, indexTable), "pb", maxProbeBuckets, indexTable,
-      "probe rows")
-    cosineVerify(probe, dropTombstoned(index, spark, tombstoneTable),
+      Storage.readTable(spark, indexTable), "pb", maxProbeBuckets, "probe rows")
+    cosineVerify(probe, dropTombstoned(index, spark, tombstoneTable, idCol),
       Storage.readTable(spark, corpusTable), tau, idCol, vecCol)
   }
 
   /** The write half: absorb the batch into the stored sign-LSH index +
-    * vector corpus. Corpus FIRST (same failure-atomicity argument as
-    * [[updateStoredIndex]]: a corpus-only half-absorb is inert; an
-    * index-only one silently drops candidates at the verify join). */
+    * vector corpus ([[StoredIndex.absorb]]: corpus first). */
   def updateStoredSemanticIndex(batch: DataFrame, indexTable: String,
       corpusTable: String, nPlanes: Int = 8, idCol: String = "vec_id",
       vecCol: String = "embedding", indexBuckets: Int = 8,
-      corpusBuckets: Int = 8): Unit = {
-    import graft.operators.Dedup
-    import graft.sources.Storage
-    Storage.appendBucketed(batch.select(col(idCol), col(vecCol)),
-      corpusTable, bucketCol = idCol, buckets = corpusBuckets)
-    Storage.appendBucketed(Dedup.signBucketIndex(batch, nPlanes, idCol, vecCol),
-      indexTable, bucketCol = "pb", buckets = indexBuckets)
-  }
+      corpusBuckets: Int = 8): Unit =
+    signIndex(indexTable, corpusTable, nPlanes, idCol, vecCol, indexBuckets,
+      corpusBuckets).absorb(batch)
 
+  /**
+   * Streaming ingest near-dup detection — the streaming form of
+   * [[graft.operators.Dedup.incrementalDupPairs]]'s corpus probe: each
+   * arriving document is checked against the EXISTING corpus via a
+   * stream-STATIC equi-join on MinHash-LSH band keys, with the exact
+   * shingle-Jaccard verify inline. Emits one `(batch_id, dup_id,
+   * jaccard)` row per detected duplication, in append mode.
+   *
+   * The plan is completely STATELESS — no watermark, no state store, no
+   * streaming aggregation: candidate de-duplication (a pair colliding in
+   * several bands) is handled by FIRST-SHARED-BAND emission instead of a
+   * stateful `dropDuplicates` — a band-b collision is emitted only when
+   * no earlier band b' < b also collides, which both sides can decide
+   * locally because each row carries its (tiny, `bands`-long) band-key
+   * array. This is the same trick the span overlap-join uses for blocked
+   * emission (plans/SpanJoinRewrite.scala), applied to LSH buckets.
+   *
+   * Scale shape: per micro-batch cost is the stream batch's band
+   * probe against the static side; persist the corpus index bucketed by
+   * (band, key) (sources/Storage) so the join prunes to matching
+   * buckets instead of re-scanning the corpus. State held between
+   * batches: zero. The same plan runs in batch (the declared query's
+   * gate) because every operator in it is streaming-stateless.
+   */
   def nearDupAgainstCorpus(docs: DataFrame, corpus: DataFrame,
       threshold: Double = 0.8, k: Int = 16, bands: Int = 4,
       shingleK: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame =
     nearDupAgainstIndex(docs,
-      graft.operators.Dedup.lshBandIndex(corpus, k, bands, shingleK,
-        idCol, textCol),
+      Dedup.lshBandIndex(corpus, k, bands, shingleK, idCol, textCol),
       corpus, threshold, k, bands, shingleK, idCol, textCol)
 
   /**
@@ -256,8 +221,7 @@ object DocumentStreams {
     * (document, band), carrying the document's shingle set and band-key
     * array — micro-batches are small, so width costs nothing here. */
   private def bandProbeRows(docs: DataFrame, k: Int, bands: Int,
-      shingleK: Int, idCol: String, textCol: String): DataFrame = {
-    import graft.operators.Dedup
+      shingleK: Int, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol).as("batch_id"),
         TextAnalysis.shingleHashes(col(textCol), shingleK).as("set_b"),
         Dedup.lshBandKeys(
@@ -265,7 +229,6 @@ object DocumentStreams {
           .as("kb"))
       .select(col("batch_id"), col("set_b"), col("kb"),
         posexplode(col("kb")).as(Seq("band", "key")))
-  }
 
   /** Probe rows ⋈ band index on (band, key), each (batch, corpus) pair
     * emitted once at its first shared band: `(batch_id, set_b, dup_id)`. */
@@ -314,36 +277,52 @@ object DocumentStreams {
       .filter(col("jaccard") >= threshold)
       .select("batch_id", "dup_id", "jaccard")
 
+  /** Crawl text extraction: raw HTML pages `(pageIdCol, htmlCol)` as
+    * `(idCol, textCol)` documents ([[graft.operators.Html.text]] —
+    * comment/script/style removal, block segmentation, entity decode),
+    * a STATELESS codegen projection. */
+  private def extractPages(pages: DataFrame, pageIdCol: String,
+      htmlCol: String, idCol: String, textCol: String): DataFrame =
+    pages.select(col(pageIdCol).as(idCol), Html.text(col(htmlCol)).as(textCol))
+
   /**
    * Streaming CRAWL ingest — the 24/7 front door of a crawl pipeline:
    * raw HTML pages arrive as a stream, text extraction
-   * ([[graft.operators.Html.text]] — comment/script/style removal,
-   * block segmentation, entity decode) runs as a STATELESS codegen
-   * projection on each micro-batch, and the extracted text probes the
-   * EXISTING corpus's MinHash-LSH band index via
-   * [[nearDupAgainstCorpus]]'s stream-static join. Emits one
-   * `(batch_id, dup_id, jaccard)` row per detected re-crawl /
-   * already-have-it page, in append mode.
+   * ([[extractPages]]) runs as a STATELESS codegen projection on each
+   * micro-batch, and the extracted text probes the EXISTING corpus's
+   * MinHash-LSH band index via [[nearDupAgainstCorpus]]'s stream-static
+   * join. Emits one `(batch_id, dup_id, jaccard)` row per detected
+   * re-crawl / already-have-it page, in append mode.
    *
-   * Everything in the plan is streaming-stateless (no watermark, no
-   * state store): extraction is a projection, candidate emission is
-   * first-shared-band, the verify is an inline join. State between
-   * batches: zero — the corpus index is the static side: either re-read
-   * ([[nearDupAgainstCorpus]], this form) or, in production, the
-   * PERSISTED [[graft.operators.Dedup.lshBandIndex]] table bucketed by
-   * band key ([[crawlNearDupAgainstIndex]]) so each micro-batch reads
-   * the stored index instead of re-deriving every corpus signature.
+   * Everything in the plan is streaming-stateless: extraction is a
+   * projection, candidate emission is first-shared-band, the verify is
+   * an inline join. This form derives the band index from `corpus`; in
+   * production the PERSISTED index is the static side
+   * ([[crawlNearDupAgainstIndex]]).
    */
   def crawlNearDupAgainstCorpus(pages: DataFrame, corpus: DataFrame,
       threshold: Double = 0.8, k: Int = 16, bands: Int = 4,
       shingleK: Int = 3, pageIdCol: String = "page_id",
       htmlCol: String = "html", corpusIdCol: String = "doc_id",
-      corpusTextCol: String = "text"): DataFrame = {
-    val extracted = pages.select(col(pageIdCol).as(corpusIdCol),
-      graft.operators.Html.text(col(htmlCol)).as(corpusTextCol))
-    nearDupAgainstCorpus(extracted, corpus, threshold, k, bands, shingleK,
-      idCol = corpusIdCol, textCol = corpusTextCol)
-  }
+      corpusTextCol: String = "text"): DataFrame =
+    crawlNearDupAgainstIndex(pages,
+      Dedup.lshBandIndex(corpus, k, bands, shingleK, corpusIdCol, corpusTextCol),
+      corpus, threshold, k, bands, shingleK, pageIdCol, htmlCol, corpusIdCol,
+      corpusTextCol)
+
+  /** [[crawlNearDupAgainstCorpus]] probing a pre-built (typically
+    * persisted, bucketed-by-`key`) band-index relation — the 24/7 crawl
+    * operating form: the static side of the stream-static join is a
+    * stored-table read, not a per-micro-batch corpus recompute. */
+  def crawlNearDupAgainstIndex(pages: DataFrame, index: DataFrame,
+      corpus: DataFrame, threshold: Double = 0.8, k: Int = 16,
+      bands: Int = 4, shingleK: Int = 3, pageIdCol: String = "page_id",
+      htmlCol: String = "html", corpusIdCol: String = "doc_id",
+      corpusTextCol: String = "text"): DataFrame =
+    nearDupAgainstIndex(
+      extractPages(pages, pageIdCol, htmlCol, corpusIdCol, corpusTextCol),
+      index, corpus, threshold, k, bands, shingleK, idCol = corpusIdCol,
+      textCol = corpusTextCol)
 
   /**
    * Record TAKEDOWNS: append the single-column `ids` relation to the
@@ -358,14 +337,10 @@ object DocumentStreams {
    */
   def recordDeletions(ids: DataFrame, tombstoneTable: String, path: String,
       idCol: String = "doc_id", buckets: Int = 8): Unit = {
-    import graft.sources.Storage
-    val spark = ids.sparkSession
-    if (spark.catalog.tableExists(tombstoneTable))
-      Storage.appendBucketed(ids.select(col(idCol)), tombstoneTable,
-        bucketCol = idCol, buckets = buckets)
-    else
-      Storage.writeBucketed(ids.select(col(idCol)), tombstoneTable, path,
-        bucketCol = idCol, buckets = buckets)
+    val rows = ids.select(col(idCol))
+    if (ids.sparkSession.catalog.tableExists(tombstoneTable))
+      Storage.appendBucketed(rows, tombstoneTable, bucketCol = idCol, buckets = buckets)
+    else Storage.writeBucketed(rows, tombstoneTable, path, bucketCol = idCol, buckets = buckets)
   }
 
   /**
@@ -379,67 +354,58 @@ object DocumentStreams {
    * anti-join grows with it; with it the ledger is O(pending takedowns
    * since the last compaction), bounded for any uptime.
    *
-   * Race-safety with concurrent external takedowns (a compliance
-   * process records deletions by definition outside the loop): the
-   * ledger is SNAPSHOTTED once (eager localCheckpoint) before any
-   * rewrite — the same snapshot both drives every table's `dropIds` and
-   * bounds the ledger prune's anti-join, so an id recorded DURING the
-   * cycle is neither half-applied nor pruned; it survives to the next
-   * cycle's snapshot. The ledger prune reuses [[graft.sources.Storage
-   * .rewriteInPlace]]'s crash-safe swap (a crash re-prunes ids that are
-   * already gone from the tables — idempotent).
+   * Race-safety with concurrent external takedowns: the ledger's
+   * `tombstoneIdCol` (selected by name, so a wider ledger works) is
+   * SNAPSHOTTED once (eager localCheckpoint) before any rewrite — the
+   * same snapshot drives every table's `dropIds` and bounds the ledger
+   * prune, so an id recorded DURING the cycle is neither half-applied
+   * nor pruned; it survives to the next cycle. The ledger prune reuses
+   * [[graft.sources.Storage.rewriteInPlace]]'s crash-safe swap (a crash
+   * re-prunes ids already gone from the tables — idempotent).
    */
-  def runMaintenance(spark: org.apache.spark.sql.SparkSession,
+  def runMaintenance(spark: SparkSession,
       tombstoneTable: Option[String],
       tables: Seq[(String, String, Int, String)],
       tombstoneIdCol: String = "doc_id", tombstoneBuckets: Int = 8): Unit = {
-    import graft.sources.Storage
     val ledger = tombstoneTable.filter(spark.catalog.tableExists)
     val snap = ledger.map { t =>
       spark.catalog.refreshTable(t)
-      Storage.readTable(spark, t).localCheckpoint(true)
+      Storage.readTable(spark, t).select(col(tombstoneIdCol)).localCheckpoint(true)
     }
     tables.foreach { case (tbl, bucketCol, buckets, dropCol) =>
       Storage.compactBuckets(spark, tbl, bucketCol, buckets,
         dropIds = snap.map((_, dropCol)))
     }
     ledger.zip(snap).foreach { case (t, sn) =>
-      Storage.rewriteInPlace(spark, t, tombstoneIdCol, tombstoneBuckets) {
-        live =>
-          // id column selected EXPLICITLY (not positional toDF) — same
-          // wider-ledger contract as Storage.snapshotAsOf (ADVICE r18)
-          live.join(broadcast(sn.select(
-              col(tombstoneIdCol).as("__applied_id"))),
-            col(tombstoneIdCol) === col("__applied_id"), "left_anti")
+      Storage.rewriteInPlace(spark, t, tombstoneIdCol, tombstoneBuckets) { live =>
+        live.join(broadcast(sn.toDF("__applied_id")),
+          col(tombstoneIdCol) === col("__applied_id"), "left_anti")
       }
     }
   }
 
-  /** Anti-join an index/candidate relation's `dup_id` against the stored
-    * tombstone table (no-op when none is configured). Applied to the
+  /** Anti-join a relation's `relCol` against the tombstone ledger's
+    * `ledgerIdCol` (no-op when none is configured). Applied to the
     * (already bucket-pruned, narrow) index rows BEFORE the verify join,
-    * so a tombstoned candidate never costs a corpus text read — and the
-    * candidate-id corpus prune then excludes it from the isin literal
-    * too. The tombstone side broadcasts: takedown lists are tiny
-    * relative to any corpus worth indexing.
+    * so a tombstoned candidate never costs a corpus read; the ledger side
+    * broadcasts (takedown lists are tiny). The ledger's id column is
+    * selected BY NAME: a ledger an external process wrote with more
+    * columns (e.g. a takedown `reason`) works unchanged, the contract of
+    * [[graft.sources.Storage.snapshotAsOf]] and [[runMaintenance]] too.
     *
-    * The table is refreshed before every read: takedowns are recorded
-    * by EXTERNAL sessions by definition (a compliance process, not the
-    * loop), and a stale cached file listing would silently serve
-    * pre-deletion candidates — e.g. a 24/7 crawl's cloned streaming
-    * session would otherwise pin the ledger's state at stream start
-    * forever. Metadata-only, O(1) vs any probe.
-    *
-    * A configured-but-MISSING table reads as an empty ledger: the ledger
-    * is created by the first takedown ([[recordDeletions]]), so a loop
-    * that has never seen one skips the read entirely instead of paying
-    * an empty table's write + scan up front. */
-  private def dropTombstoned(rel: DataFrame, spark: org.apache.spark.sql.SparkSession,
-      tombstoneTable: Option[String], idCol: String = "dup_id"): DataFrame =
+    * The table is refreshed before every read: takedowns are recorded by
+    * EXTERNAL sessions, and a stale cached file listing (e.g. a streaming
+    * loop's cloned session, pinned at stream start) would silently serve
+    * pre-deletion candidates. A configured-but-MISSING table reads as an
+    * empty ledger: the first takedown ([[recordDeletions]]) creates it. */
+  private def dropTombstoned(rel: DataFrame, spark: SparkSession,
+      tombstoneTable: Option[String], ledgerIdCol: String,
+      relCol: String = "dup_id"): DataFrame =
     tombstoneTable.filter(spark.catalog.tableExists).fold(rel) { t =>
       spark.catalog.refreshTable(t)
-      rel.join(broadcast(graft.sources.Storage.readTable(spark, t)
-        .toDF("__ts_id")), col(idCol) === col("__ts_id"), "left_anti")
+      rel.join(broadcast(Storage.readTable(spark, t)
+          .select(col(ledgerIdCol).as("__ts_id"))),
+        col(relCol) === col("__ts_id"), "left_anti")
     }
 
   /**
@@ -453,15 +419,13 @@ object DocumentStreams {
    * anywhere.
    *
    * Job budget: the batch's probe rows `(batch_id, set_b, kb, band, key)`
-   * are computed once, in one job, and held on the driver as a local
-   * relation; the index's `isin` keys come from them (soft valve: above
-   * `maxProbeKeys` rows they stay lazy and the index is read unpruned,
-   * with a WARN). With `pruneCorpusByCandidates` the bucket-pruned,
-   * tombstone-filtered index is scanned ONCE, by the job that collects
-   * the candidate `(batch_id, set_b, dup_id)` rows; the returned plan
-   * verifies those local rows against the candidate-pruned corpus and
-   * never re-reads the index. Without it the returned plan stays lazy
-   * over the pruned index.
+   * are computed once, in one job, and pinned with the index's `isin`
+   * keys ([[graft.sources.Storage.pinAndPrune]], soft valve
+   * `maxProbeKeys`). With `pruneCorpusByCandidates` the pruned,
+   * tombstone-filtered index is scanned ONCE, by the job that pins the
+   * candidate `(batch_id, set_b, dup_id)` rows, and the returned plan
+   * verifies those against the candidate-pruned corpus. Without it the
+   * returned plan stays lazy over the pruned index.
    */
   def probeStoredIndex(batch: DataFrame, indexTable: String,
       corpusTable: String, threshold: Double = 0.8, k: Int = 16,
@@ -470,79 +434,49 @@ object DocumentStreams {
       pruneCorpusByCandidates: Boolean = false,
       maxCandidateIds: Int = 4096,
       tombstoneTable: Option[String] = None): DataFrame = {
-    import graft.sources.Storage
     val spark = batch.sparkSession
-    val (probe, index) = pinAndPrune(
+    val (probe, index) = Storage.pinAndPrune[Long](
       bandProbeRows(batch, k, bands, shingleK, idCol, textCol), "key",
-      Storage.readTable(spark, indexTable), "key", maxProbeKeys, indexTable,
-      "probe rows")
+      Storage.readTable(spark, indexTable), "key", maxProbeKeys, "probe rows")
     val candidates = bandCandidates(probe,
-      dropTombstoned(index, spark, tombstoneTable))
-    // The verify side reads the stored corpus for the candidates' exact
-    // shingle sets. With `pruneCorpusByCandidates` the candidate rows are
-    // collected (few by construction) and their ids reach the corpus
-    // scan as an `isin` literal, which the doc_id-bucketed corpus table
-    // turns into physical BUCKET PRUNING: per batch, only the buckets
-    // holding candidate documents are opened instead of the whole stored
-    // corpus. At 100 TB the corpus text scan is the verify's dominant
-    // cost, so this is the read-side lever; semantically a no-op (rows
-    // outside candidate ids can never survive the verify equi-join).
-    // Soft valve: above `maxCandidateIds` rows the candidates stay lazy
-    // and the corpus unpruned — a batch with that many collisions
-    // touches most buckets anyway.
+      dropTombstoned(index, spark, tombstoneTable, idCol))
+    // With `pruneCorpusByCandidates` the candidate ids bucket-prune the
+    // corpus scan too: only the buckets holding candidate documents are
+    // opened (at 100 TB the corpus text scan is the verify's dominant
+    // cost; semantically a no-op, since rows outside candidate ids can
+    // never survive the verify equi-join). Above `maxCandidateIds` rows
+    // the valve trips — a batch with that many collisions touches most
+    // buckets anyway.
     val corpus0 = Storage.readTable(spark, corpusTable)
     val (verified, corpus) =
       if (!pruneCorpusByCandidates) (candidates, corpus0)
-      else pinAndPrune(candidates, "dup_id", corpus0, idCol, maxCandidateIds,
-        corpusTable, "candidate rows")
+      else Storage.pinAndPrune[Long](candidates, "dup_id", corpus0, idCol,
+        maxCandidateIds, "candidate rows")
     jaccardVerify(verified, corpus, threshold, shingleK, idCol, textCol)
   }
 
   /**
    * Absorb one ingest batch INTO the stored corpus — the write half of
-   * the self-updating loop: the batch's own band rows append bucketed
-   * under the index table's spec ([[graft.sources.Storage.appendBucketed]])
-   * and its `(idCol, textCol)` rows under the corpus table's, so the
-   * NEXT batch's probe sees this batch as corpus. Per-batch cost ∝
-   * batch size (the existing index files are never rewritten); probes
-   * keep bucket-pruning across append generations (StorageSpec).
-   *
-   * Append ORDER matters for failure atomicity: the corpus text rows
-   * land FIRST. The two appends are not a transaction; if the second
-   * fails, a corpus-first half-absorbed batch is inert (extra corpus
-   * rows are only ever read through a candidate's `dup_id` join, and
-   * with no index rows the batch can never be a candidate — it reads as
-   * "not yet absorbed"). The reverse order would leave index rows whose
-   * corpus text is missing, and the verify join would silently DROP
-   * those candidates — false-negative duplicates forever.
+   * the self-updating loop: its `(idCol, textCol)` rows append bucketed
+   * under the corpus table's spec, then its own band rows under the
+   * index table's ([[StoredIndex.absorb]]), so the NEXT batch's probe
+   * sees this batch as corpus. Per-batch cost ∝ batch size (the existing
+   * index files are never rewritten); probes keep bucket-pruning across
+   * append generations (StorageSpec).
    */
   def updateStoredIndex(batch: DataFrame, indexTable: String,
       corpusTable: String, k: Int = 16, bands: Int = 4, shingleK: Int = 3,
       idCol: String = "doc_id", textCol: String = "text",
-      indexBuckets: Int = 8, corpusBuckets: Int = 8): Unit = {
-    import graft.operators.Dedup
-    import graft.sources.Storage
-    Storage.appendBucketed(batch.select(col(idCol), col(textCol)),
-      corpusTable, bucketCol = idCol, buckets = corpusBuckets)
-    Storage.appendBucketed(
-      Dedup.lshBandIndex(batch, k, bands, shingleK, idCol, textCol),
-      indexTable, bucketCol = "key", buckets = indexBuckets)
-  }
+      indexBuckets: Int = 8, corpusBuckets: Int = 8): Unit =
+    bandIndex(indexTable, corpusTable, k, bands, shingleK, idCol, textCol,
+      indexBuckets, corpusBuckets).absorb(batch)
 
   /**
    * One step of the SELF-UPDATING ingest loop — probe, then absorb:
    * emit the batch's dup pairs against everything ingested so far, then
    * fold the batch into the stored index + corpus so the next batch
-   * probes it too. This is the 24/7 operating shape q159 (static probe)
-   * and q162 (append) each carry half of.
-   *
-   * The emitted pairs are MATERIALIZED (eager `localCheckpoint`) before
-   * the append — the probe plan is lazy, so without the barrier a
-   * consumer evaluating the returned relation after the append would
-   * read the batch's own index rows and report every document as its
-   * own duplicate. (The streaming form gets the same ordering for free:
-   * [[crawlSelfUpdating]] writes the pairs to the sink before
-   * appending.)
+   * probes it too ([[pinThenAbsorb]]). This is the 24/7 operating shape
+   * q159 (static probe) and q162 (append) each carry half of.
    *
    * Semantics: batch-vs-ingested pairs only (intra-batch duplicates are
    * [[graft.operators.Dedup.minhashDupPairs]] on the batch, exactly as
@@ -556,50 +490,172 @@ object DocumentStreams {
       textCol: String = "text", indexBuckets: Int = 8,
       corpusBuckets: Int = 8, maxProbeKeys: Int = 4096,
       pruneCorpusByCandidates: Boolean = false,
-      tombstoneTable: Option[String] = None): DataFrame = {
-    val pairs = probeStoredIndex(batch, indexTable, corpusTable, threshold,
-      k, bands, shingleK, idCol, textCol, maxProbeKeys,
-      pruneCorpusByCandidates, tombstoneTable = tombstoneTable)
-      .localCheckpoint(true)
-    updateStoredIndex(batch, indexTable, corpusTable, k, bands, shingleK,
-      idCol, textCol, indexBuckets, corpusBuckets)
-    pairs
+      tombstoneTable: Option[String] = None): DataFrame =
+    pinThenAbsorb(
+      probeStoredIndex(batch, indexTable, corpusTable, threshold, k, bands,
+        shingleK, idCol, textCol, maxProbeKeys, pruneCorpusByCandidates,
+        tombstoneTable = tombstoneTable),
+      batch, bandIndex(indexTable, corpusTable, k, bands, shingleK, idCol,
+        textCol, indexBuckets, corpusBuckets))
+
+  /** One stored-index family as the self-updating loops see it: the index
+    * table (its bucket column and count, and the column maintenance
+    * drops tombstoned ids by), the corpus table (id and payload columns,
+    * bucketed by the id), and how a batch becomes index rows. */
+  private final case class StoredIndex(indexTable: String,
+      indexBucketCol: String, indexBuckets: Int, indexDropCol: String,
+      corpusTable: String, idCol: String, payloadCol: String,
+      corpusBuckets: Int, indexRows: DataFrame => DataFrame) {
+
+    /** Absorb a batch: its `(idCol, payloadCol)` rows append under the
+      * corpus table's spec FIRST, then its index rows under the index's
+      * (why corpus first: [[selfUpdating]]). */
+    def absorb(batch: DataFrame): Unit = {
+      Storage.appendBucketed(batch.select(col(idCol), col(payloadCol)),
+        corpusTable, bucketCol = idCol, buckets = corpusBuckets)
+      Storage.appendBucketed(indexRows(batch), indexTable,
+        bucketCol = indexBucketCol, buckets = indexBuckets)
+    }
+
+    /** One [[runMaintenance]] cycle over the index and corpus tables. */
+    def maintain(spark: SparkSession, tombstoneTable: Option[String]): Unit =
+      runMaintenance(spark, tombstoneTable, Seq(
+        (indexTable, indexBucketCol, indexBuckets, indexDropCol),
+        (corpusTable, idCol, corpusBuckets, idCol)), tombstoneIdCol = idCol)
+  }
+
+  /** The MinHash band-index family (index bucketed by band `key`). */
+  private def bandIndex(indexTable: String, corpusTable: String, k: Int,
+      bands: Int, shingleK: Int, idCol: String, textCol: String,
+      indexBuckets: Int, corpusBuckets: Int): StoredIndex =
+    StoredIndex(indexTable, "key", indexBuckets, "dup_id", corpusTable, idCol,
+      textCol, corpusBuckets,
+      Dedup.lshBandIndex(_, k, bands, shingleK, idCol, textCol))
+
+  /** The sign-LSH family (index bucketed by probe bucket `pb`). */
+  private def signIndex(indexTable: String, corpusTable: String,
+      nPlanes: Int, idCol: String, vecCol: String, indexBuckets: Int,
+      corpusBuckets: Int): StoredIndex =
+    StoredIndex(indexTable, "pb", indexBuckets, "dup_id", corpusTable, idCol,
+      vecCol, corpusBuckets, Dedup.signBucketIndex(_, nPlanes, idCol, vecCol))
+
+  /** The batch forms' ordering barrier: the probe plan is lazy, so its
+    * pairs are MATERIALIZED (eager `localCheckpoint`) before the batch is
+    * absorbed — without it a consumer evaluating the returned relation
+    * after the append would read the batch's own index rows and report
+    * every document as its own duplicate. (The streaming loops get the
+    * same ordering from [[selfUpdating]], which writes the pairs before
+    * absorbing.) */
+  private def pinThenAbsorb(pairs: DataFrame, batch: DataFrame,
+      family: StoredIndex): DataFrame = {
+    val pinned = pairs.localCheckpoint(true)
+    family.absorb(batch)
+    pinned
+  }
+
+  /**
+   * The one 24/7 self-updating loop skeleton every stored-index family
+   * runs: per micro-batch of `input`, (1) skip the batch if the absorb
+   * marker says it was already absorbed, (2) `probe` it against the
+   * stored tables and append the pairs to `pairsDir`, (3) absorb it
+   * ([[StoredIndex.absorb]]), (4) `afterAbsorb`, (5) write the marker,
+   * and (6) every `maintainEvery` absorbed batches (0 = never) run
+   * [[runMaintenance]] over both tables, then `afterMaintenance`. The
+   * probe plan is stateless (no watermark, no state store): all
+   * cross-batch memory lives in the stored tables. Returns the started
+   * query; stop it to end the loop.
+   *
+   * Pairs before absorb: `foreachBatch` is serial per query and writes
+   * the pairs first, so a batch never sees its own index rows, and no
+   * probe ever races a maintenance swap.
+   *
+   * Corpus first: the two appends are not a transaction. A corpus-only
+   * half-absorbed batch is inert (corpus rows are only read through a
+   * candidate's id join, and with no index rows the batch is never a
+   * candidate — it reads as "not yet absorbed"); the reverse order would
+   * leave index rows whose payload is missing, and the verify join would
+   * silently DROP those candidates forever.
+   *
+   * Replay idempotence: `foreachBatch` is AT-LEAST-ONCE (a batch whose
+   * epoch commit was lost replays on restart with the same batchId), and
+   * a naive replay would permanently duplicate the batch's index rows.
+   * The loop records the last fully-absorbed batchId in a marker file
+   * under `checkpointDir` and SKIPS replays of completed batches. The
+   * remaining window: a crash inside a batch (after some writes, before
+   * the marker) replays that ONE batch, so its pairs — and, if the crash
+   * split the two appends, its rows — can land twice.
+   *
+   * Maintenance cadence: each cycle compacts both tables back to one
+   * file per bucket (probe cost stays bounded by bucket count, not
+   * uptime) and PHYSICALLY drops tombstoned rows, which probes already
+   * hide; the applied ids leave the ledger, so it stays O(pending).
+   */
+  private def selfUpdating(input: DataFrame, family: StoredIndex,
+      pairsDir: String, checkpointDir: String, maintainEvery: Int,
+      tombstoneTable: Option[String])(probe: DataFrame => DataFrame,
+      afterAbsorb: (DataFrame, Long) => Unit = (_, _) => (),
+      afterMaintenance: SparkSession => Unit = _ => ()): StreamingQuery = {
+    val absorbed = new AtomicLong(0L)
+    input.writeStream
+      .option("checkpointLocation", checkpointDir)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        val spark = batch.sparkSession
+        if (batchId > readAbsorbedMarker(spark, checkpointDir)) {
+          probe(batch).write.mode("append").parquet(pairsDir)
+          family.absorb(batch)
+          afterAbsorb(batch, batchId)
+          writeAbsorbedMarker(spark, checkpointDir, batchId)
+          if (maintainEvery > 0 && absorbed.incrementAndGet() % maintainEvery == 0) {
+            family.maintain(spark, tombstoneTable)
+            afterMaintenance(spark)
+          }
+        }
+      }
+      .start()
+  }
+
+  /** The absorb marker's path and file system (Hadoop FS, so the
+    * checkpoint can live on hdfs:// or s3a:// like the tables). */
+  private def absorbedMarker(spark: SparkSession, checkpointDir: String) = {
+    val marker = new org.apache.hadoop.fs.Path(checkpointDir,
+      "graft_absorbed_batch")
+    (marker, marker.getFileSystem(spark.sessionState.newHadoopConf()))
+  }
+
+  /** Last-absorbed-batch marker: written AFTER a batch's pairs + absorb
+    * complete; a replayed batchId at-or-below it is skipped. Only a
+    * missing marker means "nothing absorbed yet"; an unreadable or garbled
+    * one fails the batch, since reading it as -1 would re-absorb. */
+  private def readAbsorbedMarker(spark: SparkSession,
+      checkpointDir: String): Long = {
+    val (marker, fs) = absorbedMarker(spark, checkpointDir)
+    if (!fs.exists(marker)) -1L
+    else scala.util.Using.resource(fs.open(marker))(
+      scala.io.Source.fromInputStream(_, "UTF-8").mkString.trim.toLong)
+  }
+
+  private def writeAbsorbedMarker(spark: SparkSession,
+      checkpointDir: String, batchId: Long): Unit = {
+    val (marker, fs) = absorbedMarker(spark, checkpointDir)
+    scala.util.Using.resource(fs.create(marker, true))(
+      _.write(batchId.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
   }
 
   /**
    * The streaming 24/7 crawl loop, CLOSED: each micro-batch of raw HTML
-   * pages is extracted ([[graft.operators.Html.text]]), probes the
-   * stored band index (bucket-pruned), lands its dup pairs in
-   * `pairsDir`, and is then absorbed into the stored index + corpus —
-   * so a page recrawled in a LATER micro-batch is detected against this
-   * one. `foreachBatch` gives the ordering guarantee the loop needs
-   * (pairs written before the index absorbs the batch); the probe
-   * itself is the stateless q156/q159 plan, so there is still no
-   * watermark and no state store — all cross-batch memory lives in the
-   * two stored tables.
-   *
-   * Replay idempotence: `foreachBatch` is AT-LEAST-ONCE (a batch whose
-   * epoch commit was lost replays on restart with the same batchId),
-   * and neither the pairs append nor the table absorb is naturally
-   * idempotent — a naive replay would permanently duplicate the batch's
-   * index rows, doubling every future probe's pairs for those docs. The
-   * loop therefore records the last fully-absorbed batchId in a marker
-   * file under `checkpointDir` and SKIPS replays of completed batches.
-   * Remaining window, documented honestly: a crash inside a batch
-   * (after some writes, before the marker) replays that ONE batch, so
-   * its pairs — and, if the crash split the two appends, its corpus/
-   * index rows — can land twice; bounded to a single batch per crash,
-   * vs. unbounded duplication without the marker. (The appends
-   * themselves order corpus-first so a split absorb degrades to "not
-   * yet absorbed", never to silent candidate loss — see
-   * [[updateStoredIndex]].)
+   * pages is extracted ([[extractPages]], a projection on the input
+   * stream), probes the stored band index ([[probeStoredIndex]],
+   * bucket-pruned), lands its dup pairs in `pairsDir`, and is then
+   * absorbed into the stored index + corpus ([[updateStoredIndex]]) — so
+   * a page recrawled in a LATER micro-batch is detected against this
+   * one. The probe is the stateless q156/q159 plan. Ordering, replay
+   * idempotence, corpus-first appends and the `compactEvery` maintenance
+   * cycle are the shared skeleton's ([[selfUpdating]]).
    *
    * `tombstoneTable` wires TAKEDOWNS into the loop: every probe
    * anti-joins its candidates against the table ([[recordDeletions]]
-   * maintains it), and each `compactEvery` maintenance cycle physically
-   * drops tombstoned rows from both stored tables at the rewrite.
-   *
-   * Returns the started query; stop it to end the crawl.
+   * maintains it), and each maintenance cycle physically drops
+   * tombstoned rows from both stored tables at the rewrite.
    */
   def crawlSelfUpdating(pages: DataFrame, indexTable: String,
       corpusTable: String, pairsDir: String, checkpointDir: String,
@@ -609,90 +665,27 @@ object DocumentStreams {
       corpusTextCol: String = "text", indexBuckets: Int = 8,
       corpusBuckets: Int = 8, maxProbeKeys: Int = 4096,
       compactEvery: Int = 0, tombstoneTable: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    // `compactEvery = n > 0` folds the MAINTENANCE half of the 24/7 loop
-    // in: after every n-th absorbed batch, both stored tables rewrite to
-    // one file per bucket (Storage.compactBuckets), periodically
-    // resetting the file count the append loop grows linearly — probe
-    // cost stays bounded by bucket count, not uptime. foreachBatch is
-    // serial per query, so no probe ever races the swap.
-    val absorbed = new java.util.concurrent.atomic.AtomicLong(0L)
-    pages.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (batchId > readAbsorbedMarker(spark, checkpointDir)) {
-          val extracted = batch.select(col(pageIdCol).as(corpusIdCol),
-            graft.operators.Html.text(col(htmlCol)).as(corpusTextCol))
-          probeStoredIndex(extracted, indexTable, corpusTable, threshold,
-            k, bands, shingleK, corpusIdCol, corpusTextCol, maxProbeKeys,
-            tombstoneTable = tombstoneTable)
-            .write.mode("append").parquet(pairsDir)
-          updateStoredIndex(extracted, indexTable, corpusTable, k, bands,
-            shingleK, corpusIdCol, corpusTextCol, indexBuckets, corpusBuckets)
-          writeAbsorbedMarker(spark, checkpointDir, batchId)
-          if (compactEvery > 0 && absorbed.incrementAndGet() % compactEvery == 0)
-            // compaction PHYSICALLY drops tombstoned rows (LSM delete):
-            // probes already hide them via the anti-join above, so the
-            // swap changes no probe result — it reclaims the bytes; the
-            // applied ids are then pruned from the ledger itself, so the
-            // probes' broadcast stays O(pending), not O(lifetime)
-            runMaintenance(spark, tombstoneTable, Seq(
-              (indexTable, "key", indexBuckets, "dup_id"),
-              (corpusTable, corpusIdCol, corpusBuckets, corpusIdCol)),
-              tombstoneIdCol = corpusIdCol)
-        }
-      }
-      .start()
-  }
-
-  /** Last-absorbed-batch marker (Hadoop FS, so the checkpoint can live
-    * on hdfs://s3a:// like the tables): written AFTER a batch's pairs +
-    * absorb complete; a replayed batchId at-or-below it is skipped. Only a
-    * missing marker means "nothing absorbed yet"; an unreadable or garbled
-    * one fails the batch, since reading it as -1 would re-absorb. */
-  private def readAbsorbedMarker(spark: org.apache.spark.sql.SparkSession,
-      checkpointDir: String): Long = {
-    val marker = new org.apache.hadoop.fs.Path(checkpointDir,
-      "graft_absorbed_batch")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(marker)) -1L
-    else {
-      val in = fs.open(marker)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toLong
-      finally in.close()
-    }
-  }
-
-  private def writeAbsorbedMarker(spark: org.apache.spark.sql.SparkSession,
-      checkpointDir: String, batchId: Long): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(checkpointDir,
-      "graft_absorbed_batch")
-    val fs = marker.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(marker, true)
-    try out.write(batchId.toString.getBytes(
-      java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
+      : StreamingQuery =
+    selfUpdating(
+      extractPages(pages, pageIdCol, htmlCol, corpusIdCol, corpusTextCol),
+      bandIndex(indexTable, corpusTable, k, bands, shingleK, corpusIdCol,
+        corpusTextCol, indexBuckets, corpusBuckets),
+      pairsDir, checkpointDir, compactEvery, tombstoneTable)(
+      probeStoredIndex(_, indexTable, corpusTable, threshold, k, bands,
+        shingleK, corpusIdCol, corpusTextCol, maxProbeKeys,
+        tombstoneTable = tombstoneTable))
 
   /**
    * The streaming 24/7 SEMANTIC ingest loop, CLOSED —
    * [[crawlSelfUpdating]]'s embedding twin: each micro-batch of vectors
    * probes the stored [[graft.operators.Dedup.signBucketIndex]]
-   * (bucket-pruned to the batch's own-plus-bit-flip probe buckets,
-   * tombstones anti-joined), lands its cosine pairs in `pairsDir`, and
-   * is then absorbed into the stored index + corpus — a vector
-   * re-ingested in a LATER micro-batch is detected against this one.
-   * Same guarantees as the crawl loop, for the same reasons: stateless
-   * plan (cross-batch memory lives in the two stored tables),
-   * pairs-before-absorb ordering inside `foreachBatch`, replay
-   * idempotence via the absorbed-batch marker (one-batch window on a
-   * mid-batch crash, documented at [[crawlSelfUpdating]]), corpus-first
-   * appends, and `compactEvery`-cycle maintenance that physically drops
-   * tombstoned rows. The batch path of the SAME probe/absorb step is
+   * ([[probeStoredSemanticIndex]]: bucket-pruned to the batch's
+   * own-plus-bit-flip probe buckets, tombstones anti-joined), lands its
+   * cosine pairs in `pairsDir`, and is then absorbed into the stored
+   * index + corpus — a vector re-ingested in a LATER micro-batch is
+   * detected against this one. Same guarantees as every loop
+   * ([[selfUpdating]]). The batch path of the SAME probe/absorb step is
    * q172's declared, oracle-gated query ([[semanticIngestProbeThenUpdate]]).
-   *
-   * Returns the started query; stop it to end the ingest.
    */
   def semanticSelfUpdating(vectors: DataFrame, indexTable: String,
       corpusTable: String, pairsDir: String, checkpointDir: String,
@@ -700,28 +693,13 @@ object DocumentStreams {
       vecCol: String = "embedding", indexBuckets: Int = 8,
       corpusBuckets: Int = 8, maxProbeBuckets: Int = 4096,
       compactEvery: Int = 0, tombstoneTable: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val absorbed = new java.util.concurrent.atomic.AtomicLong(0L)
-    vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (batchId > readAbsorbedMarker(spark, checkpointDir)) {
-          probeStoredSemanticIndex(batch, indexTable, corpusTable, tau,
-            nPlanes, idCol, vecCol, maxProbeBuckets, tombstoneTable)
-            .write.mode("append").parquet(pairsDir)
-          updateStoredSemanticIndex(batch, indexTable, corpusTable,
-            nPlanes, idCol, vecCol, indexBuckets, corpusBuckets)
-          writeAbsorbedMarker(spark, checkpointDir, batchId)
-          if (compactEvery > 0 && absorbed.incrementAndGet() % compactEvery == 0)
-            runMaintenance(spark, tombstoneTable, Seq(
-              (indexTable, "pb", indexBuckets, "dup_id"),
-              (corpusTable, idCol, corpusBuckets, idCol)),
-              tombstoneIdCol = idCol)
-        }
-      }
-      .start()
-  }
+      : StreamingQuery =
+    selfUpdating(vectors,
+      signIndex(indexTable, corpusTable, nPlanes, idCol, vecCol, indexBuckets,
+        corpusBuckets),
+      pairsDir, checkpointDir, compactEvery, tombstoneTable)(
+      probeStoredSemanticIndex(_, indexTable, corpusTable, tau, nPlanes, idCol,
+        vecCol, maxProbeBuckets, tombstoneTable))
 
   /**
    * The streaming 24/7 ANN ingest loop with DRIFT-TRIGGERED QUANTIZER
@@ -744,40 +722,27 @@ object DocumentStreams {
    * where it exists and therefore where the detection/refresh cycle
    * belongs.
    *
-   * Per micro-batch (same marker-gated at-least-once handling, same
-   * pairs-before-absorb ordering, same corpus-first append atomicity
-   * as the other loops):
-   *  1. PROBE: the batch's vectors top-k against the stored index —
-   *     cell-pruned isin (the 4096 soft valve), per-cell query
-   *     residuals, bounded-aggregate ADC shortlist at R, exact cosine
-   *     re-rank ([[graft.operators.Similarity.ivfPqResidualTopKRerankFromIndex]]),
-   *     routed with the CURRENT quantizers — pairs land in `pairsDir`.
-   *  2. ABSORB: `(id, vector)` rows append under the corpus table's
-   *     spec FIRST, then the batch's residual-encoded rows under the
-   *     index's (cost ∝ batch, frozen-quantizer encode).
-   *  3. DETECT: one extra shuffle-free encode pass records the batch's
-   *     quantization error under the current quantizers
-   *     (`recordDriftStat`, gen = batchId) — the statistic that grows
-   *     when ingest leaves the training distribution.
-   *  4. Every `maintainEvery` absorbed batches, the threshold check
-   *     runs: healthy stats are a cheap no-op; a crossed threshold
-   *     retrains BOTH quantizers on the current stored corpus,
-   *     re-encodes the index through the crash-safe swap, restamps the
-   *     stat baseline, and ATOMICALLY swaps the loop's own quantizer
-   *     reference — step 1 of every subsequent batch routes with the
-   *     fresh fits, which is the "probes MUST switch" contract the
-   *     stand-alone refresh documents. The corpus table compacts on
-   *     the same cadence (the refresh rewrite already leaves the index
-   *     at one file per bucket).
+   * The family inside the shared skeleton ([[selfUpdating]]):
+   *  1. PROBE: top-k against the stored index, cell-pruned (the 4096
+   *     soft valve), ADC shortlist at R, exact cosine re-rank
+   *     ([[graft.operators.Similarity.ivfPqResidualTopKRerankFromIndex]]),
+   *     routed with the CURRENT quantizers.
+   *  2. ABSORB: the index rows are residual-encoded under the current
+   *     quantizers (cost ∝ batch).
+   *  3. DETECT (after absorb): one shuffle-free encode pass records the
+   *     batch's quantization error (`recordDriftStat`, gen = batchId).
+   *  4. REFRESH (after each maintenance cycle): healthy stats are a
+   *     no-op; a crossed threshold retrains BOTH quantizers on the
+   *     stored corpus, re-encodes the index through the crash-safe swap,
+   *     restamps the baseline, and ATOMICALLY swaps the loop's quantizer
+   *     reference, so steps 1-3 of every later batch use the fresh fits.
    *
    * Returns the started query plus the live quantizer reference — the
    * caller reads it to route its OWN probes (a serving path must
    * follow the same swap) and the spec asserts the swap fired inside
    * the loop. `tombstoneTable` wires TAKEDOWNS in exactly as in the
    * other loops: every probe anti-joins the (already cell-pruned,
-   * codes-only) index rows against the ledger, the maintenance cycle
-   * physically drops tombstoned rows from BOTH stored tables and
-   * prunes the ledger ([[runMaintenance]]), and — ordering that
+   * codes-only) index rows against the ledger, and — ordering that
    * matters for compliance — the maintenance drop runs BEFORE the
    * drift check, so a fired refresh re-encodes from the
    * already-scrubbed corpus and can never resurrect a deleted vector
@@ -794,112 +759,69 @@ object DocumentStreams {
       vecCol: String = "embedding", indexBuckets: Int = 8,
       corpusBuckets: Int = 8, maxProbeCells: Int = 4096,
       maintainEvery: Int = 0, tombstoneTable: Option[String] = None)
-      : (org.apache.spark.sql.streaming.StreamingQuery,
-         java.util.concurrent.atomic.AtomicReference[
-           (DataFrame, IndexedSeq[IndexedSeq[(Int, Array[Double])]])]) = {
-    import graft.operators.Similarity
-    import graft.sources.Storage
-    val quant = new java.util.concurrent.atomic.AtomicReference(
-      (initCentroids, initBooks))
-    val absorbed = new java.util.concurrent.atomic.AtomicLong(0L)
-    // Drift-baseline seeding (ADVICE r20): refreshResidualIfDrifted
-    // compares the OLDEST stat row to the newest, and the loop only
-    // records per-batch stats — without a pre-recorded baseline the first
-    // ingest batch becomes the baseline, so drift relative to the seed
-    // corpus's training distribution is undetectable (and a drifted first
-    // batch poisons the comparison forever). If no stat table exists yet,
-    // record the seed corpus's residual quantization error under the
-    // initial quantizers at gen -1 (below every batchId, so it stays the
-    // oldest row). Callers that pre-seed (the documented precondition)
-    // are untouched: the table exists and this is skipped.
-    locally {
-      val spark0 = vectors.sparkSession
-      if (!spark0.catalog.tableExists(statTable)) {
-        val seed = Storage.readTable(spark0, corpusTable)
-        val (n0, err0) = Similarity.residualQuantizationError(seed,
-          initCentroids, initBooks, idCol, vecCol)
-        Similarity.recordDriftStat(spark0, statTable, statPath, -1L, n0, err0)
-      }
+      : (StreamingQuery,
+         AtomicReference[(DataFrame, IndexedSeq[IndexedSeq[(Int, Array[Double])]])]) = {
+    val quant = new AtomicReference((initCentroids, initBooks))
+    // Drift-baseline seeding (ADVICE r20): the refresh compares the
+    // OLDEST stat row to the newest, so without a baseline the first
+    // ingest batch would become it and drift from the seed corpus's
+    // training distribution would be undetectable. With no stat table
+    // yet, record the seed corpus's error under the initial quantizers at
+    // gen -1 (below every batchId); a pre-seeded table is left untouched.
+    val spark0 = vectors.sparkSession
+    if (!spark0.catalog.tableExists(statTable)) {
+      val (n0, err0) = Similarity.residualQuantizationError(
+        Storage.readTable(spark0, corpusTable), initCentroids, initBooks, idCol, vecCol)
+      Similarity.recordDriftStat(spark0, statTable, statPath, -1L, n0, err0)
     }
-    val query = vectors.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val family = StoredIndex(indexTable, "cell_id", indexBuckets, idCol,
+      corpusTable, idCol, vecCol, corpusBuckets, { batch =>
+        val (cents, books) = quant.get()
+        Similarity.ivfPqIndexResidual(batch, cents, books, idCol, vecCol)
+      })
+    val query = selfUpdating(vectors, family, pairsDir, checkpointDir,
+      maintainEvery, tombstoneTable)(
+      probe = { batch =>
         val spark = batch.sparkSession
-        if (batchId > readAbsorbedMarker(spark, checkpointDir)) {
-          val (cents, books) = quant.get()
-          val q = batch.select(col(idCol).as("query_id"),
-            col(vecCol).as(vecCol))
-          val probes = Similarity.ivfPqResidualProbesAgg(q, cents, nprobe,
-            vecCol = vecCol)
-          val cells = Storage.collectWithinCap(probes.select("cell_id").distinct(),
-            maxProbeCells, indexTable, "distinct probe cells")
-          val index0 = Storage.readTable(spark, indexTable)
-          // Self-exclusion BEFORE ranking (ADVICE r20): on an
-          // at-least-once replay (crash between the index append and the
-          // marker write) the batch's own vectors are already indexed —
-          // if they reach the ranking, rank 1 is the self match and a
-          // consumer reading rank === 1 silently gets k-1 real
-          // neighbors. Anti-join the batch's ids out of the pruned index
-          // (broadcast, O(batch)) so ranks are computed over true
-          // neighbors only; in a normal run the batch is not yet indexed
-          // and this is a no-op. The post-rank self filter below stays
-          // as defense in depth.
-          val prunedNoSelf = dropTombstoned(
-            cells.fold(index0)(cs => index0.filter(col("cell_id").isin(
-              cs.map(r => Integer.valueOf(r.getInt(0))).toIndexedSeq: _*))),
-            spark, tombstoneTable, idCol)
-            .join(broadcast(batch.select(col(idCol).as("__self_id"))),
-              col(idCol) === col("__self_id"), "left_anti")
-          Similarity.ivfPqResidualTopKRerankFromIndex(prunedNoSelf, probes, q,
-            Storage.readTable(spark, corpusTable), books, k, r,
-            idCol, vecCol)
-            .filter(col("query_id") =!= col(idCol)) // self after absorb-replay
-            .write.mode("append").parquet(pairsDir)
-          Storage.appendBucketed(batch.select(col(idCol), col(vecCol)),
-            corpusTable, bucketCol = idCol, buckets = corpusBuckets)
-          Storage.appendBucketed(
-            Similarity.ivfPqIndexResidual(batch, cents, books, idCol, vecCol),
-            indexTable, bucketCol = "cell_id", buckets = indexBuckets)
-          val (n, err) = Similarity.residualQuantizationError(batch, cents,
-            books, idCol, vecCol)
-          Similarity.recordDriftStat(spark, statTable, statPath, batchId,
-            n, err)
-          writeAbsorbedMarker(spark, checkpointDir, batchId)
-          if (maintainEvery > 0 &&
-              absorbed.incrementAndGet() % maintainEvery == 0) {
-            // takedowns apply PHYSICALLY first (both tables compact with
-            // the ledger's drops; the ledger itself prunes) so the drift
-            // refresh below — which retrains and re-encodes from the
-            // CURRENT corpus table — can never re-encode a deleted
-            // vector into the fresh index
-            runMaintenance(spark, tombstoneTable, Seq(
-              (indexTable, "cell_id", indexBuckets, idCol),
-              (corpusTable, idCol, corpusBuckets, idCol)),
-              tombstoneIdCol = idCol)
-            Similarity.refreshResidualIfDrifted(spark,
-              Storage.readTable(spark, corpusTable), indexTable, statTable,
-              statPath, driftFactor, kmK, pqM, pqKsub, fitIters,
-              indexBuckets, idCol, vecCol)
-              .foreach(fresh => quant.set(fresh))
-          }
-        }
-      }
-      .start()
+        val (cents, books) = quant.get()
+        val q = batch.select(col(idCol).as("query_id"), col(vecCol).as(vecCol))
+        val probes = Similarity.ivfPqResidualProbesAgg(q, cents, nprobe,
+          vecCol = vecCol)
+        val cells = Storage.pinAndPrune[Int](probes.select("cell_id").distinct(),
+          "cell_id", Storage.readTable(spark, indexTable), "cell_id",
+          maxProbeCells, "distinct probe cells")._2
+        // Self-exclusion BEFORE ranking (ADVICE r20): on an
+        // at-least-once replay (crash between the index append and the
+        // marker write) the batch's own vectors are already indexed —
+        // if they reach the ranking, rank 1 is the self match and a
+        // consumer reading rank === 1 silently gets k-1 real
+        // neighbors. Anti-join the batch's ids out of the pruned index
+        // (broadcast, O(batch)) so ranks are computed over true
+        // neighbors only; in a normal run the batch is not yet indexed
+        // and this is a no-op. The post-rank self filter below stays
+        // as defense in depth.
+        val prunedNoSelf = dropTombstoned(cells, spark, tombstoneTable, idCol,
+            relCol = idCol)
+          .join(broadcast(batch.select(col(idCol).as("__self_id"))),
+            col(idCol) === col("__self_id"), "left_anti")
+        Similarity.ivfPqResidualTopKRerankFromIndex(prunedNoSelf, probes, q,
+          Storage.readTable(spark, corpusTable), books, k, r, idCol, vecCol)
+          .filter(col("query_id") =!= col(idCol)) // self after absorb-replay
+      },
+      afterAbsorb = { (batch, batchId) =>
+        val (cents, books) = quant.get()
+        val (n, err) = Similarity.residualQuantizationError(batch, cents,
+          books, idCol, vecCol)
+        Similarity.recordDriftStat(batch.sparkSession, statTable, statPath,
+          batchId, n, err)
+      },
+      afterMaintenance = { spark =>
+        Similarity.refreshResidualIfDrifted(spark,
+          Storage.readTable(spark, corpusTable), indexTable, statTable,
+          statPath, driftFactor, kmK, pqM, pqKsub, fitIters,
+          indexBuckets, idCol, vecCol)
+          .foreach(fresh => quant.set(fresh))
+      })
     (query, quant)
-  }
-
-  /** [[crawlNearDupAgainstCorpus]] probing a pre-built (typically
-    * persisted, bucketed-by-`key`) band-index relation — the 24/7 crawl
-    * operating form: the static side of the stream-static join is a
-    * stored-table read, not a per-micro-batch corpus recompute. */
-  def crawlNearDupAgainstIndex(pages: DataFrame, index: DataFrame,
-      corpus: DataFrame, threshold: Double = 0.8, k: Int = 16,
-      bands: Int = 4, shingleK: Int = 3, pageIdCol: String = "page_id",
-      htmlCol: String = "html", corpusIdCol: String = "doc_id",
-      corpusTextCol: String = "text"): DataFrame = {
-    val extracted = pages.select(col(pageIdCol).as(corpusIdCol),
-      graft.operators.Html.text(col(htmlCol)).as(corpusTextCol))
-    nearDupAgainstIndex(extracted, index, corpus, threshold, k, bands,
-      shingleK, idCol = corpusIdCol, textCol = corpusTextCol)
   }
 }

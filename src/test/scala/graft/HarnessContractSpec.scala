@@ -73,6 +73,22 @@ class HarnessContractSpec extends GraftSuite {
     assert(mainObjects.sorted == Seq("Bench", "PlanAudit", "PlanDigest", "Verify"))
   }
 
+  test("src/main has one foreachBatch loop and one probe-key collect") {
+    val files = scalaSources("src/main/scala").map(f => f.getName -> code(f))
+    val loops = files.flatMap { case (n, c) =>
+      "\\bforeachBatch\\b".r.findAllMatchIn(c).map(_ => n) }
+    assert(loops == Seq("DocumentStreams.scala"), s"foreachBatch in: $loops")
+    // the capped key collect, `limit(<cap> + 1).collect()`, lives only in
+    // the probe valve every prune site goes through
+    val collects = files.flatMap { case (n, c) =>
+      val defs = "\\bdef\\s+(\\w+)".r.findAllMatchIn(c).map(m => m.start -> m.group(1)).toSeq
+      "\\.limit\\([^()]*\\+\\s*1\\s*\\)\\s*\\.collect\\(\\)".r.findAllMatchIn(c).map { m =>
+        n + ":" + defs.filter(_._1 < m.start).lastOption.map(_._2).getOrElse("")
+      }
+    }
+    assert(collects == Seq("Storage.scala:collectWithinCap"), s"key collects: $collects")
+  }
+
   test("queries and oracleSql cover exactly the same names") {
     // the OPQ oracles embed a runtime-fitted rotation, so enumerating
     // the oracle map needs a live session (exactly as in Verify, which

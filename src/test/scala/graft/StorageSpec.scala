@@ -1364,4 +1364,42 @@ class StorageSpec extends GraftSuite {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
+
+  test("a tombstone ledger with extra columns: probes and maintenance select " +
+      "its id column by name") {
+    import graft.streaming.DocumentStreams
+    val t0 = "the quick brown fox jumps over the lazy dog and runs far away today"
+    val corpus = Seq((0L, t0), (1L, t0 + " tonight"),
+      (2L, "completely different text about database engines and query planners"))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_wide_ts")
+    dir.toFile.deleteOnExit()
+    Storage.writeBucketed(
+      graft.operators.Dedup.lshBandIndex(corpus, k = 8, bands = 4, shingleK = 3),
+      "wide_ts_idx", s"$dir/idx", bucketCol = "key", buckets = 8)
+    Storage.writeBucketed(corpus, "wide_ts_cor", s"$dir/cor", bucketCol = "doc_id",
+      buckets = 8)
+    // a ledger written by an external compliance process, with a reason
+    // column next to the id
+    Storage.writeBucketed(Seq((0L, "erasure request")).toDF("doc_id", "reason"),
+      "wide_ts_ledger", s"$dir/ts", bucketCol = "doc_id", buckets = 8)
+    try {
+      val pairs = DocumentStreams.probeStoredIndex(Seq((30L, t0)).toDF("doc_id", "text"),
+        "wide_ts_idx", "wide_ts_cor", threshold = 0.5, k = 8, bands = 4,
+        shingleK = 3, pruneCorpusByCandidates = true,
+        tombstoneTable = Some("wide_ts_ledger"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs == Set((30L, 1L)), s"tombstoned doc 0 not excluded: $pairs")
+      DocumentStreams.runMaintenance(spark, Some("wide_ts_ledger"), Seq(
+        ("wide_ts_idx", "key", 8, "dup_id"), ("wide_ts_cor", "doc_id", 8, "doc_id")))
+      def rows(t: String) = { spark.catalog.refreshTable(t); Storage.readTable(spark, t) }
+      assert(rows("wide_ts_idx").filter($"dup_id" === 0L).count() == 0)
+      assert(rows("wide_ts_cor").filter($"doc_id" === 0L).count() == 0)
+      val ledger = rows("wide_ts_ledger")
+      assert(ledger.count() == 0 && ledger.columns.toSeq == Seq("doc_id", "reason"))
+    } finally {
+      Seq("wide_ts_idx", "wide_ts_cor", "wide_ts_ledger")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
 }

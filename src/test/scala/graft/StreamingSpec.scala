@@ -900,4 +900,68 @@ class StreamingSpec extends GraftSuite {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
+
+  test("semanticSelfUpdating and annSelfUpdating skip the replay of an " +
+      "already-absorbed batch (the shared absorb-marker gate)") {
+    import spark.implicits._
+    import graft.operators.{Dedup, Similarity}
+    import graft.sources.Storage
+    import graft.streaming.DocumentStreams
+    val rng = new scala.util.Random(5)
+    val seed = (0L until 20L).map(i => (i, Array.fill(8)(rng.nextDouble())))
+    val corpus = seed.toDF("vec_id", "embedding")
+    val base = java.nio.file.Files.createTempDirectory("graft_replay_vec")
+    base.toFile.deleteOnExit()
+    // one batch of noisy copies of seed vectors, through a FILE source,
+    // which re-delivers a batch whose epoch commit was lost
+    seed.take(5).map { case (i, v) => (100L + i, v.map(_ + 0.01)) }
+      .toDF("vec_id", "embedding").write.json(s"$base/src")
+    def vectors() = spark.readStream
+      .schema("vec_id LONG, embedding ARRAY<DOUBLE>").json(s"$base/src")
+    Storage.writeBucketed(Dedup.signBucketIndex(corpus), "replay_sem_idx",
+      s"$base/sidx", bucketCol = "pb", buckets = 8)
+    Storage.writeBucketed(corpus, "replay_sem_cor", s"$base/scor",
+      bucketCol = "vec_id", buckets = 8)
+    val cents = Similarity.kmeansFit(corpus, k = 4, iters = 2)
+    val books = Similarity.pqFitCodebooksResidual(corpus, cents, m = 4,
+      ksub = 4, iters = 2)
+    Storage.writeBucketed(Similarity.ivfPqIndexResidual(corpus, cents, books),
+      "replay_ann_idx", s"$base/aidx", bucketCol = "cell_id", buckets = 8)
+    Storage.writeBucketed(corpus, "replay_ann_cor", s"$base/acor",
+      bucketCol = "vec_id", buckets = 8)
+    def rows(t: String): Long = { spark.catalog.refreshTable(t); spark.table(t).count() }
+    val loops = Seq(
+      ("semanticSelfUpdating", "replay_sem", () => DocumentStreams.semanticSelfUpdating(
+        vectors(), "replay_sem_idx", "replay_sem_cor", s"$base/replay_sem_pairs",
+        s"$base/replay_sem_ckpt", tau = 0.9)),
+      ("annSelfUpdating", "replay_ann", () => DocumentStreams.annSelfUpdating(
+        vectors(), "replay_ann_idx", "replay_ann_cor", "replay_ann_stat",
+        s"$base/stat", s"$base/replay_ann_pairs", s"$base/replay_ann_ckpt",
+        cents, books, k = 1, r = 1, nprobe = 2, kmK = 4, pqM = 4, pqKsub = 4)._1))
+    try loops.foreach { case (name, t, start) =>
+      def counts = (rows(s"${t}_idx"), rows(s"${t}_cor"),
+        spark.read.parquet(s"$base/${t}_pairs").count())
+      val q1 = start()
+      try q1.processAllAvailable() finally q1.stop()
+      val absorbed = counts
+      assert(absorbed._2 == 25 && absorbed._3 > 0, s"$name: batch 0 gave $absorbed")
+      // lose batch 0's epoch commit (and its checksum twin): the restart
+      // re-runs batch 0 with the same batchId
+      assert(java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$base/${t}_ckpt/commits/0")), s"$name: no commit 0")
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$base/${t}_ckpt/commits/.0.crc"))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        assert(q2.recentProgress.exists(_.batchId == 0),
+          s"$name: batch 0 was not re-run")
+      } finally q2.stop()
+      assert(counts == absorbed, s"$name: the replay changed (index, corpus, pairs) " +
+        s"rows from $absorbed to $counts")
+    } finally {
+      Seq("replay_sem_idx", "replay_sem_cor", "replay_ann_idx", "replay_ann_cor",
+        "replay_ann_stat").foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
 }
