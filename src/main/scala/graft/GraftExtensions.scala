@@ -15,6 +15,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * }}}
  *
  * (Also usable via spark.sql.extensions=graft.GraftExtensions.)
+ *
+ * Under `withExtensions` it also sets two JVM-wide defaults before the
+ * session's SparkConf exists: the generated-class cache size
+ * ([[GraftConf.CodegenCacheEntries]]) and `spark.hadoop.fs.file.impl`
+ * ([[graft.sources.NioLocalFileSystem]]). An explicit setting wins; under
+ * `spark.sql.extensions` the extension runs too late to set either.
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -22,6 +28,11 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // which loads spark.* system properties; an explicit setting wins.
     sys.props.getOrElseUpdate("spark.sql.codegen.cache.maxEntries",
       GraftConf.CodegenCacheEntries.toString)
+    // Same rule for the local file system (no forked chmod per written
+    // file): unless Spark's or Hadoop's own fs.file.impl is set.
+    if (!sys.props.contains("spark.hadoop.fs.file.impl") &&
+        new org.apache.hadoop.conf.Configuration().getTrimmed("fs.file.impl", "").isEmpty)
+      sys.props("spark.hadoop.fs.file.impl") = classOf[graft.sources.NioLocalFileSystem].getName
     ext.injectFunction((
       new FunctionIdentifier("portable_hash"),
       new ExpressionInfo(classOf[org.apache.spark.sql.graft.PortableHash].getName,

@@ -426,7 +426,8 @@ object Storage {
   }
 
   /** Drop `table` from the catalog and recursively delete its files
-   *  (best effort) through the Hadoop FileSystem API — scheme-agnostic,
+   *  (best effort: a failed delete logs a WARN naming the location it
+   *  leaves behind) through the Hadoop FileSystem API — scheme-agnostic,
    *  so the same cleanup works for file://, hdfs:// and s3a:// table
    *  locations. */
   private def dropWithFiles(spark: SparkSession, table: String): Unit = {
@@ -435,7 +436,9 @@ object Storage {
       spark.sessionState.catalog.getTableMetadata(TableIdentifier(table)).location)
     spark.sql(s"DROP TABLE `$table`")
     try loc.getFileSystem(spark.sessionState.newHadoopConf()).delete(loc, true)
-    catch { case _: Exception => () }
+    catch { case e: java.io.IOException =>
+      log.warn(s"dropped table `$table` but could not delete its files at $loc", e)
+    }
   }
 
   /**

@@ -354,33 +354,58 @@ object DocumentStreams {
    * anti-join grows with it; with it the ledger is O(pending takedowns
    * since the last compaction), bounded for any uptime.
    *
+   * The tables (distinct names) compact CONCURRENTLY, one thread each,
+   * started inside the call so they inherit the caller's job group and
+   * session. The call waits for every compaction and then rethrows the
+   * first failure in `tables` order (the others suppressed); the ledger
+   * is pruned only when all of them succeeded, so a failed cycle leaves
+   * every id in place for the next one.
+   *
    * Race-safety with concurrent external takedowns: the ledger's
    * `tombstoneIdCol` (selected by name, so a wider ledger works) is
    * SNAPSHOTTED once (eager localCheckpoint) before any rewrite — the
-   * same snapshot drives every table's `dropIds` and bounds the ledger
-   * prune, so an id recorded DURING the cycle is neither half-applied
-   * nor pruned; it survives to the next cycle. The ledger prune reuses
-   * [[graft.sources.Storage.rewriteInPlace]]'s crash-safe swap (a crash
-   * re-prunes ids already gone from the tables — idempotent).
+   * same snapshot drives every table's `dropIds`. The ledger is
+   * append-only, so the prune deletes exactly the data files that
+   * snapshot read (listed before it, so it covers all of their ids); an
+   * id recorded DURING the cycle lands in a new file and survives to the
+   * next cycle. A crash midway re-applies ids already gone from the
+   * tables, which is idempotent. `tombstoneBuckets` is no longer used.
    */
   def runMaintenance(spark: SparkSession,
       tombstoneTable: Option[String],
       tables: Seq[(String, String, Int, String)],
       tombstoneIdCol: String = "doc_id", tombstoneBuckets: Int = 8): Unit = {
-    val ledger = tombstoneTable.filter(spark.catalog.tableExists)
-    val snap = ledger.map { t =>
+    import java.util.concurrent.{Callable, ExecutionException, Executors}
+    require(tables.map(_._1).distinct.size == tables.size,
+      s"runMaintenance compacts each table once: ${tables.map(_._1).mkString(", ")}")
+    val ledger = tombstoneTable.filter(spark.catalog.tableExists).map { t =>
       spark.catalog.refreshTable(t)
-      Storage.readTable(spark, t).select(col(tombstoneIdCol)).localCheckpoint(true)
+      val ids = Storage.readTable(spark, t).select(col(tombstoneIdCol))
+      val files = ids.inputFiles
+      (t, files, ids.localCheckpoint(true))
     }
-    tables.foreach { case (tbl, bucketCol, buckets, dropCol) =>
-      Storage.compactBuckets(spark, tbl, bucketCol, buckets,
-        dropIds = snap.map((_, dropCol)))
-    }
-    ledger.zip(snap).foreach { case (t, sn) =>
-      Storage.rewriteInPlace(spark, t, tombstoneIdCol, tombstoneBuckets) { live =>
-        live.join(broadcast(sn.toDF("__applied_id")),
-          col(tombstoneIdCol) === col("__applied_id"), "left_anti")
+    val pool = Executors.newFixedThreadPool(math.max(1, tables.size))
+    val failures = try {
+      tables.map { case (tbl, bucketCol, buckets, dropCol) =>
+        pool.submit(new Callable[Unit] {
+          def call(): Unit = Storage.compactBuckets(spark, tbl, bucketCol, buckets,
+            dropIds = ledger.map { case (_, _, ids) => (ids, dropCol) })
+        })
+      }.flatMap { f =>
+        try { f.get(); None } catch { case e: ExecutionException => Some(e.getCause) }
       }
+    } finally pool.shutdown()
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
+    }
+    ledger.foreach { case (t, files, _) =>
+      val conf = spark.sessionState.newHadoopConf()
+      files.foreach { f =>
+        val p = new org.apache.hadoop.fs.Path(new java.net.URI(f))
+        p.getFileSystem(conf).delete(p, false)
+      }
+      spark.catalog.refreshTable(t)
     }
   }
 

@@ -900,6 +900,53 @@ class StorageSpec extends GraftSuite {
     }
   }
 
+  test("runMaintenance with a missing table fails after the other " +
+      "compactions finish and keeps every ledger id for the next cycle") {
+    import graft.streaming.DocumentStreams
+    val t0 = "the quick brown fox jumps over the lazy dog and runs far away today"
+    val t1 = "completely different text about database engines and query planners"
+    val corpus = Seq((0L, t0), (1L, t0 + " tonight"), (2L, t1))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_fail")
+    dir.toFile.deleteOnExit()
+    Storage.writeBucketed(
+      graft.operators.Dedup.lshBandIndex(corpus, k = 8, bands = 4, shingleK = 3),
+      "lf_idx", s"$dir/idx", bucketCol = "key", buckets = 8)
+    Storage.writeBucketed(corpus, "lf_cor", s"$dir/cor", bucketCol = "doc_id",
+      buckets = 8)
+    def rows(t: String) = { spark.catalog.refreshTable(t); Storage.readTable(spark, t) }
+    try {
+      def probe() = DocumentStreams.probeStoredIndex(
+        Seq((30L, t0)).toDF("doc_id", "text"), "lf_idx", "lf_cor",
+        threshold = 0.5, k = 8, bands = 4, shingleK = 3,
+        tombstoneTable = Some("lf_ts"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      DocumentStreams.recordDeletions(Seq(0L, 2L).toDF("doc_id"), "lf_ts", s"$dir/ts")
+      assert(probe() == Set((30L, 1L)))
+      val err = intercept[org.apache.spark.sql.AnalysisException] {
+        DocumentStreams.runMaintenance(spark, Some("lf_ts"), Seq(
+          ("lf_idx", "key", 8, "dup_id"), ("lf_missing", "doc_id", 8, "doc_id"),
+          ("lf_cor", "doc_id", 8, "doc_id")))
+      }
+      assert(err.getMessage.contains("lf_missing"))
+      // both other tables, before and after the missing one, were compacted
+      // with the ledger's ids dropped before the call failed
+      assert(rows("lf_idx").filter($"dup_id".isin(0L, 2L)).count() == 0)
+      assert(rows("lf_cor").as[(Long, String)].collect().map(_._1).toSeq == Seq(1L))
+      assert(rows("lf_ts").as[Long].collect().sorted.toSeq == Seq(0L, 2L),
+        "a failed cycle pruned the ledger")
+      assert(probe() == Set((30L, 1L)))
+      DocumentStreams.runMaintenance(spark, Some("lf_ts"), Seq(
+        ("lf_idx", "key", 8, "dup_id"), ("lf_cor", "doc_id", 8, "doc_id")))
+      assert(rows("lf_ts").count() == 0)
+      assert(rows("lf_cor").count() == 1)
+      assert(probe() == Set((30L, 1L)))
+    } finally {
+      Seq("lf_idx", "lf_cor", "lf_ts")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
   test("residual index: frozen-quantizer append equals a rebuild, refresh " +
       "re-encodes and still bucket-prunes (q162/q177 parity, residual family)") {
     import graft.operators.Similarity
