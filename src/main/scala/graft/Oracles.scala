@@ -3328,8 +3328,8 @@ object Oracles {
          |  CAST("end" + doc_id*1000 AS INT) AS "end" FROM toks""".stripMargin
   )
 
-  // The aggregate-form top-k queries (q141/q142) are result-identical to
-  // their window forms by construction — they share those oracles verbatim.
+  // q141/q142/q143 run the same operator as q127/q18/q74, so they share
+  // those oracles verbatim.
   val sql: Map[String, String] = base +
     ("q141_bm25_agg" -> base("q127_bm25")) +
     ("q142_ann_brute_agg" -> base("q18_ann_brute")) +
@@ -3340,12 +3340,11 @@ object Oracles {
     // the kernel encoder is result-identical to the replace chain by the
     // min-rank equivalence argument (Bpe.encodeWord doc; BpeSpec pins it)
     ("q152_bpe_fertility_kernel" -> base("q146_bpe_fertility")) +
-    // the aggregate form is result-identical to the window form (same
-    // candidates/scores/tie-breaks; topKByScore ranks identically)
+    // q153 runs the same operator as q129
     ("q153_hard_negatives_agg" -> base("q129_hard_negatives")) +
-    // bucketed-index and double-aggregate IVFADC forms are
-    // result-identical to q149 by construction (same index relation,
-    // same probed cells, same ADC folds, same tie-breaks)
+    // the bucketed-index IVFADC form is result-identical to q149 by
+    // construction (same index relation, same probed cells, same ADC
+    // folds, same tie-breaks); q155 runs q149's operator
     ("q154_ivfpq_bucketed" -> base("q149_ivfpq")) +
     ("q155_ivfpq_agg" -> base("q149_ivfpq")) +
     // the stored residual index + cell-pruned probe is a results no-op

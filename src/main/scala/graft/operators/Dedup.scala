@@ -583,7 +583,9 @@ object Dedup {
    *    re-executes rounds 1..N-1 under recomputation);
    *  - convergence is probed with `sum(label)`: labels only ever decrease,
    *    so an unchanged sum IS the fixpoint — one cheap action per round
-   *    instead of a change-count join.
+   *    instead of a change-count join;
+   *  - a graph that has not converged after `maxRounds` rounds throws
+   *    `IllegalStateException` rather than returning partial labels.
    *
    * HYBRID: iterative propagation is the 100 TB shape, but its cost floor
    * is `diameter × (shuffle + action)` — overhead-dominated when the edge
@@ -630,6 +632,10 @@ object Dedup {
       prevSum = s
       round += 1
     }
+    // unconverged labels split components silently — fail instead
+    if (!converged) throw new IllegalStateException(
+      s"dupClusters: label propagation did not converge after $round rounds " +
+        s"(maxRounds = $maxRounds); the pair graph's diameter exceeds maxRounds")
     labels.select(col("node").as("doc_id"), col("label").as("cluster_id"))
   }
 

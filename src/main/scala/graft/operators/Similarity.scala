@@ -19,48 +19,23 @@ import graft.tensor
 object Similarity {
 
   /**
-   * Exact brute-force cosine top-k. `queries` is broadcast; ties broken by
-   * corpus id for determinism. Output: query_id, vec_id, cos, rank.
+   * Exact brute-force cosine top-k. `queries` is broadcast (the scan side
+   * never shuffles); ties broken by corpus id for determinism. The rank
+   * filter is planned with a partial `WindowGroupLimit` before the
+   * per-query exchange, so each task forwards at most k rows per query.
+   * Output: query_id, vec_id, cos, rank.
    */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
       queryIdCol: String = "query_id"): DataFrame = {
-    val scored = bruteForceScores(corpus, queries, idCol, vecCol, queryIdCol)
-    val w = Window.partitionBy(queryIdCol).orderBy(col("cos").desc, col(idCol))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rank"))
-  }
-
-  /** Shared brute-force front end: every (query, corpus vector) cosine
-    * (queries broadcast; the scan side never shuffles). */
-  private def bruteForceScores(corpus: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, queryIdCol: String): DataFrame = {
     val q = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
+    val w = Window.partitionBy(queryIdCol).orderBy(col("cos").desc, col(idCol))
     corpus.select(col(idCol), col(vecCol).as("c_vec"))
       .crossJoin(broadcast(q))
       .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6))
-  }
-
-  /**
-   * [[bruteForceTopK]] with the per-query rank window replaced by the
-   * bounded [[TextAnalysis.topKByScore]] aggregate — identical results,
-   * different physical shape: the window form shuffles EVERY scored
-   * corpus row to its query's partition and sorts there (N rows per
-   * query on the exchange); here scoring stays a shuffle-free broadcast
-   * map and the partial aggregation forwards at most k pairs per
-   * (task, query), so the exchange carries k·partitions rows per query
-   * regardless of corpus size. The exact-scan operating form at large N.
-   */
-  def bruteForceTopKAgg(corpus: DataFrame, queries: DataFrame, k: Int = 10,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      queryIdCol: String = "query_id"): DataFrame = {
-    val scored = bruteForceScores(corpus, queries, idCol, vecCol, queryIdCol)
-    val tk = TextAnalysis.topKByScore(k)
-    scored.groupBy(queryIdCol).agg(tk(col("cos"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol),
-        col("__e")("_1").as("cos"), (col("__r") + 1).cast("int").as("rank"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col(queryIdCol), col(idCol), col("cos"), col("rank"))
   }
 
   /**
@@ -374,6 +349,14 @@ object Similarity {
    *    is id-ordered, not similarity-ordered); size it at a comfortable
    *    multiple of k.
    *
+   * Top-k selection is the bounded [[TextAnalysis.topKByScore]]
+   * aggregate, not a rank window: every vector is an anchor, so there
+   * are as many keys as vectors and only a few candidates per key. A
+   * per-task window group limit would prune almost nothing there and
+   * still pay a local sort, while the aggregate's map-side partial mode
+   * forwards at most k pairs per (task, anchor). With the default open
+   * valves the plan has no WindowExec at all.
+   *
    * Output: (anchor_id, neg_id, cos, rank), rank by descending cosine,
    * ties to the smaller neighbor id.
    */
@@ -381,18 +364,7 @@ object Similarity {
       maxBucket: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding", labelCol: String = "label",
       maxCandPerAnchor: Int = 0): DataFrame = {
-    val w = Window.partitionBy("anchor_id").orderBy(col("cos").desc, col("neg_id"))
-    hardNegativeScores(corpus, nPlanes, maxBucket, idCol, vecCol, labelCol,
-        maxCandPerAnchor)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-  }
-
-  /** Candidate generation + cosine scoring shared by [[hardNegatives]]
-    * and [[hardNegativesAgg]]: (anchor_id, neg_id, cos), unranked. */
-  private def hardNegativeScores(corpus: DataFrame, nPlanes: Int,
-      maxBucket: Int, idCol: String, vecCol: String, labelCol: String,
-      maxCandPerAnchor: Int): DataFrame = {
+    val tk = TextAnalysis.topKByScore(k)
     val withV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val withB = corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
       Dedup.signBucketHashed(col(vecCol).cast("array<double>"), nPlanes).as("bucket"))
@@ -429,36 +401,13 @@ object Similarity {
       .join(withV.select(col("id").as("n_id"), col("v").as("n_v")), "n_id")
       .select(col("a_id").as("anchor_id"), col("n_id").as("neg_id"),
         round(tensor.cosine(col("a_v"), col("n_v")), 6).as("cos"))
-      // No NaN can reach the rank window or topKByScore's comparator:
-      // CosineSim's CONTRACT (CosineSim.scala:78) maps zero-norm and null
-      // vectors to 0.0, never 0/0 — and the oracle's cos() mirrors the
-      // same CASE (Oracles.cos: ELSE 0.0). So the window form, the
-      // aggregate form, and the DuckDB oracle all see the identical
-      // well-ordered score set even on degenerate embeddings; a
-      // `!isnan(cos)` guard here would be dead code that, were it ever
-      // live, would DROP pairs the oracle still ranks at 0.0.
-  }
-
-  /**
-   * [[hardNegatives]] with the final per-anchor rank window replaced by
-   * the bounded [[TextAnalysis.topKByScore]] aggregate — identical
-   * results (same candidates, same scores, same ordering and ranks),
-   * different physical shape: with the default open valves there is NO
-   * WindowExec in the plan at all, and the scored-pair exchange carries
-   * at most k rows per (task, anchor) after map-side partial
-   * aggregation instead of every scored candidate sorting inside its
-   * anchor partition. At the operating point (every vector an anchor,
-   * candidates ≈ (nPlanes+1)·maxBucket per anchor) the rank window is
-   * the pair pipeline's dominant shuffle — this is the corpus-scale
-   * form, exactly the bm25TopKAgg/bruteForceTopKAgg trade.
-   */
-  def hardNegativesAgg(corpus: DataFrame, k: Int = 3, nPlanes: Int = 8,
-      maxBucket: Int = 0, idCol: String = "vec_id",
-      vecCol: String = "embedding", labelCol: String = "label",
-      maxCandPerAnchor: Int = 0): DataFrame = {
-    val tk = TextAnalysis.topKByScore(k)
-    hardNegativeScores(corpus, nPlanes, maxBucket, idCol, vecCol, labelCol,
-        maxCandPerAnchor)
+      // No NaN can reach topKByScore's comparator: CosineSim's CONTRACT
+      // (CosineSim.scala:78) maps zero-norm and null vectors to 0.0,
+      // never 0/0 — and the oracle's cos() mirrors the same CASE
+      // (Oracles.cos: ELSE 0.0). So the aggregate and the DuckDB oracle
+      // see the identical well-ordered score set even on degenerate
+      // embeddings; a `!isnan(cos)` guard here would be dead code that,
+      // were it ever live, would DROP pairs the oracle still ranks at 0.0.
       .groupBy("anchor_id")
       .agg(tk(col("cos"), col("neg_id")).as("__top"))
       .select(col("anchor_id"), posexplode(col("__top")).as(Seq("__r", "__e")))
@@ -700,8 +649,9 @@ object Similarity {
    * Query→cell routing: (query_id, q_vec, cell_id), one row per probed
    * cell — each query's `nprobe` max-cosine cells (ties to the smaller
    * cell_id) from a broadcast crossJoin against the C-row centroid
-   * table. The window sorts queries×C rows, fine for interactive
-   * batches; [[ivfPqProbesAgg]] is the huge-stored-query-batch form.
+   * table. The rank filter is planned with a partial `WindowGroupLimit`
+   * before the per-query exchange, so at most nprobe rows per
+   * (task, query) cross it, whatever the centroid count.
    */
   def ivfPqProbes(queries: DataFrame, centroids: DataFrame, nprobe: Int = 2,
       queryIdCol: String = "query_id", vecCol: String = "embedding"): DataFrame = {
@@ -713,28 +663,6 @@ object Similarity {
       .withColumn("qcos", tensor.cosine(col("q_vec"), col("centroid")))
       .withColumn("__rn", row_number().over(wProbe))
       .filter(col("__rn") <= nprobe)
-      .select(col(queryIdCol), col("q_vec"), col("cell_id"))
-  }
-
-  /** [[ivfPqProbes]] with the routing window replaced by the bounded
-    * [[TextAnalysis.topKByScore]] aggregate — identical cells (max
-    * cosine, ties to the smaller cell_id), no WindowExec: at a
-    * millions-of-stored-queries batch the queries×C routing sort is
-    * itself a corpus-sized window, and this form caps the exchange at
-    * nprobe rows per (task, query). */
-  def ivfPqProbesAgg(queries: DataFrame, centroids: DataFrame, nprobe: Int = 2,
-      queryIdCol: String = "query_id", vecCol: String = "embedding"): DataFrame = {
-    val vecD = col(vecCol).cast("array<double>")
-    val cb = broadcast(centroids.select(col("cell_id"), col("centroid")))
-    val qv = queries.select(col(queryIdCol), vecD.as("q_vec"))
-    val tk = TextAnalysis.topKByScore(nprobe)
-    qv.crossJoin(cb)
-      .withColumn("qcos", tensor.cosine(col("q_vec"), col("centroid")))
-      .groupBy(col(queryIdCol))
-      .agg(tk(col("qcos"), col("cell_id").cast("long")).as("__p"))
-      .select(col(queryIdCol), explode(col("__p")).as("__e"))
-      .select(col(queryIdCol), col("__e")("_2").cast("int").as("cell_id"))
-      .join(broadcast(qv), queryIdCol)
       .select(col(queryIdCol), col("q_vec"), col("cell_id"))
   }
 
@@ -765,7 +693,11 @@ object Similarity {
    * have the (id, cell_id, c0..c{m-1}) shape [[ivfPqIndex]] produces;
    * rows outside probed cells may already be filtered away (e.g. a
    * cell_id isin pushdown that bucket-prunes the stored table — q154) —
-   * the cell_id equi-join makes that filter a no-op on results.
+   * the cell_id equi-join makes that filter a no-op on results. Works
+   * unchanged over a residual index with residual probes. The rank
+   * filter is planned with a partial `WindowGroupLimit` before the
+   * per-query exchange, so at most k scored rows per (task, query)
+   * cross it.
    */
   def ivfPqTopKFromIndex(index: DataFrame, probes: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]], k: Int = 10,
@@ -778,68 +710,24 @@ object Similarity {
   }
 
   /**
-   * [[ivfPqTopK]] with BOTH rank windows replaced by the bounded
-   * [[TextAnalysis.topKByScore]] aggregate — identical results (same
-   * cells probed, same ADC, same ordering and ranks; ADC ranks
-   * ascending, so the score fed to the max-first aggregate is −adc),
-   * and NO WindowExec anywhere in the plan (probe routing uses
-   * [[ivfPqProbesAgg]]). This is the production-query-batch operating
-   * form: the scored exchange carries at most k rows per (task, query)
-   * after map-side partial aggregation instead of every probed code
-   * row sorting inside its query partition — the q142/q153 trade
-   * applied to the IVFADC tail.
-   */
-  def ivfPqTopKAgg(corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
-      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]], nprobe: Int = 2,
-      k: Int = 10, idCol: String = "vec_id", vecCol: String = "embedding",
-      queryIdCol: String = "query_id"): DataFrame = {
-    val tk = TextAnalysis.topKByScore(k)
-    ivfPqScored(ivfPqIndex(corpus, centroids, books, idCol, vecCol),
-        ivfPqProbesAgg(queries, centroids, nprobe, queryIdCol, vecCol), books)
-      .groupBy(queryIdCol)
-      .agg(tk(-col("adc"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol),
-        (-col("__e")("_1")).as("adc"), (col("__r") + 1).cast("int").as("rank"))
-  }
-
-  /** [[ivfPqTopKFromIndex]] with the rank window replaced by the bounded
-    * [[TextAnalysis.topKByScore]] aggregate — the no-WindowExec tail for
-    * any PREBUILT index relation. Metric-agnostic: ADC neither knows nor
-    * cares whether the index codes raw subvectors ([[ivfPqIndex]]) or
-    * residuals ([[ivfPqIndexResidual]] — pass the matching probes),
-    * so this one tail serves both families at query-batch scale. */
-  def ivfPqTopKAggFromIndex(index: DataFrame, probes: DataFrame,
-      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]], k: Int = 10,
-      idCol: String = "vec_id", queryIdCol: String = "query_id"): DataFrame = {
-    val tk = TextAnalysis.topKByScore(k)
-    ivfPqScored(index, probes, books)
-      .groupBy(queryIdCol)
-      .agg(tk(-col("adc"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol),
-        (-col("__e")("_1")).as("adc"), (col("__r") + 1).cast("int").as("rank"))
-  }
-
-  /**
-   * IVFADC+R — [[ivfPqTopKAgg]] followed by EXACT re-ranking of the
-   * top-R ADC shortlist against the true vectors (Jégou, Douze & Schmid
-   * 2011, "Product Quantization for Nearest Neighbor Search", the
-   * IVFADC+R variant): ADC ordering carries quantization error — the
-   * measured round-15 recall@10 at default knobs on the diverse tier was
-   * 0.38 — so the standard remedy keeps R ≥ k ADC candidates and
-   * re-scores ONLY those with the exact metric. Routing loss (a true
-   * neighbor in an unprobed cell) is the remaining ceiling: rerank
+   * IVFADC+R — [[ivfPqTopK]]'s ADC scoring followed by EXACT re-ranking
+   * of the top-R ADC shortlist against the true vectors (Jégou, Douze &
+   * Schmid 2011, "Product Quantization for Nearest Neighbor Search",
+   * the IVFADC+R variant): ADC ordering carries quantization error —
+   * the measured round-15 recall@10 at default knobs on the diverse
+   * tier was 0.38 — so the standard remedy keeps R ≥ k ADC candidates
+   * and re-scores ONLY those with the exact metric. Routing loss (a
+   * true neighbor in an unprobed cell) is the remaining ceiling: rerank
    * recall converges to the probed-cells-exact recall ([[ivfTopK]] over
    * the same cells) as R grows, at R·|queries| exact distances instead
    * of the probed cells' full membership.
    *
    * Scale shape: the shortlist is bounded at R rows per (task, query) by
-   * the [[TextAnalysis.topKByScore]] aggregate (no WindowExec anywhere),
-   * and the exact re-score joins the R·|queries|-row shortlist against
-   * the corpus BY ID — the shortlist BROADCASTS, so the corpus side is a
-   * broadcast-hash probe (no corpus shuffle, no new scan shape). The
-   * final top-k is the same bounded aggregate at k.
+   * the [[TextAnalysis.topKByScore]] aggregate, and the exact re-score
+   * joins the R·|queries|-row shortlist against the corpus BY ID — the
+   * shortlist BROADCASTS, so the corpus side is a broadcast-hash probe
+   * (no corpus shuffle, no new scan shape). The final top-k is the same
+   * bounded aggregate at k.
    *
    * Output: (query_id, vec_id, cos, rank) — [[bruteForceTopK]]'s schema
    * and metric (cosine desc, ties to the smaller corpus id), because
@@ -851,7 +739,7 @@ object Similarity {
       nprobe: Int = 2, k: Int = 10, r: Int = 40, idCol: String = "vec_id",
       vecCol: String = "embedding", queryIdCol: String = "query_id"): DataFrame =
     ivfPqTopKRerankFromIndex(ivfPqIndex(corpus, centroids, books, idCol, vecCol),
-      ivfPqProbesAgg(queries, centroids, nprobe, queryIdCol, vecCol),
+      ivfPqProbes(queries, centroids, nprobe, queryIdCol, vecCol),
       corpus, books, k, r, idCol, vecCol, queryIdCol)
 
   /**
@@ -1040,33 +928,20 @@ object Similarity {
       .select(col(idCol) +: extraCols.map(col) ++: col("cell_id") +: codeCols: _*)
   }
 
-  /** Residualize a probe relation: each (query, probed cell) row's
-    * `q_vec` becomes the QUERY residual `q − centroid(cell)` — ADC
-    * against a residual index compares residual to residual within the
-    * probed cell (Jégou 2011 eq. 17: ‖(q − c) − pq(x − c)‖²). Broadcast
-    * join against the C-row centroid table; queries×nprobe rows. */
-  private def residualizeProbes(probes: DataFrame, centroids: DataFrame,
-      queryIdCol: String): DataFrame =
-    probes.join(broadcast(centroids.select(col("cell_id"),
+  /** [[ivfPqProbes]] with each (query, probed cell) row's `q_vec`
+    * residualized to `q − centroid(cell)` — ADC against a residual index
+    * compares residual to residual within the probed cell (Jégou 2011
+    * eq. 17: ‖(q − c) − pq(x − c)‖²). Broadcast join against the C-row
+    * centroid table; queries×nprobe rows. */
+  def ivfPqResidualProbes(queries: DataFrame, centroids: DataFrame,
+      nprobe: Int = 2, queryIdCol: String = "query_id",
+      vecCol: String = "embedding"): DataFrame =
+    ivfPqProbes(queries, centroids, nprobe, queryIdCol, vecCol)
+      .join(broadcast(centroids.select(col("cell_id"),
         col("centroid").cast("array<double>").as("__cent"))), "cell_id")
       .select(col(queryIdCol),
         zip_with(col("q_vec"), col("__cent"), (x, c) => x - c).as("q_vec"),
         col("cell_id"))
-
-  /** [[ivfPqProbes]] with residual query vectors (window routing form). */
-  def ivfPqResidualProbes(queries: DataFrame, centroids: DataFrame,
-      nprobe: Int = 2, queryIdCol: String = "query_id",
-      vecCol: String = "embedding"): DataFrame =
-    residualizeProbes(ivfPqProbes(queries, centroids, nprobe, queryIdCol,
-      vecCol), centroids, queryIdCol)
-
-  /** [[ivfPqProbesAgg]] with residual query vectors (bounded-aggregate
-    * routing form — no WindowExec, the huge-query-batch path). */
-  def ivfPqResidualProbesAgg(queries: DataFrame, centroids: DataFrame,
-      nprobe: Int = 2, queryIdCol: String = "query_id",
-      vecCol: String = "embedding"): DataFrame =
-    residualizeProbes(ivfPqProbesAgg(queries, centroids, nprobe, queryIdCol,
-      vecCol), centroids, queryIdCol)
 
   /**
    * TRUE-IVFADC top-k (residual encoding — Jégou, Douze & Schmid 2011
@@ -1094,8 +969,8 @@ object Similarity {
    * re-score CANNOT reuse the probes' `q_vec` (those are per-cell
    * residuals, not the query), so the TRUE query vectors come in as
    * their own relation. Shortlist bounded at R per (task, query), exact
-   * re-score via broadcast id-join, final top-k bounded at k — no
-   * WindowExec, no corpus shuffle, same as the raw form.
+   * re-score via broadcast id-join, final top-k bounded at k — no corpus
+   * shuffle, same as the raw form.
    */
   def ivfPqResidualTopKRerankFromIndex(index: DataFrame, probes: DataFrame,
       queries: DataFrame, corpus: DataFrame,
@@ -1454,8 +1329,8 @@ object Similarity {
    * one narrow groupBy on (query, doc) and the final rank window
    * partitions over those same bounded rows — nothing here ever sees
    * corpus-sized data. The heavy lifting stays in the per-system
-   * retrievers, which each keep their own scale form (bm25TopKAgg,
-   * bruteForceTopKAgg, ivfPqTopKRerankFromIndex).
+   * retrievers ([[TextAnalysis.bm25TopK]], [[bruteForceTopK]],
+   * [[ivfPqTopKRerankFromIndex]]), each bounded before its exchange.
    *
    * Output: (query_id, doc_id, rrf, rank), best-first per query.
    */

@@ -361,27 +361,19 @@ object TextAnalysis {
    *
    * The corpus size N is folded into the plan as a broadcast 1-row
    * aggregate (scalar-subquery shape) — no driver-side count at
-   * plan-build time, so one invocation is exactly one job.
+   * plan-build time, so one invocation is exactly one job. The per-doc
+   * rank filter is planned with a partial `WindowGroupLimit` before the
+   * exchange, so each task forwards at most k terms per document.
    */
   def tfIdfTopTerms(docs: org.apache.spark.sql.DataFrame, k: Int = 3,
       textCol: String = "text", idCol: String = "doc_id"): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val scored = tfIdfScores(docs, textCol, idCol)
-    val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("word"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("doc_id", "rank", "word", "tf", "df", "score")
-  }
-
-  /** Shared TF-IDF front end: the scored (doc_id, word, tf, df, score)
-    * relation before any top-k selection. */
-  private def tfIdfScores(docs: org.apache.spark.sql.DataFrame,
-      textCol: String, idCol: String): org.apache.spark.sql.DataFrame = {
     val terms = docs.select(col(idCol).as("doc_id"),
         explode(words(col(textCol))).as("word"))
     val tf = terms.groupBy("doc_id", "word").agg(count(lit(1)).as("tf"))
     val df = terms.groupBy("word").agg(countDistinct(col("doc_id")).as("df"))
     val n = docs.agg(countDistinct(col(idCol)).cast("double").as("__n"))
+    val w = Window.partitionBy("doc_id").orderBy(col("score").desc, col("word"))
     tf.join(broadcast(df), "word")
       .crossJoin(broadcast(n))
       // floor(x*1e4+0.5)/1e4, not round(x, 4): Spark's double round is a
@@ -390,49 +382,9 @@ object TextAnalysis {
       // is non-negative (tf >= 1, df <= n), so half-up floor is identical.
       .withColumn("score",
         floor(col("tf") * log(col("__n") / col("df")) * 1e4 + 0.5) / 1e4)
-  }
-
-  /** Bounded top-k for scored TERM rows — [[topKByScore]]'s shape with a
-    * (word, tf, df) payload and ties to the lexicographically smaller
-    * word. Same scale contract: partial-aggregatable, each map task
-    * forwards at most k rows per key. */
-  private def topKTerms(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    import org.apache.spark.sql.expressions.Aggregator
-    type Term = (Double, String, Long, Long)
-    def better(a: Term, b: Term): Boolean =
-      a._1 > b._1 || (a._1 == b._1 && a._2 < b._2)
-    udaf(new Aggregator[Term, Seq[Term], Seq[Term]] {
-      override def zero: Seq[Term] = Vector.empty
-      private def trim(s: Seq[Term]): Seq[Term] = s.sortWith(better).take(k)
-      override def reduce(buf: Seq[Term], in: Term): Seq[Term] =
-        if (buf.length >= k && !better(in, buf.last)) buf else trim(buf :+ in)
-      override def merge(a: Seq[Term], b: Seq[Term]): Seq[Term] = trim(a ++ b)
-      override def finish(buf: Seq[Term]): Seq[Term] = buf
-      override def bufferEncoder = ExpressionEncoder[Seq[(Double, String, Long, Long)]]()
-      override def outputEncoder = ExpressionEncoder[Seq[(Double, String, Long, Long)]]()
-    }, ExpressionEncoder[(Double, String, Long, Long)]())
-  }
-
-  /**
-   * [[tfIdfTopTerms]] with the per-document rank window replaced by the
-   * bounded top-k aggregate — identical results. At corpus scale the
-   * per-doc window is TF-IDF's dominant shuffle (every distinct
-   * (doc, word) scored row rides the exchange and sorts inside its
-   * document partition); the aggregate caps each map task's
-   * contribution at k rows per document, so the exchange volume is
-   * k·partitions per doc regardless of vocabulary size.
-   */
-  def tfIdfTopTermsAgg(docs: org.apache.spark.sql.DataFrame, k: Int = 3,
-      textCol: String = "text", idCol: String = "doc_id"): org.apache.spark.sql.DataFrame = {
-    val tk = topKTerms(k)
-    tfIdfScores(docs, textCol, idCol)
-      .groupBy("doc_id")
-      .agg(tk(col("score"), col("word"), col("tf"), col("df")).as("__top"))
-      .select(col("doc_id"), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col("doc_id"), (col("__r") + 1).cast("int").as("rank"),
-        col("__e")("_2").as("word"), col("__e")("_3").as("tf"),
-        col("__e")("_4").as("df"), col("__e")("_1").as("score"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("doc_id", "rank", "word", "tf", "df", "score")
   }
 
   /**
@@ -454,26 +406,14 @@ object TextAnalysis {
    * never rides an exchange. The per-(query, doc) term sum folds in TERM
    * ORDER (array_sort over (term, score) structs) so the double score is
    * reproducible across partitionings and engines; ranks break ties by
-   * doc id. With a huge query batch the final per-query window becomes
-   * the bottleneck — [[bm25TopKAgg]] is the same pipeline with the
-   * window swapped for the bounded [[topKByScore]] aggregate; the tf/df
-   * front end is shared.
+   * doc id. The final per-query rank filter is planned with a partial
+   * `WindowGroupLimit` before the exchange, so however large the query
+   * batch, each task forwards at most k rows per query.
    */
   def bm25TopK(docs: DataFrame, queries: DataFrame, k: Int = 10,
       k1: Double = 1.2, b: Double = 0.75, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val agg = bm25Scores(docs, queries, k1, b, idCol, textCol)
-    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))
-    agg.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
-  }
-
-  /** Shared BM25 front end: the per-(query, doc) scored relation
-    * (columns query_id, doc_id, score) before any top-k selection. */
-  private def bm25Scores(docs: DataFrame, queries: DataFrame,
-      k1: Double, b: Double, idCol: String, textCol: String): DataFrame = {
     val dl = docs.select(col(idCol).as("doc_id"),
       size(words(col(textCol))).cast("double").as("dl"))
     val stats = dl
@@ -496,22 +436,28 @@ object TextAnalysis {
       .withColumn("s", col("idf") * (col("tf") * lit(k1 + 1)) /
         (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / col("__avgdl"))))
       .join(broadcast(qTerms), "term")
+    val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))
     scored.groupBy("query_id", "doc_id")
       .agg(aggregate(array_sort(collect_list(struct(col("term"), col("s")))),
         lit(0.0), (acc, e) => acc + e("s")).as("raw"))
       // non-negative → half-up floor == round, without the BigDecimal path
       .withColumn("score", floor(col("raw") * 1e4 + 0.5) / 1e4)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("doc_id"), col("score"), col("rank"))
   }
 
   /**
-   * Bounded top-`k` (score, id) aggregate — the scale replacement for a
-   * per-key rank window. A `row_number` window shuffles EVERY scored row
-   * to its key's partition and sorts there; this Aggregator is
-   * partial-aggregatable, so each map task forwards at most k pairs per
-   * key and the exchange carries k·partitions rows per key no matter how
-   * many candidates were scored. Total order: higher score wins, ties to
-   * the smaller id — merge-order invariant. Returns the best-first
-   * array<struct<score, id>>.
+   * Bounded top-`k` (score, id) aggregate. It is partial-aggregatable, so
+   * each map task forwards at most k pairs per key and the exchange
+   * carries k·partitions rows per key no matter how many candidates were
+   * scored. A `row_number() <= k` filter gets the same per-task bound
+   * from Spark's `WindowGroupLimit`. The aggregate is measured faster
+   * where keys are many and candidates per key few (every vector an
+   * anchor in [[Similarity.hardNegatives]]); it also serves the IVF-PQ
+   * rerank shortlists and [[dsirSelect]]. Total order: higher score
+   * wins, ties to the smaller id — merge-order invariant. Returns the
+   * best-first array<struct<score, id>>.
    */
   def topKByScore(k: Int): org.apache.spark.sql.expressions.UserDefinedFunction = {
     import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -534,26 +480,6 @@ object TextAnalysis {
       override def bufferEncoder = ExpressionEncoder[Seq[(Double, Long)]]()
       override def outputEncoder = ExpressionEncoder[Seq[(Double, Long)]]()
     }, ExpressionEncoder[(Double, Long)]())
-  }
-
-  /**
-   * [[bm25TopK]] with the final per-query rank window replaced by the
-   * bounded [[topKByScore]] aggregate — identical results (same scores,
-   * same ordering, same ranks), different physical shape: no Window, no
-   * per-key full sort, map-side partial aggregation caps every task's
-   * contribution at k rows per query. This is the operating form when
-   * the query batch is huge (a retrieval pass over millions of stored
-   * queries) and the window's key-partitioned sort would dominate.
-   */
-  def bm25TopKAgg(docs: DataFrame, queries: DataFrame, k: Int = 10,
-      k1: Double = 1.2, b: Double = 0.75, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val agg = bm25Scores(docs, queries, k1, b, idCol, textCol)
-    val tk = topKByScore(k)
-    agg.groupBy("query_id").agg(tk(col("score"), col("doc_id")).as("__top"))
-      .select(col("query_id"), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col("query_id"), col("__e")("_2").as("doc_id"),
-        col("__e")("_1").as("score"), (col("__r") + 1).cast("int").as("rank"))
   }
 
   /**

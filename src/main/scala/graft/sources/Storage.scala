@@ -500,9 +500,12 @@ object Storage {
    * otherwise) — at no point is the data unreachable under some catalog
    * name. All path handling goes through the Hadoop FileSystem API, so
    * the swap and old-generation cleanup work unchanged on hdfs:// and
-   * s3a://. Readers that resolved the table BEFORE the swap keep reading
-   * the old snapshot's files (deleted last); new resolutions see the
-   * spec-identical rewritten table.
+   * s3a://. New resolutions see the spec-identical rewritten table. A
+   * DataFrame planned BEFORE the swap does not keep its snapshot: step
+   * (3) deletes the old files before this call returns, so running that
+   * DataFrame afterwards fails with `FAILED_READ_FILE.FILE_NOT_EXIST`
+   * (or, under `spark.sql.files.ignoreMissingFiles`, silently reads no
+   * rows). Re-resolve the table after a rewrite.
    */
   def rewriteInPlace(spark: SparkSession, table: String, bucketCol: String,
       buckets: Int)(rows: DataFrame => DataFrame): Unit = {

@@ -182,6 +182,8 @@ object WatsonNlu {
       .select(col("doc_id") +: roleCols(col("sr")): _*)
 
   /**
+   * Input contract: at most ONE response row per id (not checked).
+   *
    * ALL THREE frames from ONE parse — the q105-style tagged-union shape
    * for the frames family (round-22): one `from_json` of the full
    * response schema and three sequential explodes replace three separate

@@ -810,7 +810,7 @@ object DocumentStreams {
         val spark = batch.sparkSession
         val (cents, books) = quant.get()
         val q = batch.select(col(idCol).as("query_id"), col(vecCol).as(vecCol))
-        val probes = Similarity.ivfPqResidualProbesAgg(q, cents, nprobe,
+        val probes = Similarity.ivfPqResidualProbes(q, cents, nprobe,
           vecCol = vecCol)
         val cells = Storage.pinAndPrune[Int](probes.select("cell_id").distinct(),
           "cell_id", Storage.readTable(spark, indexTable), "cell_id",

@@ -320,6 +320,21 @@ class PipelineOpsSpec extends GraftSuite {
       (8L, 5L), (2L, 2L), (9L, 2L), (4L, 2L), (7L, 2L)))
   }
 
+  test("dupClusters: the iterative path throws when maxRounds is below the " +
+      "diameter, and converges to one cluster when it is not") {
+    // a 60-node path needs 59 propagation rounds plus one to see the
+    // fixpoint; 20 rounds used to return 40 clusters without an error
+    val path = (0L until 59L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val e = intercept[IllegalStateException] {
+      Dedup.dupClusters(path, maxRounds = 20, localEdgeThreshold = 0)
+    }
+    assert(e.getMessage.contains("20 rounds") && e.getMessage.contains("maxRounds = 20"),
+      e.getMessage)
+    val out = Dedup.dupClusters(path, maxRounds = 64, localEdgeThreshold = 0)
+      .as[(Long, Long)].collect()
+    assert(out.length == 60 && out.map(_._2).toSet == Set(0L))
+  }
+
   test("dropNearDuplicates keeps cluster minimum and untouched docs") {
     val pairs = Seq((0L, 1L), (1L, 3L)).toDF("id_a", "id_b")
     val kept = Dedup.dropNearDuplicates(docs, pairs).select("doc_id")
@@ -547,13 +562,6 @@ class PipelineOpsSpec extends GraftSuite {
     val z = TextAnalysis.tfIdfTopTerms(all, k = 2)
       .filter(col("word") === "x").select("score").as[Double].collect()
     assert(z.forall(_ == 0.0))
-    // aggregate form: identical rows under truncating and full k (word
-    // ties and the payload columns must survive the bounded aggregation)
-    for (kk <- Seq(1, 2, 50)) {
-      val w = TextAnalysis.tfIdfTopTerms(docs, k = kk).collect().map(_.toString).sorted.toSeq
-      val a = TextAnalysis.tfIdfTopTermsAgg(docs, k = kk).collect().map(_.toString).sorted.toSeq
-      assert(w == a, s"k=$kk")
-    }
   }
 
   test("dsirWeights == driver-side likelihood-ratio recomputation; select ranks globally") {
@@ -1020,14 +1028,6 @@ class PipelineOpsSpec extends GraftSuite {
     // query 1 = {cat, fish}: doc 1 sums both terms in term order
     assert(out((1, 1L)) == (r4(s(2, 2, 3) + s(1, 1, 3)), 1))
     assert(out((1, 0L)) == (r4(s(1, 2, 2)), 2))
-    // aggregate form: identical rows under a truncating k (tie handling
-    // and ordering must survive the bounded partial aggregation)
-    val w2 = TextAnalysis.bm25TopK(docs, qs, k = 1).collect().map(_.toString).sorted.toSeq
-    val a2 = TextAnalysis.bm25TopKAgg(docs, qs, k = 1).collect().map(_.toString).sorted.toSeq
-    assert(w2 == a2)
-    val wAll = TextAnalysis.bm25TopK(docs, qs, k = 10).collect().map(_.toString).sorted.toSeq
-    val aAll = TextAnalysis.bm25TopKAgg(docs, qs, k = 10).collect().map(_.toString).sorted.toSeq
-    assert(wAll == aAll)
     // topKByScore directly: ties break to the smaller id, k bounds output
     import org.apache.spark.sql.functions.{col => c}
     val pairs = Seq((0, 1.0, 5L), (0, 1.0, 3L), (0, 2.0, 9L), (0, 0.5, 1L))
@@ -1449,8 +1449,9 @@ class PipelineOpsSpec extends GraftSuite {
     // id 9 is the all-zero vector with the opposite label of everything
     // else — every pair involving it has a 0/0 cosine shape. CosineSim's
     // contract maps that to 0.0 (matching the oracle's CASE ... ELSE 0.0),
-    // so the pairs must be RANKED (at 0.0), not dropped, and the window
-    // and bounded-aggregate forms must agree exactly.
+    // so the pairs must be RANKED (at 0.0), not dropped, and a rank
+    // window over every scored candidate must agree exactly with the
+    // bounded aggregate's top-k (the q129 oracle ranks with a window).
     // three all-zero vectors share sign-LSH bucket 0 at any plane count,
     // so opposite-label zero-norm pairs are guaranteed candidates; two
     // normal vectors keep the query non-degenerate.
@@ -1461,9 +1462,13 @@ class PipelineOpsSpec extends GraftSuite {
     ).toDF("vec_id", "embedding", "label")
     val w = Similarity.hardNegatives(pts, k = 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    val a = Similarity.hardNegativesAgg(pts, k = 3).collect()
+    // 5 vectors: k = 100 keeps every candidate, so the window re-ranks all
+    val byWindow = Similarity.hardNegatives(pts, k = 100)
+      .withColumn("rank", row_number().over(org.apache.spark.sql.expressions.Window
+        .partitionBy("anchor_id").orderBy(col("cos").desc, col("neg_id"))))
+      .filter(col("rank") <= 3).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
-    assert(w.sortBy(x => (x._1, x._4)).toSeq == a.sortBy(x => (x._1, x._4)).toSeq)
+    assert(w.sortBy(x => (x._1, x._4)).toSeq == byWindow.sortBy(x => (x._1, x._4)).toSeq)
     assert(w.forall(x => !x._3.isNaN))
     // zero-norm pairs present, RANKED, and scored exactly 0.0
     val zeroPairs = w.filter(x => Set(x._1, x._2).subsetOf(Set(0L, 1L, 2L)))
@@ -1697,7 +1702,7 @@ class PipelineOpsSpec extends GraftSuite {
     val q = pts.filter($"vec_id" < 4).select($"vec_id".as("query_id"), $"embedding")
     val got = Similarity.ivfPqResidualTopKRerankFromIndex(
       Similarity.ivfPqIndexResidual(pts, cents, resBooks),
-      Similarity.ivfPqResidualProbesAgg(q, cents, nprobe = 4),
+      Similarity.ivfPqResidualProbes(q, cents, nprobe = 4),
       q, pts, resBooks, k = 10, r = 60)
       .collect().map(_.toString).sorted.toSeq
     val want = Similarity.bruteForceTopK(pts, q, k = 10)
@@ -1717,16 +1722,6 @@ class PipelineOpsSpec extends GraftSuite {
       nprobe = 4, k = 10))
     assert(resRec >= rawRec,
       s"residual ADC recall $resRec below raw ADC recall $rawRec at equal knobs")
-    // the bounded-aggregate tail is row-identical to the window form on
-    // the SAME residual index + probes (the q155 equivalence, residual
-    // family)
-    val idx = Similarity.ivfPqIndexResidual(pts, cents, resBooks)
-    val probes = Similarity.ivfPqResidualProbes(q, cents, nprobe = 2)
-    assert(Similarity.ivfPqTopKAggFromIndex(idx, probes, resBooks, k = 10)
-      .collect().map(_.toString).sorted.toSeq ==
-      Similarity.ivfPqTopKFromIndex(idx, probes, resBooks, k = 10)
-        .collect().map(_.toString).sorted.toSeq,
-      "aggregate tail diverged from the window form on the residual index")
   }
 
   test("OPQ (Ge 2013): rotation is orthogonal, quantization error never " +

@@ -1,7 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.{Exchange, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.window.{WindowExec, WindowGroupLimitExec,
+  Final => LimitFinal, Partial => LimitPartial}
 import graft.operators.{Dedup, Iob, TextAnalysis}
 
 /** Physical-plan shape claims for the scale-sensitive operators: what the
@@ -238,25 +241,6 @@ class PlanShapeSpec extends GraftSuite {
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
-  test("bm25TopKAgg: no Window, top-k selection is a partial-aggregatable agg") {
-    val docs = (0L until 80L).map(i => (i, s"spark join fast query word$i body"))
-      .toDF("doc_id", "text")
-    val qs = Seq((0, "spark"), (0, "join"), (1, "query")).toDF("query_id", "term")
-    val out = TextAnalysis.bm25TopKAgg(docs, qs, k = 5)
-    val nodes = PlanDigest.allNodes(out.queryExecution.executedPlan)
-    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
-      s"expected the rank window to be gone:\n${out.queryExecution.executedPlan}")
-    // the top-k aggregate must run with a partial (map-side) mode so each
-    // task forwards at most k rows per query before the exchange
-    val partialAggs = nodes.collect {
-      case a: org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
-        if a.aggregateExpressions.exists(_.mode ==
-          org.apache.spark.sql.catalyst.expressions.aggregate.Partial) => a
-    }
-    assert(partialAggs.nonEmpty,
-      s"expected a map-side partial top-k aggregate:\n${out.queryExecution.executedPlan}")
-  }
-
   test("q149 ivfPqTopK: probed-cell scoring is a broadcast join over codes only") {
     // The IVFADC contract: (1) the probe set is broadcast and the scoring
     // join keys on cell_id — rows outside probed cells drop at the join
@@ -274,47 +258,80 @@ class PlanShapeSpec extends GraftSuite {
       s"raw corpus vectors crossed an exchange:\n$planStr")
   }
 
-  test("hardNegativesAgg: no WindowExec anywhere at default (open) valves") {
-    // the aggregate twin's contract: the final rank window is gone and —
-    // with maxBucket/maxCandPerAnchor valves open — nothing else in the
-    // pair pipeline introduces one either
+  test("hardNegatives: no WindowExec anywhere at default (open) valves") {
+    // the bounded-aggregate contract: top-k selection is no rank window
+    // and — with maxBucket/maxCandPerAnchor valves open — nothing else in
+    // the pair pipeline introduces one either
     val emb = (0L until 60L).map(i =>
       (i, (0 until 8).map(d => ((i * 7 + d * 3) % 13 - 6).toDouble), (i % 3).toString))
       .toDF("vec_id", "embedding", "label")
-    val out = operators.Similarity.hardNegativesAgg(emb, k = 3)
+    val out = operators.Similarity.hardNegatives(emb, k = 3)
     assert(out.collect().nonEmpty)
     val nodes = PlanDigest.allNodes(out.queryExecution.executedPlan)
-    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]),
       s"expected the rank window gone:\n${out.queryExecution.executedPlan}")
   }
 
-  test("q155 ivfPqTopKAgg: no WindowExec anywhere (probe routing included)") {
-    // the IVFADC aggregate twin removes BOTH rank windows — the final
-    // per-query top-k AND the queries×C probe-routing sort
-    val out = SparkEntry.queries("q155_ivfpq_agg")(spark, "/root/testdata/sf0.001")
-    assert(out.collect().nonEmpty)
-    val nodes = PlanDigest.allNodes(out.queryExecution.executedPlan)
-    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]),
-      s"expected both rank windows gone:\n${out.queryExecution.executedPlan}")
-  }
-
-  test("q181 stored-index hybrid RRF: retriever sides window-free, the one " +
-      "WindowExec ranks only the fused bounded rows, ANN side bucket-prunes") {
-    // the batch-scale hybrid contract: BM25 side = bounded aggregate,
-    // ANN side = bounded shortlist + rerank over the stored index —
-    // the ONLY window left is the final RRF rank over Σk rows/query
+  test("q181 stored-index hybrid RRF: every retriever-side rank window is " +
+      "group-limited, ANN side bucket-prunes") {
+    // the batch-scale hybrid contract: the BM25 side and the probe
+    // routing are rank windows bounded by a window group limit, the ANN
+    // side is a bounded shortlist + rerank over the stored index — only
+    // the final RRF rank over Σk rows/query is exempt
     val out = SparkEntry.queries("q181_hybrid_stored")(spark, "/root/testdata/sf0.001")
     assert(out.collect().nonEmpty)
     val planStr = out.queryExecution.executedPlan.toString
     val windows = PlanDigest.allNodes(out.queryExecution.executedPlan).collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec => w
+      case w: WindowExec => w
     }
-    assert(windows.size == 1,
-      s"expected exactly the fused-rank window, got ${windows.size}:\n$planStr")
+    // pre-order walk: the first window is the root-most one, the fuse
+    assert(windows.size > 1 && windows.tail.forall(w => w.child match {
+      case l: WindowGroupLimitExec => l.mode == LimitFinal
+      case _ => false
+    }), s"a retriever-side window is not on a Final WindowGroupLimit:\n$planStr")
     val sel = "SelectedBucketsCount: (\\d+) out of (\\d+)".r
       .findFirstMatchIn(planStr)
     assert(sel.isDefined && sel.get.group(1).toInt < sel.get.group(2).toInt,
       s"expected a bucket-pruned stored-index scan on the ANN side:\n$planStr")
+  }
+
+  test("window top-k operators prune to k rows per task before the rank " +
+      "window's shuffle (Partial WindowGroupLimit below the hash exchange)") {
+    import graft.operators.Similarity
+    val e = (0L until 200L).map(i =>
+      (i, Seq.tabulate(8)(d => ((i * 7 + d * 3) % 13 - 6).toFloat))).toDF("vec_id", "embedding")
+    val q = e.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("query_id"), col("embedding"))
+    val cents = Similarity.kmeansFit(e, k = 4, iters = 1)
+    val books = Similarity.pqFitCodebooks(e, m = 4, ksub = 4, iters = 1)
+    val probes = Similarity.ivfPqProbes(q, cents, nprobe = 2)
+    val docs = (0L until 80L).map(i => (i, s"spark join fast query word$i body"))
+      .toDF("doc_id", "text")
+    val qs = Seq((0, "spark"), (0, "join"), (1, "query")).toDF("query_id", "term")
+    val outs = Seq(
+      "bruteForceTopK" -> Similarity.bruteForceTopK(e, q, k = 10),
+      "bm25TopK" -> TextAnalysis.bm25TopK(docs, qs, k = 5),
+      "tfIdfTopTerms" -> TextAnalysis.tfIdfTopTerms(docs, k = 3),
+      "ivfPqProbes" -> probes,
+      "ivfPqTopKFromIndex" -> Similarity.ivfPqTopKFromIndex(
+        Similarity.ivfPqIndex(e, cents, books), probes, books, k = 10))
+    outs.foreach { case (name, out) =>
+      assert(out.collect().nonEmpty, name)
+      val plan = out.queryExecution.executedPlan
+      val rankWindow = PlanDigest.allNodes(plan).collectFirst { case w: WindowExec => w }
+      assert(rankWindow.isDefined, s"$name: no rank window:\n$plan")
+      // the first exchange below the rank window is its own hash shuffle
+      val shuffle = PlanDigest.allNodes(rankWindow.get).collectFirst {
+        case x: ShuffleExchangeExec => x
+      }
+      assert(shuffle.exists(_.outputPartitioning.isInstanceOf[HashPartitioning]),
+        s"$name: no hash exchange below the rank window:\n$plan")
+      assert(shuffle.get.child match {
+        case l: WindowGroupLimitExec => l.mode == LimitPartial
+        case _ => false
+      }, s"$name: the rank window's exchange is not fed by a Partial " +
+        s"WindowGroupLimit:\n$plan")
+    }
   }
 
   test("q180 residual index build: one shuffle-free projection (routing + " +
@@ -415,10 +432,15 @@ class PlanShapeSpec extends GraftSuite {
     assert(p148.contains("__graft_gap"),
       s"gap-band rewrite did not fire on q148:\n${p148.take(1500)}")
     // each explicit SpanJoin operator plans exactly like its declarative
-    // twin: the rule is the only thing that blocks either of them
+    // twin: the rule is the only thing that blocks either of them. The
+    // top-k queries named for deleted aggregate twins run the one kept
+    // operator, so they plan exactly like its query too.
     Seq("q27_adjacent_join" -> "q148_adjacent_rule",
         "q28_overlap_join" -> "q75_overlap_rule",
-        "q29_contain_join" -> "q147_contains_rule").foreach { case (op, twin) =>
+        "q29_contain_join" -> "q147_contains_rule",
+        "q141_bm25_agg" -> "q127_bm25", "q142_ann_brute_agg" -> "q18_ann_brute",
+        "q143_tfidf_agg" -> "q74_tfidf", "q155_ivfpq_agg" -> "q149_ivfpq",
+        "q153_hard_negatives_agg" -> "q129_hard_negatives").foreach { case (op, twin) =>
       assert(PlanDigest.of(SparkEntry.queries(op)(spark, d)) ==
         PlanDigest.of(SparkEntry.queries(twin)(spark, d)), s"$op vs $twin")
     }
