@@ -16,7 +16,9 @@ metrics, then each side's median and quartiles per metric, the change's win
 count on `--metric` (ties count for neither side) and whether the claim rule
 holds: the change wins at least nine tenths of the pairs and the medians
 differ, in the better direction, by more than the parent's interquartile
-range. A run that fails or reports wrong output counts as a loss. The last
+range. A run that fails or reports wrong output counts as a loss; its
+report line's `failures` and the last lines of its stderr are printed
+under the pair. The last
 stdout line is a JSON summary. Reads the metric directions from the change
 checkout's BENCHMARK.json; writes nothing in either checkout besides what
 perfbench/run.py itself writes.
@@ -29,24 +31,28 @@ import statistics
 import subprocess
 import sys
 
+STDERR_TAIL = 20  # stderr lines printed for a failed run
+
 
 def run(checkout, workload, seed, seconds):
-    """One perfbench run; its result object, or None when it failed."""
+    """One perfbench run: (its metrics, None), or (None, why it failed) when
+    it exited non-zero, printed no result or reported wrong output."""
     proc = subprocess.run(
         [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
          "--seconds", str(seconds)],
-        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL, text=True)
+        cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True)
     lines = proc.stdout.strip().splitlines()
-    if proc.returncode != 0 or not lines:
-        return None
+    tail = "\n".join(proc.stderr.strip().splitlines()[-STDERR_TAIL:])
     try:
-        result = json.loads(lines[-1])
+        result = json.loads(lines[-1]) if lines else None
     except ValueError:
-        return None
+        result = None
+    if proc.returncode != 0 or result is None:
+        return None, f"exit {proc.returncode}, no result line; stderr tail:\n{tail}"
     if result.get("correct") is not True:
-        return None
-    return {k: v["value"] for k, v in result["metrics"].items()}
-
+        return None, (f"failed {result.get('failed')} of {result.get('attempted')}: "
+                      f"{result.get('failures')}; stderr tail:\n{tail}")
+    return {k: v["value"] for k, v in result["metrics"].items()}, None
 
 def quartiles(xs):
     """(q1, median, q3) of at least one value."""
@@ -76,7 +82,9 @@ def main():
     for i in range(a.pairs):
         seed = a.seed_base + i
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        got = {side: run(sides[side], a.workload, seed, a.seconds) for side in order}
+        got, why = {}, {}
+        for side in order:
+            got[side], why[side] = run(sides[side], a.workload, seed, a.seconds)
         for side in sides:
             runs[side].append(got[side])
         cells = []
@@ -85,6 +93,9 @@ def main():
             cells.append(f"{side} " + ("FAILED" if m is None else
                          " ".join(f"{k}={m[k]:.4g}" for k in better if k in m)))
         print(f"pair {i} seed {seed} ({order[0]} first): " + " | ".join(cells), flush=True)
+        for side in sides:
+            if why[side]:
+                print(f"  {side} seed {seed} FAILED: {why[side]}", flush=True)
 
     summary = {"workload": a.workload, "pairs": a.pairs, "metric": a.metric, "sides": {}}
     for side in sides:

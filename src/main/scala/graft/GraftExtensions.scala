@@ -16,6 +16,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *
  * (Also usable via spark.sql.extensions=graft.GraftExtensions.)
  *
+ * It also injects the span-join rewrite rule ([[graft.plans.SpanJoinRewrite]])
+ * and the `IN`-list bucket-pruning planner strategy
+ * (`org.apache.spark.sql.graft.BucketPruning`).
+ *
  * Under `withExtensions` it also sets two JVM-wide defaults before the
  * session's SparkConf exists: the generated-class cache size
  * ([[GraftConf.CodegenCacheEntries]]) and `spark.hadoop.fs.file.impl`
@@ -75,6 +79,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       }))
     // auto-rewrite naive span-overlap theta-joins into blocked equi-joins
     ext.injectOptimizerRule(_ => graft.plans.SpanJoinRewrite)
+    // bucket pruning for IN lists from one bucket-id projection
+    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graft.BucketPruning)
   }
 }
 

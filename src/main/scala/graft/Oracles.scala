@@ -238,13 +238,23 @@ object Oracles {
       s"THEN CAST(power(2.0, p) AS BIGINT) ELSE 0 END)) AS BIGINT)"
 
   /** Hashed-family sign-LSH bucket (mirror of Dedup.signBucketHashed,
-    * nPlanes=8): +x iff ((i)*(p+7919)) mod 104729 is even, DuckDB's list
-    * lambda index i being 1-based = the engine's (j+1). */
-  def bucketH(v: String): String =
+    * nPlanes=8): +x iff bit 31 of Dedup.hashedPlanePositive's hash of
+    * (i, p + 1) is 0, DuckDB's list lambda index i being 1-based = the
+    * engine's (j+1). Each hash step binds its input once through a
+    * one-element list_transform; every intermediate stays below 2^62. */
+  def bucketH(v: String): String = {
+    def step(e: String, h: String, f: String) = s"list_transform([$e], $h -> $f)[1]"
+    val x0 = "((i * 2654435761 + (p + 1) * 40499) % 4294967296)"
+    val x1 = step(x0, "h1", "xor(h1, h1 >> 15)")
+    val x2 = step(x1, "h2", "(h2 * 739982445) % 4294967296")
+    val x3 = step(x2, "h3", "xor(h3, h3 >> 12)")
+    val x4 = step(x3, "h4", "(h4 * 695872825) % 4294967296")
+    val x5 = step(x4, "h5", "xor(h5, h5 >> 15)")
     s"CAST(list_sum(list_transform(generate_series(0, 7), p -> " +
       s"CASE WHEN list_reduce(list_prepend(0.0, list_transform($v, (x, i) -> " +
-      s"CASE WHEN (i * (p + 7919)) % 104729 % 2 = 0 THEN x ELSE -x END)), (u, w) -> u + w) > 0 " +
+      s"CASE WHEN ($x5 >> 31) & 1 = 0 THEN x ELSE -x END)), (u, w) -> u + w) > 0 " +
       s"THEN CAST(power(2.0, p) AS BIGINT) ELSE 0 END)) AS BIGINT)"
+  }
 
   /** Probe-bucket list (own bucket + all single-bit flips) from CTE with
     * columns (id, bucket) → rows (id, pb). */

@@ -1,8 +1,8 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
-import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.BertDocGenerator
 import org.apache.spark.sql.types._
 import scala.reflect.ClassTag
 
@@ -15,18 +15,19 @@ import scala.reflect.ClassTag
  * array arithmetic and unit-tested against goldens generated from the
  * reference implementation.
  *
- * The tokenizer and the embedding model are PLUGGABLE host functions run
- * inside `mapPartitions`/`flatMapGroups` (the reference does the same with
- * lazy `transformers`/`torch` imports, io/bert.py:74-76, 141-143): this
- * sandbox has no JVM BERT runtime, so the defaults are clearly-marked
- * deterministic stubs — the Spark-side plumbing (schema, per-document
- * grouping, batched windows, stitch-back) is real and is what a user swaps
- * a DJL/ONNX model into.
+ * The tokenizer and the embedding model are PLUGGABLE host functions (the
+ * reference does the same with lazy `transformers`/`torch` imports,
+ * io/bert.py:74-76, 141-143): this sandbox has no JVM BERT runtime, so the
+ * defaults are clearly-marked deterministic stubs — the Spark-side
+ * plumbing (schema, per-document pass, batched windows, stitch-back) is
+ * real and is what a user swaps a DJL/ONNX model into.
  *
- * Scale notes: tokenization is a narrow mapPartitions (no shuffle);
- * embedding is one shuffle to co-locate each document's tokens, then
- * batched model calls per document group — the unit of parallelism is the
- * document, matching the engine's global partitioning contract.
+ * Scale notes: the unit of parallelism is the document. [[conllToBert]]
+ * and [[makeBertTokens]] run one native generator per document
+ * (`BertDocGenerator`) that tokenizes once and, for `conllToBert`, tags
+ * and embeds the pieces in the same call; the only shuffles are the ones
+ * that bring each document's entity spans to its text. [[addEmbeddings]]
+ * keeps its own one-shuffle form for callers that hold a token relation.
  */
 object Bert {
 
@@ -122,33 +123,15 @@ object Bert {
     }
   }
 
-  private val bertTokSchema = StructType(Seq(
-    StructField("doc_id", LongType),
-    StructField("token_id", IntegerType),
-    StructField("span", graft.types.spanType),
-    StructField("input_id", LongType),
-    StructField("token_type_id", IntegerType),
-    StructField("attention_mask", IntegerType),
-    StructField("special_tokens_mask", BooleanType)))
-
   /**
    * Tokenize documents for BERT: one output row per token with span,
    * input_id and mask columns (reference make_bert_tokens schema,
-   * io/bert.py:110-119). Narrow mapPartitions — the tokenizer is
-   * instantiated once per partition, no shuffle.
+   * io/bert.py:110-119). One native generator per document — no shuffle,
+   * no row encoder; the tokenizer ships with the plan.
    */
-  def makeBertTokens(docs: DataFrame, tokenizer: BertTokenizer = stubTokenizer): DataFrame = {
-    val in = docs.select(col("doc_id").cast("long"), col("text"))
-    in.mapPartitions { rows =>
-      rows.flatMap { r =>
-        val docId = r.getLong(0)
-        tokenizer(r.getString(1)).zipWithIndex.map { case (t, i) =>
-          Row(docId, i, Row(t.begin, t.end), t.inputId, t.tokenTypeId,
-            t.attentionMask, t.special)
-        }
-      }
-    }(Encoders.row(bertTokSchema))
-  }
+  def makeBertTokens(docs: DataFrame, tokenizer: BertTokenizer = stubTokenizer): DataFrame =
+    docs.select(col("doc_id").cast("long").as("doc_id"),
+      BertDocGenerator(col("text"), None, tokenizer, None, 0, 0))
 
   // ---- pluggable embedding host (add_embeddings, io/bert.py:123-157) ----
 
@@ -260,9 +243,18 @@ object Bert {
    * One-call corpus→BERT-features composition (`conll_to_bert`, reference:
    * io/bert.py:160-199): IOB-tagged corpus tokens → entity spans → BERT
    * tokenization → entity alignment onto BERT tokens → per-BERT-token IOB
-   * tags → token classes → (optionally) embeddings. One DAG — tokenize is
-   * a narrow map, alignment is two doc-keyed equi-joins, embedding is the
-   * one per-document shuffle.
+   * tags → token classes → (optionally) embeddings.
+   *
+   * One pass per document: the entity spans ([[Iob.iobToSpans]]) are
+   * collected per document as `array<struct<begin, end, ent_type>>`,
+   * left-joined onto `docs` on doc_id, and one `BertDocGenerator` call per
+   * document tokenizes its text once, aligns and tags the entities and runs
+   * the model over its windows. The result equals the composition of the
+   * public pieces — [[makeBertTokens]] → `Align.alignToTokens(validate =
+   * false)` → [[Iob.spansToIob]] → [[Iob.addTokenClasses]] →
+   * [[addEmbeddings]] — which `BertSpec` pins; an entity whose char bounds
+   * are not piece bounds is dropped, as there. [[Iob.addTokenClasses]]
+   * stays the projection on top.
    *
    * @param corpusToks corpus tokens with doc_id, token_id, span, ent_iob
    *                   (IOB2), ent_type
@@ -273,19 +265,19 @@ object Bert {
       tokenizer: BertTokenizer = stubTokenizer, model: BertModel = stubModel(8),
       computeEmbeddings: Boolean = true,
       overlap: Int = 32, nonOverlap: Int = 64): DataFrame = {
-    val entities = Iob.iobToSpans(corpusToks)
-    val bertToks = makeBertTokens(docs, tokenizer)
-    // entity CHAR spans land on BERT piece boundaries because pieces
-    // partition words (validate=false: skip the eager check)
-    val aligned = Align.alignToTokens(bertToks,
-      entities.select(col("doc_id"),
-        graft.spans.span(col("span")("begin"), col("span")("end")).as("span"),
-        col("ent_type")),
-      validate = false)
-    val taggedBert = Iob.spansToIob(bertToks, aligned)
-    val classed = Iob.addTokenClasses(taggedBert,
-      Iob.makeIobTagCategories(entityTypes))
-    if (computeEmbeddings) addEmbeddings(classed, model, overlap, nonOverlap)
+    val ents = Iob.iobToSpans(corpusToks)
+      .groupBy(col("doc_id"))
+      .agg(collect_list(struct(col("span")("begin").as("begin"),
+        col("span")("end").as("end"), col("ent_type"))).as("__ents"))
+      .select(col("doc_id").cast("long").as("__e_doc"), col("__ents"))
+    val withEnts = docs.select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      .join(ents, col("doc_id") === col("__e_doc"), "left")
+    val tagged = withEnts.select(col("doc_id"),
+      BertDocGenerator(col("text"), Some(col("__ents")), tokenizer,
+        if (computeEmbeddings) Some(model) else None, overlap, nonOverlap))
+    val classed = Iob.addTokenClasses(tagged, Iob.makeIobTagCategories(entityTypes))
+    if (computeEmbeddings) classed.select((classed.columns.filter(_ != "embedding") :+
+      "embedding").map(col).toIndexedSeq: _*)
     else classed
   }
 

@@ -83,10 +83,11 @@ object Cleaning {
    * entities), this engine produces SQL NULL — the same sum/mean-skipping
    * semantics, minus NaN's hash instability.
    *
-   * Scale shape: three partial-aggregatable groupBys over narrow key
-   * columns + two single-row aggregates; the per-type relation is tiny
-   * (|tag set| rows), so the average rows cost one broadcast each. No
-   * driver actions.
+   * Scale shape: three partial-aggregatable aggregates and no join. Each
+   * input is read once into per-(span id, type) counts; ONE rollup over
+   * the type yields the per-type rows and the micro row (its grand total)
+   * together; one single-row aggregate over that tiny result derives the
+   * macro row and the micro support. No driver actions.
    */
   def f1ScoreReportIob(predicted: DataFrame, corpus: DataFrame,
       spanIdCols: Seq[String] = Seq("fold", "doc_num", "span"),
@@ -94,50 +95,46 @@ object Cleaning {
     val keys = spanIdCols :+ entityTypeCol
     val pick = keys.map(col)
     // ONE pass over each input instead of five (round-21 optimization —
-    // guide §2.3 "aggregate before you shuffle"): tag the sides, count
-    // per (span id, type) key, then roll up per type. Per key the TP
-    // join's cardinality is exactly (pred rows) x (corpus rows), so
-    // sum(__p * __c) IS the inner-join count; sum(__p)/sum(__c) are the
-    // plain side counts. A type absent from a side had NO row after the
-    // old per-side aggregate (NULL through the full outer joins), which
-    // here is a zero sum — when(>0) restores the exact NULL behavior.
+    // guide §2.3 "aggregate before you shuffle"): tag the sides and count
+    // per (span id, type) key. Per key the TP join's cardinality is
+    // exactly (pred rows) x (corpus rows), so sum(__p * __c) IS the
+    // inner-join count; sum(__p)/sum(__c) are the plain side counts.
     val perKey = predicted.select(pick: _*)
       .withColumn("__p", lit(1L)).withColumn("__c", lit(0L))
       .unionByName(corpus.select(pick: _*)
         .withColumn("__p", lit(0L)).withColumn("__c", lit(1L)))
       .groupBy(pick: _*)
       .agg(sum(col("__p")).as("__p"), sum(col("__c")).as("__c"))
-    val perType = perKey.groupBy(col(entityTypeCol))
-      .agg(sum(col("__p") * col("__c")).as("__tp"),
+    // A type absent from a side is a zero sum here (pandas NaN); when(>0)
+    // makes it NULL. The micro row sums the NULL-ified per-type counts,
+    // which is the NULL-ified grand total: counts are never negative, so
+    // the sum of the positive ones is positive iff the total is.
+    def nz(c: String): Column = when(col(c) > 0, col(c).cast("double"))
+    val rows = perKey.rollup(col(entityTypeCol))
+      .agg(grouping_id().as("__g"), sum(col("__p") * col("__c")).as("__tp"),
         sum(col("__p")).as("__pp"), sum(col("__c")).as("__ap"))
-      .select(col(entityTypeCol).as("label"),
-        when(col("__tp") > 0, col("__tp").cast("double")).as("__tp"),
-        when(col("__pp") > 0, col("__pp").cast("double")).as("__pp"),
-        when(col("__ap") > 0, col("__ap").cast("double")).as("__ap"))
-    // micro row: column sums (sum skips NULLs == pandas skipna)
-    val micro = perType.agg(sum("__tp").as("__tp"), sum("__pp").as("__pp"),
-        sum("__ap").as("__ap"))
-      .select(lit("Micro-avg").as("label"), col("__tp"), col("__pp"), col("__ap"))
-    val withMicro = perType.unionByName(micro)
-      .withColumn("precision", col("__tp") / col("__pp"))
-      .withColumn("recall", col("__tp") / col("__ap"))
-    // macro row: mean over per-type rows INCLUDING Micro-avg (reference
-    // order of operations), avg skips NULLs like pandas mean
-    val macroRow = withMicro.agg(avg("__tp").as("__tp"), avg("__pp").as("__pp"),
-        avg("__ap").as("__ap"),
-        avg("precision").as("precision"), avg("recall").as("recall"))
-      .select(lit("Macro-avg").as("label"), col("__tp"), col("__pp"),
-        col("__ap"), col("precision"), col("recall"))
-    val all = withMicro.unionByName(macroRow)
+      .select(col("__g"), struct(
+        when(col("__g") === 0, col(entityTypeCol).cast("string"))
+          .otherwise(lit("Micro-avg")).as("label"),
+        (nz("__tp") / nz("__pp")).as("precision"),
+        (nz("__tp") / nz("__ap")).as("recall"),
+        nz("__ap").as("support")).as("__row"))
+    // macro row: mean over the per-type rows INCLUDING Micro-avg
+    // (reference order of operations), avg skips NULLs like pandas mean;
+    // its support is the Micro total. An empty input has no rollup rows:
+    // the micro row is then all NULL, as the sum over no types is.
+    rows.agg(collect_list(when(col("__g") === 0, col("__row"))).as("__types"),
+        max(when(col("__g") =!= 0, col("__row"))).as("__micro"),
+        avg(col("__row.precision")).as("__mp"), avg(col("__row.recall")).as("__mr"))
+      .select(inline(concat(col("__types"), array(
+        struct(lit("Micro-avg").as("label"), col("__micro.precision").as("precision"),
+          col("__micro.recall").as("recall"), col("__micro.support").as("support")),
+        struct(lit("Macro-avg").as("label"), col("__mp").as("precision"),
+          col("__mr").as("recall"), col("__micro.support").as("support"))))))
       .withColumn("f1_score",
         when(col("precision") + col("recall") > 0,
           lit(2.0) * col("precision") * col("recall") /
             (col("precision") + col("recall"))))
-    // support = actual positives; the Macro row reports the Micro total
-    all.crossJoin(broadcast(micro.select(col("__ap").as("__micro_support"))))
-      .withColumn("support",
-        when(col("label") === "Macro-avg", col("__micro_support"))
-          .otherwise(col("__ap")))
       .select("label", "precision", "recall", "f1_score", "support")
   }
 

@@ -379,9 +379,12 @@ object Dedup {
     * oracle-mirrored 8-plane queries (q17/q19/q120, where the exact
     * verify makes extra candidates a constant-factor cost), fatal for a
     * caller using nPlanes as the bucket-count SCALE knob. This family's
-    * coefficient is the parity of a Weyl-style product — distinct planes
-    * for every p — so bucket count really is 2^nPlanes. Mirrored exactly
-    * in the oracle's `bucketH` SQL. */
+    * coefficient is one bit of a mixed 32-bit integer hash of (plane,
+    * dim) ([[hashedPlanePositive]]), so no two planes coincide or negate
+    * each other: `PipelineOpsSpec` pins that for dim 8/32/128 up to 16
+    * planes, and that 2,000 seeded vectors fill at least 1,000 of the
+    * 4,096 buckets of 12 planes. Mirrored exactly in the oracle's
+    * `bucketH` SQL. */
   def signBucketHashed(vec: Column, nPlanes: Int): Column = {
     val np = nPlanes
     val bucketUdf = udf((v: Seq[Double]) => Option(v).map { v =>
@@ -391,9 +394,7 @@ object Dedup {
         var proj = 0.0
         var j = 0
         while (j < v.length) {
-          // +1 iff ((j+1)*(p+7919)) mod 104729 is even (1-based dim to
-          // match the oracle's 1-based list lambda index)
-          proj += (if ((j + 1).toLong * (p + 7919) % 104729 % 2 == 0) v(j) else -v(j))
+          proj += (if (hashedPlanePositive(p, j)) v(j) else -v(j))
           j += 1
         }
         if (proj > 0) bucket |= 1L << p
@@ -402,6 +403,20 @@ object Dedup {
       bucket
     })
     bucketUdf(vec)
+  }
+
+  /** Sign of the hashed family's coefficient of plane `p` on dimension
+    * `j` (0-based): bit 31 of a murmur-style finalizer over `(j+1,
+    * p+1)`, +1 iff it is 0. Every intermediate stays below 2^62, so the
+    * oracle's BIGINT SQL computes the same bits. */
+  private[graft] def hashedPlanePositive(p: Int, j: Int): Boolean = {
+    var x = ((j + 1).toLong * 2654435761L + (p + 1).toLong * 40499L) & 0xffffffffL
+    x ^= x >>> 15
+    x = (x * 0x2c1b3c6dL) & 0xffffffffL
+    x ^= x >>> 12
+    x = (x * 0x297a2d39L) & 0xffffffffL
+    x ^= x >>> 15
+    (x & 0x80000000L) == 0
   }
 
   /** A bucket column expanded to itself + every single-bit-flip probe —

@@ -316,8 +316,8 @@ object Similarity {
    * hash families to tighten it.
    *
    * Buckets come from [[graft.operators.Dedup.signBucketHashed]] — the
-   * hashed hyperplane family whose bucket count really is 2^nPlanes
-   * (the legacy 8-plane pattern is periodic and caps out at 16 buckets,
+   * hashed hyperplane family whose nPlanes planes are all distinct, so up
+   * to 2^nPlanes buckets (the legacy 8-plane pattern is periodic and caps out at 16 buckets,
    * which would make the nPlanes knob below a no-op).
    *
    * Two SCALE knobs, both recall trades:

@@ -173,6 +173,91 @@ class BertSpec extends GraftSuite {
     assert(!lean.columns.contains("embedding"))
   }
 
+  test("conllToBert equals the composition of the public pieces: seeded " +
+      "corpus, overlapping and off-boundary entities, empty and NULL text, " +
+      "overlapping pieces") {
+    import spark.implicits._
+    import graft.operators.{Align, Iob}
+    val rnd = new scala.util.Random(17)
+    val types = Seq("PER", "LOC", "ORG")
+    val words = Seq("alpha", "be", "gamma", "delta", "epsilonic", "z", "eta", "thetas")
+    // (doc_id, text, tokens (token_id, begin, end, iob, type))
+    val docsRows = (0L until 10L).map { d =>
+      val ws = Seq.fill(6 + rnd.nextInt(30))(words(rnd.nextInt(words.size)))
+      val offs = ws.scanLeft(0)((o, w) => o + w.length + 1).init
+      val tags = ws.indices.map { i =>
+        // doc 3 and 4 have no entities; the rest a seeded B/I/O mix, a
+        // few B tags without a type
+        if (d == 3 || d == 4) ("O", null)
+        else rnd.nextInt(4) match {
+          case 0 => ("B", if (rnd.nextInt(8) == 0) null else types(rnd.nextInt(3)))
+          case 1 => ("I", types(rnd.nextInt(3)))
+          case _ => ("O", null)
+        }
+      }
+      val toks = ws.indices.map { i =>
+        val (b, e) = (offs(i), offs(i) + ws(i).length)
+        // doc 0: token 1's char span runs over token 2 (its entity
+        // overlaps the next one); doc 1: token 0 begins inside a piece
+        val span = if (d == 0 && i == 1) (b, offs(2) + ws(2).length)
+          else if (d == 1 && i == 0) (b + 1, e) else (b, e)
+        (i, span._1, span._2, tags(i)._1, tags(i)._2)
+      }
+      val fixed = if (d == 0) toks.updated(1, toks(1).copy(_4 = "B", _5 = "PER"))
+        .updated(2, toks(2).copy(_4 = "B", _5 = "LOC"))
+        else if (d == 1) toks.updated(0, toks(0).copy(_4 = "B", _5 = "ORG")) else toks
+      (d, ws.mkString(" "), fixed)
+    }
+    val corpus = docsRows.flatMap { case (d, _, toks) =>
+        toks.map { case (i, b, e, iob, ty) => (d, i, b, e, iob, ty) } }
+      .toDF("doc_id", "token_id", "b", "e", "ent_iob", "ent_type")
+      .select(col("doc_id"), col("token_id"), spans.span(col("b"), col("e")).as("span"),
+        col("ent_iob"), col("ent_type"))
+    val docs = (docsRows.map { case (d, t, _) => (d, t) } ++
+        Seq((20L, ""), (21L, null.asInstanceOf[String]))).toDF("doc_id", "text")
+    // every word as one piece AND as 3-char chunks: pieces overlap, and a
+    // char offset begins or ends several pieces
+    val overlapping: Bert.BertTokenizer = (text: String) =>
+      if (text == null) Seq.empty
+      else Bert.BertTok(0, 0, Bert.ClsId, 0, 1, special = true) +:
+        graft.operators.Tokenize.tokenOffsets(text).flatMap { case (b, e) =>
+          Bert.BertTok(b, e, 1000L + b, 0, 1, special = false) +:
+            (b until e by 3).map(pb =>
+              Bert.BertTok(pb, math.min(pb + 3, e), 2000L + pb, 1, 1, special = false))
+        } :+ Bert.BertTok(text.length, text.length, Bert.SepId, 0, 1, special = true)
+    def composed(tok: Bert.BertTokenizer, ov: Int, nov: Int) = {
+      val bertToks = Bert.makeBertTokens(docs, tok)
+      val aligned = Align.alignToTokens(bertToks,
+        Iob.iobToSpans(corpus).select(col("doc_id"),
+          spans.span(col("span")("begin"), col("span")("end")).as("span"),
+          col("ent_type")),
+        validate = false)
+      Bert.addEmbeddings(Iob.addTokenClasses(Iob.spansToIob(bertToks, aligned),
+        Iob.makeIobTagCategories(types)), Bert.stubModel(4), ov, nov)
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case s: scala.collection.Seq[_] => s.toList
+        case r: org.apache.spark.sql.Row => r.toSeq.toList
+        case v => v
+      }.toList).toSeq.sortBy(r => (r(0).asInstanceOf[Long], r(1).asInstanceOf[Int]))
+    for ((tok, ov, nov) <- Seq((Bert.stubTokenizer, 2, 4), (Bert.stubTokenizer, 32, 64),
+        (overlapping, 2, 4))) {
+      val out = Bert.conllToBert(corpus, docs, types, tok, Bert.stubModel(4),
+        overlap = ov, nonOverlap = nov)
+      val want = composed(tok, ov, nov)
+      assert(out.columns.toSeq == want.columns.toSeq)
+      val (got, exp) = (rows(out), rows(want))
+      assert(got.size == exp.size, s"${got.size} rows, composition has ${exp.size}")
+      got.zip(exp).foreach { case (g, e) => assert(g == e, s"row differs:\n$g\n$e") }
+      // the corpus exercises every case the generator handles
+      val tagged = exp.groupBy(_(0)).view.mapValues(_.map(_(7))).toMap
+      assert(tagged(0L).contains("B") && tagged(0L).contains("I"))
+      assert(tagged(3L).forall(_ == "O") && tagged(20L).forall(_ == "O"))
+      assert(!tagged.contains(21L))
+    }
+  }
+
   test("windowRows matches seqToWindows flat expansion") {
     import spark.implicits._
     val toks = (0 until 13).map(i => (3L, i)).toDF("doc_id", "token_id")

@@ -622,6 +622,24 @@ class PipelineOpsSpec extends GraftSuite {
     assert(b.count(_.isNullAt(0)) == 1)
   }
 
+  test("signBucketHashed: distinct planes, and nPlanes scales the bucket count") {
+    // no plane equals or negates another, so every plane is its own bit
+    for (dim <- Seq(8, 32, 128)) {
+      val planes = (0 until 16).map(p => (0 until dim).map(j => Dedup.hashedPlanePositive(p, j)))
+      for (a <- planes.indices; b <- a + 1 until planes.size)
+        assert(planes(a) != planes(b) && planes(a) != planes(b).map(!_),
+          s"dim $dim: planes $a and $b are equal or negated")
+    }
+    // 2,000 seeded Gaussian vectors fill at least 1,000 of 12 planes' 4,096
+    // buckets (a family with fewer distinct planes fills at most 2^planes)
+    val rnd = new scala.util.Random(5)
+    val vecs = (0L until 2000L).map(i => (i, Seq.fill(32)(rnd.nextGaussian())))
+      .toDF("vec_id", "embedding")
+    val filled = vecs.select(Dedup.signBucketHashed(col("embedding"), 12).as("b"))
+      .distinct().count()
+    assert(filled >= 1000, s"12 planes fill only $filled buckets")
+  }
+
   test("stratifiedSample: caps each stratum, keep set is id-deterministic") {
     val d = (0L until 20L).map(i => (i, s"doc $i", if (i % 2 == 0) "web" else "book"))
       .toDF("doc_id", "text", "source")

@@ -210,6 +210,57 @@ class PlanShapeSpec extends GraftSuite {
       s"expected batch-side broadcast joins, got:\n$planStr")
   }
 
+  /** The number of Spark jobs `body` starts (the listener bus is drained
+    * before counting). */
+  private def jobsOf(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.GraftTestAccess.drainListeners(spark.sparkContext)
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("conllToBert: one generator pass per document, no row-encoded " +
+      "map, at most 4 exchanges") {
+    import graft.operators.Bert
+    import org.apache.spark.sql.execution.{AppendColumnsExec, GenerateExec, MapPartitionsExec}
+    val words = Seq("alpha", "key", "value", "beta")
+    val corpus = (0L until 20L).flatMap(d => words.indices.map(i =>
+        (d, i, i * 6, i * 6 + words(i).length, if (i == 1) "B" else if (i == 2) "I" else "O",
+          if (i == 1 || i == 2) "K" else null)))
+      .toDF("doc_id", "token_id", "b", "e", "ent_iob", "ent_type")
+      .select(col("doc_id"), col("token_id"), spans.span(col("b"), col("e")).as("span"),
+        col("ent_iob"), col("ent_type"))
+    val docs = (0L until 20L).map(d => (d, "alpha key   value beta")).toDF("doc_id", "text")
+    val out = Bert.conllToBert(corpus, docs, Seq("K"))
+    assert(out.count() == 20 * 8)
+    out.collect() // finalize the adaptive plan
+    val nodes = PlanDigest.allNodes(out.queryExecution.executedPlan)
+    val plan = out.queryExecution.executedPlan
+    assert(nodes.count(_.isInstanceOf[GenerateExec]) == 1, s"expected one Generate:\n$plan")
+    assert(!nodes.exists(n => n.isInstanceOf[MapPartitionsExec] ||
+      n.isInstanceOf[AppendColumnsExec]), s"a row-encoded map is back:\n$plan")
+    assert(nodes.count(_.isInstanceOf[Exchange]) <= 4, s"more than 4 exchanges:\n$plan")
+  }
+
+  test("f1ScoreReportIob runs at most 4 jobs") {
+    import graft.operators.Cleaning
+    val corpus = (0L until 300L).map(i => (i % 30, i, Seq("A", "B", "C")(i.toInt % 3)))
+      .toDF("doc_id", "tok", "ent_type")
+    val pred = corpus.filter(col("tok") % 4 =!= 0)
+    val report = Cleaning.f1ScoreReportIob(pred, corpus, Seq("doc_id", "tok"))
+    var rows = 0
+    val jobs = jobsOf { rows = report.collect().length }
+    assert(rows == 5)
+    assert(jobs <= 4, s"f1ScoreReportIob ran $jobs jobs")
+  }
+
   test("makeTable with explicit columnKeys launches no inference job") {
     // Explicit keys are the scale-path contract: constructing the pivot
     // must stay fully lazy — no pivot-value-inference scan of the cells
@@ -457,7 +508,9 @@ class PlanShapeSpec extends GraftSuite {
     val pinned = Map(
       "q89_corpus_v2" -> "exchanges=6 joins[BroadcastHashJoin=2,SortMergeJoin=1] cartesian=0",
       "q77_training_corpus" -> "exchanges=2 joins[SortMergeJoin=1] cartesian=0",
-      "q93_conll_to_bert" -> "exchanges=8 joins[SortMergeJoin=3] cartesian=0",
+      // one generator pass per document: the piece relation's alignment
+      // and embedding joins are gone, the entity arrays broadcast to docs
+      "q93_conll_to_bert" -> "exchanges=2 joins[BroadcastHashJoin=1] cartesian=0",
       // round-22 refresh (intentional improvements): q92 lost one
       // Exchange to the famA/famB union→explode collapse; q61 lost both
       // joins and both exchanges to the one-parse WatsonNlu.frames form

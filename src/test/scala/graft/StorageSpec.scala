@@ -1449,4 +1449,81 @@ class StorageSpec extends GraftSuite {
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
+
+  test("BucketPruning: an IN list selects the buckets and rows FileSourceStrategy " +
+      "alone selects, at every list size, with NULL, and with bucketing off") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.datasources.FileSourceStrategy
+    val dir = java.nio.file.Files.createTempDirectory("graft_bucket_in_t")
+    dir.toFile.deleteOnExit()
+    Storage.writeBucketed((0L until 3000L).map(i => (i * 7 % 5003, i)).toDF("pb", "id"),
+      "bucket_in_t", s"$dir/t", bucketCol = "pb", buckets = 8)
+    def buckets(s: Option[FileSourceScanExec]) =
+      s.flatMap(_.optionalBucketSet).map(b => (0 until 8).filter(b.get))
+    val rnd = new scala.util.Random(3)
+    try {
+      for (bucketing <- Seq(true, false)) {
+        spark.conf.set("spark.sql.sources.bucketing.enabled", bucketing.toString)
+        val lists = Seq(1, 15, 16, 400, 5000).map(n => Seq.fill(n)(rnd.nextInt(6000).toLong)) ++
+          Seq(Seq(3L, 7L))
+        for (keys <- lists; withNull <- Seq(false, true)) {
+          val values: Seq[Any] = keys ++ (if (withNull) Seq(null) else Nil)
+          val df = Storage.readTable(spark, "bucket_in_t").filter(col("pb").isin(values: _*))
+          val ours = df.queryExecution.sparkPlan.collectFirst { case s: FileSourceScanExec => s }
+          val alone = FileSourceStrategy(df.queryExecution.optimizedPlan).head
+            .collectFirst { case s: FileSourceScanExec => s }
+          val what = s"${keys.size} keys, null $withNull, bucketing $bucketing"
+          assert(ours.isDefined && buckets(ours) == buckets(alone), what)
+          if (bucketing && keys.size <= 2) assert(buckets(ours).isDefined, what)
+          val want = (0L until 3000L).map(i => (i * 7 % 5003, i))
+            .filter(r => keys.contains(r._1)).sorted
+          assert(df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted == want, what)
+        }
+        // the rules it mirrors beyond IN: equality, OR and AND
+        val mixed = Storage.readTable(spark, "bucket_in_t")
+          .filter((col("pb").isin(1L to 40L: _*) || col("pb") === 4000L) && col("id") > 10L)
+        assert(buckets(mixed.queryExecution.sparkPlan.collectFirst {
+          case s: FileSourceScanExec => s }) ==
+          buckets(FileSourceStrategy(mixed.queryExecution.optimizedPlan).head
+            .collectFirst { case s: FileSourceScanExec => s }))
+      }
+    } finally {
+      spark.conf.unset("spark.sql.sources.bucketing.enabled")
+      spark.sql("DROP TABLE IF EXISTS bucket_in_t")
+    }
+  }
+
+  test("probeStoredSemanticIndex finds a near-hyperplane vector's 1e-4 " +
+      "re-ingest: one plane flips one bucket bit") {
+    import graft.operators.Dedup
+    import graft.streaming.DocumentStreams
+    val rnd = new scala.util.Random(11)
+    val w = (0 until 32).map(j => if (Dedup.hashedPlanePositive(0, j)) 1.0 else -1.0)
+    def dot(a: Seq[Double], b: Seq[Double]) = a.zip(b).map(p => p._1 * p._2).sum
+    val raw = Seq.fill(32)(rnd.nextGaussian())
+    val onPlane = raw.zip(w).map { case (x, c) => x - dot(raw, w) / 32 * c }
+    val noise = Seq.fill(32)(rnd.nextGaussian() * 1e-4)
+    // just off plane 0, on the side the noise pushes away from
+    val side = -math.signum(dot(noise, w)) * 1e-7
+    val v = onPlane.zip(w).map { case (x, c) => x + side * c }
+    val u = v.zip(noise).map(p => p._1 + p._2)
+    val others = (1L to 50L).map(i => (i, Seq.fill(32)(rnd.nextGaussian())))
+    val corpus = ((0L, v) +: others).toDF("vec_id", "embedding")
+    val bits = Seq(v, u).toDF("embedding")
+      .select(Dedup.signBucketHashed(col("embedding"), 12)).collect().map(_.getLong(0))
+    assert(java.lang.Long.bitCount(bits(0) ^ bits(1)) == 1,
+      s"buckets ${bits.mkString(", ")} should differ in plane 0 only")
+    val dir = java.nio.file.Files.createTempDirectory("graft_plane_t")
+    dir.toFile.deleteOnExit()
+    Storage.writeBucketed(Dedup.signBucketIndex(corpus, nPlanes = 12),
+      "plane_idx", s"$dir/idx", bucketCol = "pb", buckets = 8)
+    Storage.writeBucketed(corpus, "plane_cor", s"$dir/cor", bucketCol = "vec_id", buckets = 8)
+    try {
+      val pairs = DocumentStreams.probeStoredSemanticIndex(
+          Seq((100L, u)).toDF("vec_id", "embedding"), "plane_idx", "plane_cor",
+          tau = 0.99, nPlanes = 12)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      assert(pairs == Set((100L, 0L)), s"got $pairs")
+    } finally Seq("plane_idx", "plane_cor").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
 }
