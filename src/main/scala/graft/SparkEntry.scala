@@ -2469,7 +2469,7 @@ object SparkEntry {
       val (r, books) = opq816(s, dir)
       val tbl = seedOpqIdxRo(s, dir)
       val probes = Similarity.ivfPqOpqProbes(q, cents, r, nprobe = 2)
-      Similarity.ivfPqResidualTopKRerankFromIndex(
+      Similarity.ivfPqTopKRerankFromIndex(
         storedCells(s, tbl, probes),
         probes, q, e, books, k = 10, r = 40)
     }),
@@ -2526,7 +2526,7 @@ object SparkEntry {
       val books = pq816r(s, dir)
       val tbl = seedResIdxLblRo(s, dir)
       val probes = Similarity.ivfPqResidualProbes(q, cents, nprobe = 2)
-      Similarity.ivfPqResidualTopKRerankFromIndex(
+      Similarity.ivfPqTopKRerankFromIndex(
         storedCells(s, tbl, probes).filter(col("label") % 2 === 0),
         probes, q, e.filter(col("label") % 2 === 0), books, k = 10, r = 40)
     }),
@@ -2552,10 +2552,11 @@ object SparkEntry {
       val e = embedsD(s, dir)
       val cents = km8(s, dir)
       val books = pq816r(s, dir)
-      val (n0, t0) = Similarity.residualQuantizationError(e, cents, books)
+      val (n0, t0) = Similarity.quantizationError(Similarity.ivfResiduals(e, cents), books)
       val drifted = e.select((col("vec_id") + 1000000L).as("vec_id"),
         transform(col("embedding"), x => x * lit(3.0)).as("embedding"))
-      val (n1, t1) = Similarity.residualQuantizationError(drifted, cents, books)
+      val (n1, t1) = Similarity.quantizationError(
+        Similarity.ivfResiduals(drifted, cents), books)
       Seq((0L, n0, t0, false), (1L, n1, t1, t1 * n0 > 2.0 * t0 * n1))
         .toDF("gen", "n", "total_err", "refresh_due")
     }),
@@ -2583,7 +2584,7 @@ object SparkEntry {
       val probes = Similarity.ivfPqProbes(q, cents, nprobe = 2)
       val sem = Similarity.ivfPqTopKRerankFromIndex(
         storedCells(s, idxTbl, probes),
-        probes, e, books, k = 10, r = 40)
+        probes, q, e, books, k = 10, r = 40)
         .select(col("query_id"), col("vec_id").as("doc_id"), col("rank"))
       Similarity.rrfFuse(Seq(lex, sem), k = 10)
     }),

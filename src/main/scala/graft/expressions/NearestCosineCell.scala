@@ -11,16 +11,12 @@ import org.apache.spark.sql.types._
 
 /**
  * MAX-COSINE cell routing against a small fixed centroid matrix — the
- * coarse-quantizer assignment kernel of the residual (true IVFADC)
- * index build. [[NearestCentroid]]'s shape (matrix as one referenced
- * object, single tree node, two-level primitive loop) applied to the
- * cosine metric the IVF family routes by: [[graft.operators.Similarity
- * .ivfPqIndex]] assigns cells with a crossJoin + min_by aggregation,
- * which is fine when the assignment IS the output, but the residual
- * build needs the assigned CENTROID back per row (to subtract before
- * encoding) — as an expression the whole residual+encode chain stays
- * one shuffle-free projection, with the raw vector never crossing an
- * exchange.
+ * coarse-quantizer assignment kernel of every IVF-PQ index build (raw,
+ * residual and OPQ). [[NearestCentroid]]'s shape (matrix as one
+ * referenced object, single tree node, two-level primitive loop)
+ * applied to the cosine metric the IVF family routes by: as an
+ * expression, routing + residual + encode stay one shuffle-free
+ * projection, with the raw vector never crossing an exchange.
  *
  * Arithmetic parity (strict-oracle contract): cosine is
  * [[CosineSim.cos]]'s interleaved left-to-right fold (dot, |a|², |b|²

@@ -18,6 +18,33 @@ import graft.tensor
  */
 object Similarity {
 
+  /** `df` cut to each `part` group's first n rows by `order`, numbered
+    * 1..n in `rankCol` — Spark plans the filter with a partial
+    * `WindowGroupLimit` before the window's exchange. */
+  private def firstN(df: DataFrame, n: Int, part: Seq[String],
+      rankCol: String)(order: Column*): DataFrame =
+    df.withColumn(rankCol, row_number().over(
+        Window.partitionBy(part.map(col): _*).orderBy(order: _*)))
+      .filter(col(rankCol) <= n)
+
+  /** Each query's first k rows by `score` (descending unless `ascending`,
+    * ties to the smaller `idCol`) as (queryIdCol, idCol, score, rank). */
+  private def firstK(scored: DataFrame, k: Int, queryIdCol: String,
+      idCol: String, score: String, ascending: Boolean = false): DataFrame =
+    firstN(scored, k, Seq(queryIdCol), "rank")(
+      if (ascending) col(score) else col(score).desc, col(idCol))
+      .select(col(queryIdCol), col(idCol), col(score), col("rank"))
+
+  /** Each `keyCol` group's k highest-`score` rows (ties to the smaller `idCol`)
+    * by the bounded [[TextAnalysis.topKByScore]] aggregate, with `rank`. */
+  private def topKByAgg(scored: DataFrame, k: Int, keyCol: String,
+      idCol: String, score: String): DataFrame =
+    scored.groupBy(keyCol)
+      .agg(TextAnalysis.topKByScore(k)(col(score), col(idCol)).as("__top"))
+      .select(col(keyCol), posexplode(col("__top")).as(Seq("__r", "__e")))
+      .select(col(keyCol), col("__e")("_2").as(idCol),
+        col("__e")("_1").as(score), (col("__r") + 1).cast("int").as("rank"))
+
   /**
    * Exact brute-force cosine top-k. `queries` is broadcast (the scan side
    * never shuffles); ties broken by corpus id for determinism. The rank
@@ -29,13 +56,10 @@ object Similarity {
       idCol: String = "vec_id", vecCol: String = "embedding",
       queryIdCol: String = "query_id"): DataFrame = {
     val q = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("cos").desc, col(idCol))
-    corpus.select(col(idCol), col(vecCol).as("c_vec"))
+    firstK(corpus.select(col(idCol), col(vecCol).as("c_vec"))
       .crossJoin(broadcast(q))
-      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rank"))
+      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6)),
+      k, queryIdCol, idCol, "cos")
   }
 
   /**
@@ -70,7 +94,9 @@ object Similarity {
     // the one shuffle carries each corpus row exactly once. first(c_vec) is
     // deterministic (the vector is constant within its group). Tie-break
     // matches the old window ordering: max cosine, then smallest cell_id —
-    // min over the lexicographic struct (-ccos, cell_id).
+    // min over the lexicographic struct (-ccos, cell_id). The IVF-PQ
+    // builds route with the NearestCosineCell kernel instead; it takes
+    // Int cell ids, and [[labelCentroids]] ids take the label's type.
     val assigned = corpus.select(col(idCol), col(vecCol).as("c_vec"))
       .crossJoin(cb)
       .withColumn("ccos", tensor.cosine(col("c_vec"), col("centroid")))
@@ -78,23 +104,14 @@ object Similarity {
       .agg(first(col("c_vec")).as("c_vec"),
         min_by(col("cell_id"), struct((-col("ccos")).as("nc"), col("cell_id"))).as("cell_id"))
       .select(col(idCol), col("c_vec"), col("cell_id"))
-    val wProbe = Window.partitionBy(queryIdCol).orderBy(col("qcos").desc, col("cell_id"))
-    val probes = queries.select(col(queryIdCol), col(vecCol).as("q_vec"))
-      .crossJoin(cb)
-      .withColumn("qcos", tensor.cosine(col("q_vec"), col("centroid")))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
-      .select(col(queryIdCol), col("q_vec"), col("cell_id"))
-    val wRank = Window.partitionBy(queryIdCol).orderBy(col("cos").desc, col(idCol))
+    val probes = ivfPqProbes(queries, centroids, nprobe, queryIdCol, vecCol)
     // probes = queries × nprobe is small by assumption — broadcast it so
     // the corpus-side candidates never shuffle on cell_id; the only
     // exchange touching corpus-width rows stays the one-row-per-vector
     // assignment aggregate above.
-    assigned.join(broadcast(probes), "cell_id")
-      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6))
-      .withColumn("rank", row_number().over(wRank))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rank"))
+    firstK(assigned.join(broadcast(probes), "cell_id")
+      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6)),
+      k, queryIdCol, idCol, "cos")
   }
 
   /**
@@ -118,24 +135,42 @@ object Similarity {
    * both sides.
    */
   def kmeansFitCentroids(corpus: DataFrame, k: Int = 8, iters: Int = 2,
-      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, Array[Double])] = {
+      idCol: String = "vec_id", vecCol: String = "embedding"): Seq[(Int, Array[Double])] =
+    lloyd(corpus, seedRows(corpus, k, idCol, vecCol), 1, iters, vecCol).head
+
+  /** The ≤ k smallest-`idCol` rows' vectors in id order — every Lloyd's seed. */
+  private def seedRows(corpus: DataFrame, k: Int, idCol: String,
+      vecCol: String): IndexedSeq[Array[Double]] =
+    corpus.orderBy(col(idCol)).select(col(vecCol).cast("array<double>"))
+      .limit(k).collect().map(_.getSeq[Double](0).toArray).toIndexedSeq
+
+  /** `iters` Lloyd's rounds of `m` per-subspace quantizers seeded with
+    * `seeds` (code = seed index; m = 1 is plain k-means) — the one loop of
+    * [[kmeansFitCentroids]] and [[pqFitCodebooks]] (see their scaladocs). */
+  private def lloyd(corpus: DataFrame, seeds: IndexedSeq[Array[Double]], m: Int,
+      iters: Int, vecCol: String): IndexedSeq[IndexedSeq[(Int, Array[Double])]] = {
+    require(seeds.nonEmpty, "Lloyd's fit needs at least one seed row")
+    val d = seeds.head.length / m
     val vecD = col(vecCol).cast("array<double>")
-    var cents: Seq[(Int, Array[Double])] =
-      corpus.orderBy(col(idCol)).select(vecD.as("v")).limit(k).collect()
-        .map(_.getSeq[Double](0).toArray).zipWithIndex
-        .map { case (v, i) => (i, v) }.toSeq
+    var books = (0 until m).map(s => seeds.zipWithIndex.map {
+      case (v, i) => (i, v.slice(s * d, (s + 1) * d))
+    })
     for (_ <- 0 until iters) {
-      val rows = corpus
-        .select(bestCentroid(cents, vecD)("cid").as("cluster"),
-          posexplode(vecD).as(Seq("pos", "x")))
-        .groupBy(col("cluster"), col("pos"))
+      val rows = corpus.select(pqCodeCols(vecD, books) :+ posexplode(vecD).as(Seq("pos", "x")): _*)
+        .withColumn("sub", (col("pos") / d).cast("int"))
+        .withColumn("code", element_at(
+          array(books.indices.map(s => col(s"c$s")): _*), col("sub") + 1))
+        .groupBy(col("sub"), col("code"), (col("pos") % d).as("subpos"))
         .agg(round(avg(col("x")), 6).as("m"))
         .collect()
-      cents = rows.groupBy(_.getInt(0)).toSeq.sortBy(_._1).map { case (cid, rs) =>
-        (cid, rs.sortBy(_.getInt(1)).map(_.getDouble(2)).toArray)
+      books = books.indices.map { s =>
+        rows.filter(_.getInt(0) == s).groupBy(_.getInt(1)).toIndexedSeq
+          .sortBy(_._1).map { case (code, rs) =>
+            (code, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray)
+          }
       }
     }
-    cents
+    books
   }
 
   /** [[kmeansFitCentroids]] packaged as the (cell_id, centroid) relation
@@ -153,10 +188,12 @@ object Similarity {
     * shuffle (the centroid matrix is literal). */
   def kmeansAssign(corpus: DataFrame, cents: Seq[(Int, Array[Double])],
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    corpus
-      .withColumn("__best", bestCentroid(cents, col(vecCol).cast("array<double>")))
-      .select(col(idCol), col("__best")("cid").as("cluster"),
-        round(col("__best")("d"), 6).as("dist"))
+    assignedBy(corpus, idCol, bestCentroid(cents, col(vecCol).cast("array<double>")))
+
+  /** (id, cluster, dist rounded to 6dp) from a nearest-centroid (d, cid). */
+  private def assignedBy(corpus: DataFrame, idCol: String, best: Column): DataFrame =
+    corpus.withColumn("__best", best).select(col(idCol),
+      col("__best")("cid").as("cluster"), round(col("__best")("d"), 6).as("dist"))
 
   /** (d, cid) of the nearest centroid: squared-L2 left-fold per centroid,
     * ties to smallest cid. A native expression (NearestCentroid) carrying
@@ -192,11 +229,8 @@ object Similarity {
       kmeansAssign(corpus, cents, idCol, vecCol)
     else {
       val (coarse, fine) = coarseCells(cents, kc)
-      corpus
-        .withColumn("__best", org.apache.spark.sql.graft.NearestCentroidTwoLevel(
-          col(vecCol).cast("array<double>"), coarse, fine, nprobe))
-        .select(col(idCol), col("__best")("cid").as("cluster"),
-          round(col("__best")("d"), 6).as("dist"))
+      assignedBy(corpus, idCol, org.apache.spark.sql.graft.NearestCentroidTwoLevel(
+        col(vecCol).cast("array<double>"), coarse, fine, nprobe))
     }
   }
 
@@ -286,15 +320,13 @@ object Similarity {
     val cents = kmeansFitCentroids(fitInput, k, iters, idCol, vecCol)
     val h = TextAnalysis.portableHash(
       concat(col(idCol).cast("string"), lit(":" + salt)))
-    val w = Window.partitionBy("cluster").orderBy(col("__h"), col(idCol))
-    (if (twoLevelAssign)
+    val assigned = (if (twoLevelAssign)
         kmeansAssignTwoLevel(embeddings, cents, nprobe = 1,
           idCol = idCol, vecCol = vecCol)
       else kmeansAssign(embeddings, cents, idCol, vecCol))
       .select(col(idCol), col("cluster"))
       .withColumn("__h", h)
-      .withColumn("rank", row_number().over(w).cast("int"))
-      .filter(col("rank") <= cap)
+    firstN(assigned, cap, Seq("cluster"), "rank")(col("__h"), col(idCol))
       .select(col(idCol), col("cluster"), col("rank"))
   }
 
@@ -364,7 +396,6 @@ object Similarity {
       maxBucket: Int = 0, idCol: String = "vec_id",
       vecCol: String = "embedding", labelCol: String = "label",
       maxCandPerAnchor: Int = 0): DataFrame = {
-    val tk = TextAnalysis.topKByScore(k)
     val withV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val withB = corpus.select(col(idCol).as("id"), col(labelCol).as("lbl"),
       Dedup.signBucketHashed(col(vecCol).cast("array<double>"), nPlanes).as("bucket"))
@@ -377,9 +408,8 @@ object Similarity {
     val neighbors0 = withB.select(col("bucket").as("pbucket"),
       col("id").as("n_id"), col("lbl").as("n_lbl"))
     val neighbors = if (maxBucket <= 0) neighbors0 else {
-      val wb = Window.partitionBy("pbucket", "n_lbl").orderBy(col("n_id"))
-      neighbors0.withColumn("__r", row_number().over(wb))
-        .filter(col("__r") <= maxBucket).drop("__r")
+      firstN(neighbors0, maxBucket, Seq("pbucket", "n_lbl"), "__r")(col("n_id"))
+        .drop("__r")
     }
     // no dedup pass needed: an anchor's nPlanes+1 probe buckets are
     // pairwise distinct and a neighbor lives in exactly one bucket, so a
@@ -392,11 +422,10 @@ object Similarity {
     // hard per-anchor cap on the NARROW pair relation (vectors have not
     // joined back yet): the downstream cosine stage is bounded at cap·N
     val cand = if (maxCandPerAnchor <= 0) cand0 else {
-      val wc = Window.partitionBy("a_id").orderBy(col("n_id"))
-      cand0.withColumn("__c", row_number().over(wc))
-        .filter(col("__c") <= maxCandPerAnchor).drop("__c")
+      firstN(cand0, maxCandPerAnchor, Seq("a_id"), "__c")(col("n_id"))
+        .drop("__c")
     }
-    cand
+    val scored = cand
       .join(withV.select(col("id").as("a_id"), col("v").as("a_v")), "a_id")
       .join(withV.select(col("id").as("n_id"), col("v").as("n_v")), "n_id")
       .select(col("a_id").as("anchor_id"), col("n_id").as("neg_id"),
@@ -408,11 +437,7 @@ object Similarity {
       // see the identical well-ordered score set even on degenerate
       // embeddings; a `!isnan(cos)` guard here would be dead code that,
       // were it ever live, would DROP pairs the oracle still ranks at 0.0.
-      .groupBy("anchor_id")
-      .agg(tk(col("cos"), col("neg_id")).as("__top"))
-      .select(col("anchor_id"), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col("anchor_id"), col("__e")("_2").as("neg_id"),
-        col("__e")("_1").as("cos"), (col("__r") + 1).cast("int").as("rank"))
+    topKByAgg(scored, k, "anchor_id", "neg_id", "cos")
   }
 
   // ---- Product quantization (Jegou et al. 2011, "Product Quantization
@@ -423,6 +448,42 @@ object Similarity {
   private def sqDistCol(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0), (acc, x) => acc + x)
+
+  /** Sub-dimension of PQ codebooks — the one check that they are non-empty. */
+  private def subDim(books: IndexedSeq[IndexedSeq[(Int, Array[Double])]]): Int = {
+    require(books.nonEmpty && books.head.nonEmpty,
+      "PQ needs non-empty codebooks (m >= 1 subspaces, >= 1 code each)")
+    books.head.head._2.length
+  }
+
+  /** A small (id → vector) table as a literal map column. */
+  private def vecMap(rows: Seq[(Int, Array[Double])]): Column =
+    typedLit(rows.map { case (c, v) => (c, v.toSeq) }.toMap)
+
+  /** The m per-subspace NearestCentroid assignments (struct d, cid) of an
+    * array<double> column — every PQ encode (fit, encode, ADC scan, index
+    * builds, OPQ's decode) goes through it. */
+  private def pqAssign(vec: Column,
+      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]]): IndexedSeq[Column] = {
+    val d = subDim(books)
+    books.indices.map(s =>
+      org.apache.spark.sql.graft.NearestCentroid(slice(vec, s * d + 1, d), books(s)))
+  }
+
+  /** [[pqAssign]]'s codes as the index columns c0..c{m-1}. */
+  private def pqCodeCols(vec: Column,
+      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]]): IndexedSeq[Column] =
+    pqAssign(vec, books).zipWithIndex.map { case (a, s) => a("cid").as(s"c$s") }
+
+  /** The ADC of `qVec` to codes c0..c{m-1}: per-subspace squared-L2 folds
+    * summed in subspace order, rounded to 6dp. */
+  private def adcCol(qVec: Column,
+      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]]): Column = {
+    val d = subDim(books)
+    round(books.indices.map(s =>
+      sqDistCol(slice(qVec, s * d + 1, d), element_at(vecMap(books(s)), col(s"c$s")))
+    ).reduceLeft(_ + _), 6)
+  }
 
   /**
    * Product-quantization codebooks: split every `dim`-vector into `m`
@@ -460,38 +521,13 @@ object Similarity {
   def pqFitCodebooks(corpus: DataFrame, m: Int = 8, ksub: Int = 16,
       iters: Int = 2, idCol: String = "vec_id", vecCol: String = "embedding")
       : IndexedSeq[IndexedSeq[(Int, Array[Double])]] = {
-    val vecD = col(vecCol).cast("array<double>")
-    val initRows = corpus.orderBy(col(idCol)).select(vecD.as("v")).limit(ksub)
-      .collect().map(_.getSeq[Double](0).toArray)
-    require(initRows.length == ksub,
+    val seeds = seedRows(corpus, ksub, idCol, vecCol)
+    require(seeds.length == ksub,
       s"pqFitCodebooks needs >= ksub=$ksub corpus rows to seed the " +
-        s"codebooks, got ${initRows.length}")
-    val dim = initRows.head.length
+        s"codebooks, got ${seeds.length}")
+    val dim = seeds.head.length
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val d = dim / m
-    var books: IndexedSeq[IndexedSeq[(Int, Array[Double])]] =
-      (0 until m).map(s => initRows.toIndexedSeq.zipWithIndex.map {
-        case (v, i) => (i, v.slice(s * d, (s + 1) * d))
-      })
-    for (_ <- 0 until iters) {
-      val asgCols = (0 until m).map(s =>
-        org.apache.spark.sql.graft.NearestCentroid(
-          slice(vecD, s * d + 1, d), books(s))("cid").as(s"c$s"))
-      val rows = corpus.select(asgCols :+ posexplode(vecD).as(Seq("pos", "x")): _*)
-        .withColumn("sub", (col("pos") / d).cast("int"))
-        .withColumn("code", element_at(
-          array((0 until m).map(s => col(s"c$s")): _*), col("sub") + 1))
-        .groupBy(col("sub"), col("code"), (col("pos") % d).as("subpos"))
-        .agg(round(avg(col("x")), 6).as("m"))
-        .collect()
-      books = (0 until m).map { s =>
-        rows.filter(_.getInt(0) == s).groupBy(_.getInt(1)).toIndexedSeq
-          .sortBy(_._1).map { case (code, rs) =>
-            (code, rs.sortBy(_.getInt(2)).map(_.getDouble(3)).toArray)
-          }
-      }
-    }
-    books
+    lloyd(corpus, seeds, m, iters, vecCol)
   }
 
   /**
@@ -505,20 +541,12 @@ object Similarity {
   def pqEncode(corpus: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
       idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = books.size
-    require(m > 0 && books.head.nonEmpty,
-      "pqEncode needs non-empty codebooks (m >= 1 subspaces, >= 1 code each)")
-    val d = books.head.head._2.length
-    val vecD = col(vecCol).cast("array<double>")
-    val entries = (0 until m).map { s =>
-      val best = org.apache.spark.sql.graft.NearestCentroid(
-        slice(vecD, s * d + 1, d), books(s))
-      struct(lit(s).as("sub"), best("cid").as("code"),
-        round(best("d"), 6).as("dist")).as(s"e$s")
-    }
-    corpus.select(col(idCol) +: entries: _*)
-      .select(col(idCol),
-        explode(array((0 until m).map(s => col(s"e$s")): _*)).as("e"))
+    val entries = pqAssign(col(vecCol).cast("array<double>"), books)
+      .zipWithIndex.map { case (best, s) =>
+        struct(lit(s).as("sub"), best("cid").as("code"),
+          round(best("d"), 6).as("dist"))
+      }
+    corpus.select(col(idCol), explode(array(entries: _*)).as("e"))
       .select(col(idCol), col("e")("sub").as("sub"),
         col("e")("code").as("code"), col("e")("dist").as("dist"))
   }
@@ -547,28 +575,12 @@ object Similarity {
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]], k: Int = 10,
       idCol: String = "vec_id", vecCol: String = "embedding",
       queryIdCol: String = "query_id"): DataFrame = {
-    val m = books.size
-    require(m > 0 && books.head.nonEmpty,
-      "pqTopK needs non-empty codebooks (m >= 1 subspaces, >= 1 code each)")
-    val d = books.head.head._2.length
     val vecD = col(vecCol).cast("array<double>")
-    val bookMaps = books.map(b =>
-      typedLit(b.map { case (c, v) => (c, v.toSeq) }.toMap))
-    val codeCols = (0 until m).map(s =>
-      org.apache.spark.sql.graft.NearestCentroid(
-        slice(vecD, s * d + 1, d), books(s))("cid").as(s"c$s"))
-    val encoded = corpus.select(col(idCol) +: codeCols: _*)
     val q = broadcast(queries.select(col(queryIdCol), vecD.as("q_vec")))
-    val adc = (0 until m).map { s =>
-      sqDistCol(slice(col("q_vec"), s * d + 1, d),
-        element_at(bookMaps(s), col(s"c$s")))
-    }.reduceLeft(_ + _)
-    val w = Window.partitionBy(queryIdCol).orderBy(col("adc"), col(idCol))
-    encoded.crossJoin(q)
-      .withColumn("adc", round(adc, 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("adc"), col("rank"))
+    firstK(corpus.select(col(idCol) +: pqCodeCols(vecD, books): _*)
+      .crossJoin(q)
+      .withColumn("adc", adcCol(col("q_vec"), books)),
+      k, queryIdCol, idCol, "adc", ascending = true)
   }
 
   /**
@@ -583,12 +595,10 @@ object Similarity {
    * code table, not the raw vectors.
    *
    * Scale shape, piecewise:
-   *  - Index build is ONE corpus pass: the same projection computes all
-   *    m PQ codes (native NearestCentroid expressions) AND feeds the
-   *    coarse-cell min_by aggregation, so the only corpus-width exchange
-   *    carries (id, m small ints, cell partials) — the raw vector never
-   *    crosses a shuffle (pre-aggregated map-side like [[ivfTopK]], but
-   *    with codes instead of the full vector riding the groupBy).
+   *  - Index build is ONE shuffle-free projection ([[ivfPqIndex]]): the
+   *    native NearestCosineCell kernel routes each vector and m native
+   *    NearestCentroid expressions encode it — the raw vector never
+   *    crosses an exchange.
    *  - Query routing is a broadcast crossJoin against the C-row centroid
    *    table (queries × C is tiny by assumption).
    *  - Scoring joins the encoded index to the BROADCAST probe set on
@@ -598,7 +608,7 @@ object Similarity {
    *    bench scale it is the broadcast-semi-join equivalent.
    *
    * Determinism: cell routing = max cosine, ties to smallest cell_id
-   * (identical to [[ivfTopK]]); ADC = per-subspace squared-L2 folds
+   * (the rule [[ivfTopK]] and [[ivfPqProbes]] rank by); ADC = per-subspace squared-L2 folds
    * summed in subspace order (identical to [[pqTopK]]); rank by
    * ascending ADC, ties to the smaller corpus id. Recall < 1 by
    * construction (coarse routing AND quantization error compound).
@@ -613,12 +623,11 @@ object Similarity {
 
   /**
    * The IVF-PQ INDEX relation: (id, cell_id, c0..c{m-1}) — one row per
-   * corpus vector, the vector itself replaced by its coarse cell and m
-   * PQ codes. One corpus pass: the same projection computes all m codes
-   * (native NearestCentroid expressions) AND feeds the coarse-cell
-   * min_by aggregation, so the only corpus-width exchange carries
-   * (id, m small ints, cell partials) — the raw vector never crosses a
-   * shuffle. This is the relation a production deployment PERSISTS
+   * corpus row, the vector replaced by its coarse cell and m PQ codes of
+   * `x` itself (the residual and OPQ builds encode `x − c(cell)` and
+   * `R·(x − c(cell))` through the same [[ivfRouted]] pass). One
+   * shuffle-free projection; a NULL vector gets NULL cell and codes.
+   * This is the relation a production deployment PERSISTS
    * (bucketed by cell_id via [[graft.sources.Storage.writeBucketed]]):
    * the build cost amortizes over every query batch, and a cell_id
    * filter on the stored table becomes physical bucket pruning at the
@@ -626,24 +635,9 @@ object Similarity {
    */
   def ivfPqIndex(corpus: DataFrame, centroids: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = books.size
-    require(m > 0 && books.head.nonEmpty,
-      "ivfPqIndex needs non-empty codebooks (m >= 1 subspaces, >= 1 code each)")
-    val d = books.head.head._2.length
-    val vecD = col(vecCol).cast("array<double>")
-    val cb = broadcast(centroids.select(col("cell_id"), col("centroid")))
-    val codeCols = (0 until m).map(s =>
-      org.apache.spark.sql.graft.NearestCentroid(
-        slice(vecD, s * d + 1, d), books(s))("cid").as(s"c$s"))
-    corpus.select(col(idCol) +: vecD.as("c_vec") +: codeCols: _*)
-      .crossJoin(cb)
-      .withColumn("ccos", tensor.cosine(col("c_vec"), col("centroid")))
-      .groupBy(col(idCol))
-      .agg(min_by(col("cell_id"),
-          struct((-col("ccos")).as("nc"), col("cell_id"))).as("cell_id"),
-        (0 until m).map(s => first(col(s"c$s")).as(s"c$s")): _*)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    pqIndexOf(ivfRouted(corpus, centroids, idCol, vecCol)((x, _) => x),
+      books, idCol)
 
   /**
    * Query→cell routing: (query_id, q_vec, cell_id), one row per probed
@@ -657,34 +651,20 @@ object Similarity {
       queryIdCol: String = "query_id", vecCol: String = "embedding"): DataFrame = {
     val vecD = col(vecCol).cast("array<double>")
     val cb = broadcast(centroids.select(col("cell_id"), col("centroid")))
-    val wProbe = Window.partitionBy(queryIdCol).orderBy(col("qcos").desc, col("cell_id"))
-    queries.select(col(queryIdCol), vecD.as("q_vec"))
+    firstN(queries.select(col(queryIdCol), vecD.as("q_vec"))
       .crossJoin(cb)
-      .withColumn("qcos", tensor.cosine(col("q_vec"), col("centroid")))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
+      .withColumn("qcos", tensor.cosine(col("q_vec"), col("centroid"))),
+      nprobe, Seq(queryIdCol), "__rn")(col("qcos").desc, col("cell_id"))
       .select(col(queryIdCol), col("q_vec"), col("cell_id"))
   }
 
   /** Shared ADC scoring stage: probed index rows (the cell_id equi-join
     * against the broadcast probe set drops unprobed cells before any
-    * distance arithmetic) with the summed per-subspace asymmetric
-    * distance attached. */
+    * distance arithmetic) with their ADC attached. */
   private def ivfPqScored(index: DataFrame, probes: DataFrame,
-      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]]): DataFrame = {
-    val m = books.size
-    require(m > 0 && books.head.nonEmpty,
-      "ivfPq scoring needs non-empty codebooks (m >= 1 subspaces, >= 1 code each)")
-    val d = books.head.head._2.length
-    val bookMaps = books.map(b =>
-      typedLit(b.map { case (c, v) => (c, v.toSeq) }.toMap))
-    val adc = (0 until m).map { s =>
-      sqDistCol(slice(col("q_vec"), s * d + 1, d),
-        element_at(bookMaps(s), col(s"c$s")))
-    }.reduceLeft(_ + _)
+      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]]): DataFrame =
     index.join(broadcast(probes), "cell_id")
-      .withColumn("adc", round(adc, 6))
-  }
+      .withColumn("adc", adcCol(col("q_vec"), books))
 
   /**
    * IVFADC scoring over a PREBUILT index relation — [[ivfPqTopK]] with
@@ -694,20 +674,16 @@ object Similarity {
    * rows outside probed cells may already be filtered away (e.g. a
    * cell_id isin pushdown that bucket-prunes the stored table — q154) —
    * the cell_id equi-join makes that filter a no-op on results. Works
-   * unchanged over a residual index with residual probes. The rank
+   * unchanged over every family's index with that family's probes. The rank
    * filter is planned with a partial `WindowGroupLimit` before the
    * per-query exchange, so at most k scored rows per (task, query)
    * cross it.
    */
   def ivfPqTopKFromIndex(index: DataFrame, probes: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]], k: Int = 10,
-      idCol: String = "vec_id", queryIdCol: String = "query_id"): DataFrame = {
-    val w = Window.partitionBy(queryIdCol).orderBy(col("adc"), col(idCol))
-    ivfPqScored(index, probes, books)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("adc"), col("rank"))
-  }
+      idCol: String = "vec_id", queryIdCol: String = "query_id"): DataFrame =
+    firstK(ivfPqScored(index, probes, books), k, queryIdCol, idCol, "adc",
+      ascending = true)
 
   /**
    * IVFADC+R — [[ivfPqTopK]]'s ADC scoring followed by EXACT re-ranking
@@ -740,40 +716,35 @@ object Similarity {
       vecCol: String = "embedding", queryIdCol: String = "query_id"): DataFrame =
     ivfPqTopKRerankFromIndex(ivfPqIndex(corpus, centroids, books, idCol, vecCol),
       ivfPqProbes(queries, centroids, nprobe, queryIdCol, vecCol),
-      corpus, books, k, r, idCol, vecCol, queryIdCol)
+      queries, corpus, books, k, r, idCol, vecCol, queryIdCol)
 
   /**
-   * [[ivfPqTopKRerank]] over a PREBUILT index relation — the production
-   * composition: the index comes from [[ivfPqIndex]] or is read back
-   * from bucketed storage (possibly cell-pruned by the probe set, the
-   * q154 pattern — the cell_id equi-join makes that filter a results
-   * no-op), the ADC shortlist is the bounded aggregate, and the exact
-   * re-score joins the broadcast shortlist against the TRUE vectors by
-   * id. `corpus` here serves only the re-score — at production scale it
-   * is the stored vector table, and the broadcast id-join probes it
-   * without a shuffle.
+   * [[ivfPqTopKRerank]] over a PREBUILT index relation of any IVF-PQ
+   * family with that family's probes — the production composition: the
+   * index may be read back from bucketed storage and cell-pruned (q154;
+   * the cell_id equi-join makes that filter a results no-op), and the
+   * exact re-score joins the broadcast shortlist against the TRUE vectors
+   * by id. True query vectors come from `queries` (one row per query id):
+   * residual and OPQ probes carry per-cell residuals. `corpus` serves only
+   * the re-score — at production scale the stored vector table, probed
+   * by the broadcast id-join without a shuffle.
    */
   def ivfPqTopKRerankFromIndex(index: DataFrame, probes: DataFrame,
-      corpus: DataFrame, books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
+      queries: DataFrame, corpus: DataFrame,
+      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
       k: Int = 10, r: Int = 40, idCol: String = "vec_id",
       vecCol: String = "embedding", queryIdCol: String = "query_id"): DataFrame = {
     require(r >= k, s"rerank shortlist r=$r must be >= k=$k")
-    val tkR = TextAnalysis.topKByScore(r)
-    val shortlist = ivfPqScored(index, probes, books)
-      .groupBy(queryIdCol)
-      .agg(tkR(-col("adc"), col(idCol)).as("__s"))
-      .select(col(queryIdCol), explode(col("__s")).as("__e"))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol))
-    val qv = probes.select(col(queryIdCol), col("q_vec")).dropDuplicates(queryIdCol)
-    val tkK = TextAnalysis.topKByScore(k)
-    corpus.select(col(idCol), col(vecCol).as("c_vec"))
+    val shortlist = topKByAgg(ivfPqScored(index, probes, books)
+        .withColumn("__nadc", -col("adc")), r, queryIdCol, idCol, "__nadc")
+      .select(col(queryIdCol), col(idCol))
+    val qv = queries.select(col(queryIdCol),
+      col(vecCol).cast("array<double>").as("q_vec"))
+    topKByAgg(corpus.select(col(idCol), col(vecCol).as("c_vec"))
       .join(broadcast(shortlist), Seq(idCol))
       .join(broadcast(qv), Seq(queryIdCol))
-      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6))
-      .groupBy(queryIdCol).agg(tkK(col("cos"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol),
-        col("__e")("_1").as("cos"), (col("__r") + 1).cast("int").as("rank"))
+      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6)),
+      k, queryIdCol, idCol, "cos")
   }
 
   /**
@@ -791,13 +762,10 @@ object Similarity {
     // probe: query also looks in all single-bit-flip buckets
     val probed = qb.select(col(queryIdCol), col("q_vec"),
       explode(Dedup.probeBuckets(col("qbucket"), nPlanes)).as("bucket"))
-    val w = Window.partitionBy(queryIdCol).orderBy(col("cos").desc, col(idCol))
-    probed.join(cb, Seq("bucket"))
+    firstK(probed.join(cb, Seq("bucket"))
       .dropDuplicates(queryIdCol, idCol)
-      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("cos"), col("rank"))
+      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6)),
+      k, queryIdCol, idCol, "cos")
   }
 
   /**
@@ -818,8 +786,10 @@ object Similarity {
    * refresh(corpus) ≡ build(corpus) row-for-row), one [[ivfPqIndex]]
    * encode pass, and [[graft.sources.Storage.rewriteInPlace]]'s
    * crash-safe rename swap (compaction's machinery — at no point is the
-   * index unreachable, in-flight probes keep reading the old snapshot's
-   * files, and a crash mid-swap repairs on the next maintenance call).
+   * index unreachable, and a crash mid-swap repairs on the next
+   * maintenance call). The swap deletes the old snapshot's files before
+   * it returns, so a probe must re-resolve the index table after a
+   * refresh; a plan resolved before it reads deleted files.
    * Cost: O(corpus) — the same price as the original build, paid once
    * per drift epoch, vs. the append path's O(batch) per batch; schedule
    * it like compaction. Returns the fresh (centroids, codebooks) —
@@ -847,41 +817,51 @@ object Similarity {
       .limit(65537).collect()
     require(rows.length <= 65536,
       "centroid table exceeds 65536 cells — not a coarse quantizer; " +
-        "route with the join form instead")
+        "train fewer cells")
     rows.map(r => (r.getInt(0), r.getSeq[Double](1).toArray)).sortBy(_._1).toSeq
   }
 
-  /**
-   * RESIDUAL relation for the true-IVFADC family (Jégou, Douze & Schmid
-   * 2011 §III): each vector's assigned coarse cell (max cosine, ties to
-   * the smaller cell_id — identical routing to [[ivfPqIndex]]) and the
-   * residual `x − centroid(cell)` the product quantizer then encodes.
-   * Raw PQ ([[ivfPqIndex]]) quantizes the original subvectors, so every
-   * codebook must cover the whole data spread; quantizing residuals
-   * centers every cell's distribution at the origin, and the same
-   * codebook budget buys a finer quantization of what actually varies —
-   * the measured recall gap in BASELINE.md's sweep.
-   *
-   * ONE shuffle-free projection (the 100 TB point of doing this with
-   * expressions rather than the crossJoin+min_by assignment): routing is
-   * the native [[org.apache.spark.sql.graft.NearestCosineCell]] kernel,
-   * the centroid lookup is an `element_at` on a small literal map, and
-   * the subtraction is `zip_with` — the raw vector never crosses an
-   * exchange, exactly as in the raw index build.
-   */
-  def ivfResiduals(corpus: DataFrame, centroids: DataFrame,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      extraCols: Seq[String] = Nil): DataFrame = {
+  /** The one routing pass of every IVF-PQ family: (id, extraCols,
+    * cell_id, res) — max cosine, ties to the smaller cell_id, by the
+    * native NearestCosineCell kernel — with `res` = pqInput(x,
+    * centroid(cell)), the vector the family's quantizer encodes. One
+    * shuffle-free projection: the raw vector never crosses an exchange. */
+  private def ivfRouted(corpus: DataFrame, centroids: DataFrame,
+      idCol: String, vecCol: String, extraCols: Seq[String] = Nil)(
+      pqInput: (Column, Column) => Column): DataFrame = {
     val cents = centroidMatrix(centroids)
-    val centMap = typedLit(cents.map { case (c, v) => (c, v.toSeq) }.toMap)
     val vecD = col(vecCol).cast("array<double>")
     corpus
       .withColumn("cell_id",
         org.apache.spark.sql.graft.NearestCosineCell(vecD, cents))
       .select(col(idCol) +: extraCols.map(col) :+ col("cell_id") :+
-        zip_with(vecD, element_at(centMap, col("cell_id")),
-          (x, c) => x - c).as("res"): _*)
+        pqInput(vecD, element_at(vecMap(cents), col("cell_id"))).as("res"): _*)
   }
+
+  /** A routed relation's index rows (id, extraCols, cell_id, c0..c{m-1}). */
+  private def pqIndexOf(routed: DataFrame,
+      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]], idCol: String,
+      extraCols: Seq[String] = Nil): DataFrame =
+    routed.select(col(idCol) +: extraCols.map(col) ++:
+      col("cell_id") +: pqCodeCols(col("res"), books): _*)
+
+  /**
+   * RESIDUAL relation for the true-IVFADC family (Jégou, Douze & Schmid
+   * 2011 §III): each vector's assigned coarse cell (the routing of
+   * [[ivfPqIndex]]) and the residual `x − centroid(cell)` the product
+   * quantizer then encodes. Raw PQ ([[ivfPqIndex]]) quantizes the
+   * original subvectors, so every codebook must cover the whole data
+   * spread; quantizing residuals centers every cell's distribution at
+   * the origin, and the same codebook budget buys a finer quantization
+   * of what actually varies — the measured recall gap in BASELINE.md's
+   * sweep. One shuffle-free projection ([[ivfRouted]]; the subtraction
+   * is `zip_with`).
+   */
+  def ivfResiduals(corpus: DataFrame, centroids: DataFrame,
+      idCol: String = "vec_id", vecCol: String = "embedding",
+      extraCols: Seq[String] = Nil): DataFrame =
+    ivfRouted(corpus, centroids, idCol, vecCol, extraCols)(
+      (x, c) => zip_with(x, c, (a, b) => a - b))
 
   /** PQ codebooks trained on RESIDUALS — [[pqFitCodebooks]]'s exact fit
     * (ksub smallest-id init, per-subspace Lloyd's, 6dp-rounded means,
@@ -895,38 +875,31 @@ object Similarity {
       m, ksub, iters, idCol, "res")
 
   /**
-   * The RESIDUAL (true IVFADC) index relation: (id, cell_id,
+   * The RESIDUAL (true IVFADC) index relation: (id, extraCols, cell_id,
    * c0..c{m-1}) — [[ivfPqIndex]]'s shape, but the m codes quantize the
    * residual `x − centroid(cell)` against residual-trained codebooks
    * ([[pqFitCodebooksResidual]]). Same persistence contract (bucket by
    * cell_id, probe with an isin that bucket-prunes), same single
    * shuffle-free projection ([[ivfResiduals]] + m native NearestCentroid
    * codes fused into one select).
+   *
+   * `extraCols` carries FILTERABLE METADATA columns (label, source,
+   * license tier …) into the index relation next to the codes — the
+   * FAISS-IDSelector-style production shape for FILTERED ANN: with the
+   * attribute stored in the index, a probe-time predicate reaches the
+   * (bucket-pruned) index SCAN as a pushed parquet filter, so
+   * filtering costs nothing extra and the shortlist is built only from
+   * passing rows (rank-k over the filtered set, not post-filtered
+   * rank-k — the semantics a "top-k WHERE license = permissive" query
+   * means). A few bytes per row; the build stays one shuffle-free
+   * projection.
    */
-  /** `extraCols` carries FILTERABLE METADATA columns (label, source,
-    * license tier …) into the index relation next to the codes — the
-    * FAISS-IDSelector-style production shape for FILTERED ANN: with the
-    * attribute stored in the index, a probe-time predicate reaches the
-    * (bucket-pruned) index SCAN as a pushed parquet filter, so
-    * filtering costs nothing extra and the shortlist is built only from
-    * passing rows (rank-k over the filtered set, not post-filtered
-    * rank-k — the semantics a "top-k WHERE license = permissive" query
-    * means). A few bytes per row; the build stays one shuffle-free
-    * projection. */
   def ivfPqIndexResidual(corpus: DataFrame, centroids: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
       idCol: String = "vec_id", vecCol: String = "embedding",
-      extraCols: Seq[String] = Nil): DataFrame = {
-    val m = books.size
-    require(m > 0 && books.head.nonEmpty,
-      "ivfPqIndexResidual needs non-empty codebooks")
-    val d = books.head.head._2.length
-    val codeCols = (0 until m).map(s =>
-      org.apache.spark.sql.graft.NearestCentroid(
-        slice(col("res"), s * d + 1, d), books(s))("cid").as(s"c$s"))
-    ivfResiduals(corpus, centroids, idCol, vecCol, extraCols)
-      .select(col(idCol) +: extraCols.map(col) ++: col("cell_id") +: codeCols: _*)
-  }
+      extraCols: Seq[String] = Nil): DataFrame =
+    pqIndexOf(ivfResiduals(corpus, centroids, idCol, vecCol, extraCols),
+      books, idCol, extraCols)
 
   /** [[ivfPqProbes]] with each (query, probed cell) row's `q_vec`
     * residualized to `q − centroid(cell)` — ADC against a residual index
@@ -962,51 +935,18 @@ object Similarity {
       ivfPqResidualProbes(queries, centroids, nprobe, queryIdCol, vecCol),
       books, k, idCol, queryIdCol)
 
-  /**
-   * Residual IVFADC+R over a PREBUILT residual index —
-   * [[ivfPqTopKRerankFromIndex]]'s production composition for the
-   * residual family. One signature difference, load-bearing: the exact
-   * re-score CANNOT reuse the probes' `q_vec` (those are per-cell
-   * residuals, not the query), so the TRUE query vectors come in as
-   * their own relation. Shortlist bounded at R per (task, query), exact
-   * re-score via broadcast id-join, final top-k bounded at k — no corpus
-   * shuffle, same as the raw form.
-   */
-  def ivfPqResidualTopKRerankFromIndex(index: DataFrame, probes: DataFrame,
-      queries: DataFrame, corpus: DataFrame,
-      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
-      k: Int = 10, r: Int = 40, idCol: String = "vec_id",
-      vecCol: String = "embedding", queryIdCol: String = "query_id"): DataFrame = {
-    require(r >= k, s"rerank shortlist r=$r must be >= k=$k")
-    val tkR = TextAnalysis.topKByScore(r)
-    val shortlist = ivfPqScored(index, probes, books)
-      .groupBy(queryIdCol)
-      .agg(tkR(-col("adc"), col(idCol)).as("__s"))
-      .select(col(queryIdCol), explode(col("__s")).as("__e"))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol))
-    val qv = queries.select(col(queryIdCol),
-      col(vecCol).cast("array<double>").as("q_vec"))
-    val tkK = TextAnalysis.topKByScore(k)
-    corpus.select(col(idCol), col(vecCol).as("c_vec"))
-      .join(broadcast(shortlist), Seq(idCol))
-      .join(broadcast(qv), Seq(queryIdCol))
-      .withColumn("cos", round(tensor.cosine(col("q_vec"), col("c_vec")), 6))
-      .groupBy(queryIdCol).agg(tkK(col("cos"), col(idCol)).as("__top"))
-      .select(col(queryIdCol), posexplode(col("__top")).as(Seq("__r", "__e")))
-      .select(col(queryIdCol), col("__e")("_2").as(idCol),
-        col("__e")("_1").as("cos"), (col("__r") + 1).cast("int").as("rank"))
-  }
-
   // ---- Drift detection for stored ANN indexes (round-19) ----
 
-  /** Residual quantization error of a batch under FROZEN quantizers:
-    * (rows, total squared sub-vector error) where total = Σ over rows
-    * and subspaces of ‖(x−c)_sub − code_centroid‖² — [[pqEncode]]'s
-    * per-assignment `dist`, which the index build already computes and
-    * discards. This is THE drift statistic for a frozen-quantizer
-    * index: in-distribution batches score near the training error;
-    * a distribution shift the codebooks never saw scores visibly
-    * higher, and recall decay follows (BASELINE.md's drift sweep).
+  /** Quantization error of a batch under FROZEN quantizers, over the
+    * relation the family's quantizer encodes — [[ivfResiduals]] for the
+    * residual family, [[opqResiduals]] for OPQ: (rows, total squared
+    * sub-vector error) where total = Σ over rows and subspaces of
+    * ‖res_sub − code_centroid‖² — [[pqEncode]]'s per-assignment `dist`,
+    * which the index build already computes and discards. This is THE
+    * drift statistic for a frozen-quantizer index: in-distribution
+    * batches score near the training error; a distribution shift the
+    * codebooks never saw scores visibly higher, and recall decay follows
+    * (BASELINE.md's drift sweep). An empty batch scores (0, 0.0).
     *
     * One linear encode pass over the batch (shuffle-free projection +
     * a 2-value aggregate) — cheap enough to piggyback on every append.
@@ -1014,16 +954,13 @@ object Similarity {
     * exact 6dp decimals, so their rounded sum is engine-reproducible,
     * while a mean's division lands on arbitrary digits (thresholds
     * compare total·n cross-multiplied, exactly). */
-  def residualQuantizationError(batch: DataFrame, centroids: DataFrame,
+  def quantizationError(residuals: DataFrame,
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): (Long, Double) = {
-    val res = ivfResiduals(batch, centroids, idCol, vecCol)
-    val row = pqEncode(res.select(col(idCol), col("res")), books,
-        idCol, "res")
-      .agg(count(lit(1)).as("nm"), round(sum(col("dist")), 6).as("s"))
+      idCol: String = "vec_id", resCol: String = "res"): (Long, Double) = {
+    val row = pqEncode(residuals, books, idCol, resCol)
+      .agg(count(lit(1)), coalesce(round(sum(col("dist")), 6), lit(0.0)))
       .collect()(0)
-    val n = row.getLong(0) / books.size.max(1)
-    (n, row.getDouble(1))
+    (row.getLong(0) / books.size, row.getDouble(1))
   }
 
   /** Append one generation's drift statistic to the stats side table
@@ -1069,40 +1006,12 @@ object Similarity {
       statPath: String, factor: Double = 2.0, k: Int = 8, m: Int = 8,
       ksub: Int = 16, iters: Int = 2, buckets: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding")
-      : Option[(DataFrame, IndexedSeq[IndexedSeq[(Int, Array[Double])]])] = {
-    require(factor > 0, "drift factor must be positive")
-    val stats = driftStats(spark, statTable).collect()
-    if (stats.length < 2) return None // baseline only — nothing to compare
-    val base = stats.head
-    val latest = stats.last
-    val due = latest.getDouble(2) * base.getLong(1) >
-      factor * base.getDouble(2) * latest.getLong(1)
-    if (!due) return None
-    val (cents, books) = refreshStoredIvfPqIndexResidual(spark, corpus,
-      indexTable, k, m, ksub, iters, buckets, idCol, vecCol)
-    // restamp the baseline: full corpus under the FRESH quantizers
-    val (n, err) = residualQuantizationError(corpus, cents, books, idCol, vecCol)
-    graft.sources.Storage.rewriteInPlace(spark, statTable, "gen", 1) { _ =>
-      import spark.implicits._
-      Seq((latest.getLong(0), n, err)).toDF("gen", "n", "total_err")
+      : Option[(DataFrame, IndexedSeq[IndexedSeq[(Int, Array[Double])]])] =
+    refreshIfDrifted(spark, statTable, factor)(
+      refreshStoredIvfPqIndexResidual(spark, corpus, indexTable, k, m,
+        ksub, iters, buckets, idCol, vecCol)) { case (cents, books) =>
+      quantizationError(ivfResiduals(corpus, cents, idCol, vecCol), books, idCol)
     }
-    Some((cents, books))
-  }
-
-  /** [[residualQuantizationError]] for an OPQ index: the error of the
-    * ROTATED residual against the OPQ codebooks — the same statistic,
-    * same decimal-exact total, for the rotated family's stored indexes. */
-  def opqQuantizationError(batch: DataFrame, centroids: DataFrame,
-      r: Array[Array[Double]],
-      books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): (Long, Double) = {
-    val rot = opqResiduals(batch, centroids, r, idCol, vecCol)
-    val row = pqEncode(rot.select(col(idCol), col("res")), books, idCol, "res")
-      .agg(count(lit(1)).as("nm"), round(sum(col("dist")), 6).as("s"))
-      .collect()(0)
-    val n = row.getLong(0) / books.size.max(1)
-    (n, row.getDouble(1))
-  }
 
   /** [[refreshResidualIfDrifted]] for an OPQ stored index — the same
     * threshold contract, firing [[refreshStoredIvfPqIndexOpq]] (all
@@ -1114,23 +1023,34 @@ object Similarity {
       ksub: Int = 16, iters: Int = 2, sweeps: Int = 2, buckets: Int = 8,
       idCol: String = "vec_id", vecCol: String = "embedding")
       : Option[(DataFrame, Array[Array[Double]],
-                IndexedSeq[IndexedSeq[(Int, Array[Double])]])] = {
+                IndexedSeq[IndexedSeq[(Int, Array[Double])]])] =
+    refreshIfDrifted(spark, statTable, factor)(
+      refreshStoredIvfPqIndexOpq(spark, corpus, indexTable, k, m, ksub,
+        iters, sweeps, buckets, idCol, vecCol)) { case (cents, r, books) =>
+      quantizationError(opqResiduals(corpus, cents, r, idCol, vecCol), books, idCol)
+    }
+
+  /** The one drift-threshold body of the refresh entries above: when due,
+    * `refresh` and restamp the stats table to one baseline row, the full
+    * corpus's `error` under the fresh quantizers at the latest gen. */
+  private def refreshIfDrifted[Q](spark: org.apache.spark.sql.SparkSession,
+      statTable: String, factor: Double)(refresh: => Q)(
+      error: Q => (Long, Double)): Option[Q] = {
     require(factor > 0, "drift factor must be positive")
     val stats = driftStats(spark, statTable).collect()
-    if (stats.length < 2) return None
+    if (stats.length < 2) return None // baseline only — nothing to compare
     val base = stats.head
     val latest = stats.last
     val due = latest.getDouble(2) * base.getLong(1) >
       factor * base.getDouble(2) * latest.getLong(1)
     if (!due) return None
-    val (cents, r, books) = refreshStoredIvfPqIndexOpq(spark, corpus,
-      indexTable, k, m, ksub, iters, sweeps, buckets, idCol, vecCol)
-    val (n, err) = opqQuantizationError(corpus, cents, r, books, idCol, vecCol)
+    val fresh = refresh
+    val (n, err) = error(fresh)
     graft.sources.Storage.rewriteInPlace(spark, statTable, "gen", 1) { _ =>
       import spark.implicits._
       Seq((latest.getLong(0), n, err)).toDF("gen", "n", "total_err")
     }
-    Some((cents, r, books))
+    Some(fresh)
   }
 
   // ---- OPQ: optimized product quantization (Ge, He, Ke & Sun,
@@ -1192,34 +1112,26 @@ object Similarity {
     val dim = residuals.select(size(col(resCol)).as("d")).limit(1)
       .collect()(0).getInt(0)
     require(m > 0 && dim % m == 0, s"m=$m must divide dim=$dim")
-    val d = dim / m
     var r = Array.tabulate(dim, dim)((i, j) => if (i == j) 1.0 else 0.0)
     var books: IndexedSeq[IndexedSeq[(Int, Array[Double])]] = IndexedSeq.empty
     for (sweep <- 1 to sweeps) {
-      val rot = residuals.select(col(idCol), rotate(col(resCol), r).as("rv"))
+      val rot = residuals.select(col(idCol), col(resCol), rotate(col(resCol), r).as("rv"))
       books = pqFitCodebooks(rot, m, ksub, iters, idCol, "rv")
       if (sweep < sweeps) {
-        val bookMaps = books.map(b =>
-          typedLit(b.map { case (c, v) => (c, v.toSeq) }.toMap))
-        val ySubs = (0 until m).map { s0 =>
-          element_at(bookMaps(s0), org.apache.spark.sql.graft.NearestCentroid(
-            slice(col("rv"), s0 * d + 1, d), books(s0))("cid"))
+        val ySubs = pqAssign(col("rv"), books).zip(books).map {
+          case (a, b) => element_at(vecMap(b), a("cid"))
         }
         // flattened outer product y·xᵀ, row-major: pos = i*dim + j holds
         // y[i]·x[j] (x = the UNROTATED residual — Procrustes aligns R·x
         // to y)
         val outer = flatten(transform(concat(ySubs: _*),
           yi => transform(col(resCol).cast("array<double>"), xi => yi * xi)))
-        val mRows = residuals
-          .select(col(resCol), rotate(col(resCol), r).as("rv"))
-          .select(posexplode(outer).as(Seq("pos", "p")))
+        val mRows = rot.select(posexplode(outer).as(Seq("pos", "p")))
           .groupBy("pos").agg(sum("p").as("s"))
           .collect()
-        val mFlat = new Array[Double](dim * dim)
-        mRows.foreach(row =>
-          mFlat(row.getInt(0)) = math.rint(row.getDouble(1) * 1e6) / 1e6)
-        val mMat = breeze.linalg.DenseMatrix.tabulate(dim, dim)(
-          (i, j) => mFlat(i * dim + j))
+        val mMat = breeze.linalg.DenseMatrix.zeros[Double](dim, dim)
+        mRows.foreach { row => val p = row.getInt(0)
+          mMat(p / dim, p % dim) = math.rint(row.getDouble(1) * 1e6) / 1e6 }
         val s = breeze.linalg.svd(mMat)
         val rNew = s.U * s.Vt
         r = Array.tabulate(dim, dim)(
@@ -1246,17 +1158,8 @@ object Similarity {
   def ivfPqIndexOpq(corpus: DataFrame, centroids: DataFrame,
       r: Array[Array[Double]],
       books: IndexedSeq[IndexedSeq[(Int, Array[Double])]],
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val m = books.size
-    require(m > 0 && books.head.nonEmpty,
-      "ivfPqIndexOpq needs non-empty codebooks")
-    val d = books.head.head._2.length
-    val codeCols = (0 until m).map(s =>
-      org.apache.spark.sql.graft.NearestCentroid(
-        slice(col("res"), s * d + 1, d), books(s))("cid").as(s"c$s"))
-    opqResiduals(corpus, centroids, r, idCol, vecCol)
-      .select(col(idCol) +: col("cell_id") +: codeCols: _*)
-  }
+      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    pqIndexOf(opqResiduals(corpus, centroids, r, idCol, vecCol), books, idCol)
 
   /** [[ivfPqResidualProbes]] with the per-cell query residual ROTATED —
     * ADC against an OPQ index compares R·(q−c) to pq(R·(x−c)). */
@@ -1388,9 +1291,6 @@ object Similarity {
         lit(0.0), (acc, e) => acc + e("__part")).as("__raw"))
       // contributions are non-negative → half-up floor == round, cheaply
       .withColumn("rrf", floor(col("__raw") * 1e6 + 0.5) / 1e6)
-    val w = Window.partitionBy(queryIdCol).orderBy(col("rrf").desc, col(idCol))
-    fused.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col(queryIdCol), col(idCol), col("rrf"), col("rank"))
+    firstK(fused, k, queryIdCol, idCol, "rrf")
   }
 }

@@ -750,7 +750,7 @@ object DocumentStreams {
    * The family inside the shared skeleton ([[selfUpdating]]):
    *  1. PROBE: top-k against the stored index, cell-pruned (the 4096
    *     soft valve), ADC shortlist at R, exact cosine re-rank
-   *     ([[graft.operators.Similarity.ivfPqResidualTopKRerankFromIndex]]),
+   *     ([[graft.operators.Similarity.ivfPqTopKRerankFromIndex]]),
    *     routed with the CURRENT quantizers.
    *  2. ABSORB: the index rows are residual-encoded under the current
    *     quantizers (cost ∝ batch).
@@ -793,11 +793,15 @@ object DocumentStreams {
     // training distribution would be undetectable. With no stat table
     // yet, record the seed corpus's error under the initial quantizers at
     // gen -1 (below every batchId); a pre-seeded table is left untouched.
+    // An empty seed corpus records nothing: an n = 0 baseline would read
+    // 0 > 0 forever, so the first absorbed batch becomes the baseline.
     val spark0 = vectors.sparkSession
     if (!spark0.catalog.tableExists(statTable)) {
-      val (n0, err0) = Similarity.residualQuantizationError(
-        Storage.readTable(spark0, corpusTable), initCentroids, initBooks, idCol, vecCol)
-      Similarity.recordDriftStat(spark0, statTable, statPath, -1L, n0, err0)
+      val (n0, err0) = Similarity.quantizationError(Similarity.ivfResiduals(
+        Storage.readTable(spark0, corpusTable), initCentroids, idCol, vecCol),
+        initBooks, idCol)
+      if (n0 > 0)
+        Similarity.recordDriftStat(spark0, statTable, statPath, -1L, n0, err0)
     }
     val family = StoredIndex(indexTable, "cell_id", indexBuckets, idCol,
       corpusTable, idCol, vecCol, corpusBuckets, { batch =>
@@ -829,14 +833,14 @@ object DocumentStreams {
             relCol = idCol)
           .join(broadcast(batch.select(col(idCol).as("__self_id"))),
             col(idCol) === col("__self_id"), "left_anti")
-        Similarity.ivfPqResidualTopKRerankFromIndex(prunedNoSelf, probes, q,
+        Similarity.ivfPqTopKRerankFromIndex(prunedNoSelf, probes, q,
           Storage.readTable(spark, corpusTable), books, k, r, idCol, vecCol)
           .filter(col("query_id") =!= col(idCol)) // self after absorb-replay
       },
       afterAbsorb = { (batch, batchId) =>
         val (cents, books) = quant.get()
-        val (n, err) = Similarity.residualQuantizationError(batch, cents,
-          books, idCol, vecCol)
+        val (n, err) = Similarity.quantizationError(
+          Similarity.ivfResiduals(batch, cents, idCol, vecCol), books, idCol)
         Similarity.recordDriftStat(batch.sparkSession, statTable, statPath,
           batchId, n, err)
       },

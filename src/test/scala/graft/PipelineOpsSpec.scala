@@ -1718,7 +1718,7 @@ class PipelineOpsSpec extends GraftSuite {
     // with every cell probed and a corpus-wide shortlist, the exact
     // rerank reproduces brute force bit-for-bit
     val q = pts.filter($"vec_id" < 4).select($"vec_id".as("query_id"), $"embedding")
-    val got = Similarity.ivfPqResidualTopKRerankFromIndex(
+    val got = Similarity.ivfPqTopKRerankFromIndex(
       Similarity.ivfPqIndexResidual(pts, cents, resBooks),
       Similarity.ivfPqResidualProbes(q, cents, nprobe = 4),
       q, pts, resBooks, k = 10, r = 60)
@@ -1801,7 +1801,7 @@ class PipelineOpsSpec extends GraftSuite {
     val (r, books) = Similarity.opqFitRotation(res, m = 4, ksub = 4,
       iters = 2, sweeps = 2)
     val q = pts.filter($"vec_id" < 4).select($"vec_id".as("query_id"), $"embedding")
-    val got = Similarity.ivfPqResidualTopKRerankFromIndex(
+    val got = Similarity.ivfPqTopKRerankFromIndex(
       Similarity.ivfPqIndexOpq(pts, cents, r, books),
       Similarity.ivfPqOpqProbes(q, cents, r, nprobe = 2),
       q, pts, books, k = 10, r = 80)

@@ -296,8 +296,8 @@ class PlanShapeSpec extends GraftSuite {
     // The IVFADC contract: (1) the probe set is broadcast and the scoring
     // join keys on cell_id — rows outside probed cells drop at the join
     // before any distance arithmetic; (2) the raw corpus vector never
-    // crosses an exchange — the index-build aggregation forwards only
-    // (id, cell partials, m code ints), and the scoring side reads codes.
+    // crosses an exchange — the index build is one projection to
+    // (id, cell_id, m code ints), and the scoring side reads codes.
     val out = SparkEntry.queries("q149_ivfpq")(spark, "/root/testdata/sf0.001")
     assert(out.collect().nonEmpty)
     val planStr = out.queryExecution.executedPlan.toString
@@ -392,10 +392,15 @@ class PlanShapeSpec extends GraftSuite {
     val cents = Similarity.kmeansFit(e, k = 4, iters = 1)
     val books = Similarity.pqFitCodebooksResidual(e, cents, m = 4, ksub = 4,
       iters = 1)
-    val plan = Similarity.ivfPqIndexResidual(e, cents, books)
-      .queryExecution.executedPlan
-    assert(plan.collect { case ex: Exchange => ex }.isEmpty,
-      s"expected a shuffle-free residual index projection, got:\n$plan")
+    // the raw build routes with the same kernel: no exchange either
+    val rawBooks = Similarity.pqFitCodebooks(e, m = 4, ksub = 4, iters = 1)
+    for ((name, index) <- Seq(
+        "ivfPqIndexResidual" -> Similarity.ivfPqIndexResidual(e, cents, books),
+        "ivfPqIndex" -> Similarity.ivfPqIndex(e, cents, rawBooks))) {
+      val plan = index.queryExecution.executedPlan
+      assert(plan.collect { case ex: Exchange => ex }.isEmpty,
+        s"$name: expected a shuffle-free index projection, got:\n$plan")
+    }
   }
 
   test("q185 OPQ index build: one shuffle-free projection (routing + " +

@@ -224,7 +224,7 @@ class StorageSpec extends GraftSuite {
       val cells = probes.select("cell_id").distinct().collect().map(_.getInt(0))
       val stored = Storage.readTable(spark, "rerank_idx_spec")
         .filter($"cell_id".isin(cells.map(Integer.valueOf): _*))
-      val out = Similarity.ivfPqTopKRerankFromIndex(stored, probes, emb,
+      val out = Similarity.ivfPqTopKRerankFromIndex(stored, probes, q, emb,
         books, k = 10, r = 20)
       val inline = Similarity.ivfPqTopKRerank(emb, q, cents, books,
         nprobe = 2, k = 10, r = 20).collect().map(_.toString).sorted.toSeq
@@ -1160,7 +1160,8 @@ class StorageSpec extends GraftSuite {
     // gen 0: the corpus itself, in-distribution baseline
     Storage.writeBucketed(Similarity.ivfPqIndexResidual(emb, cents, books),
       "drift_idx_spec", s"$dir/idx", bucketCol = "cell_id", buckets = 8)
-    val (n0, t0) = Similarity.residualQuantizationError(emb, cents, books)
+    val (n0, t0) = Similarity.quantizationError(
+      Similarity.ivfResiduals(emb, cents), books)
     Similarity.recordDriftStat(spark, "drift_stat_spec", s"$dir/stat",
       gen = 0, n = n0, totalErr = t0)
     try {
@@ -1171,7 +1172,8 @@ class StorageSpec extends GraftSuite {
       Storage.appendBucketed(
         Similarity.ivfPqIndexResidual(healthy, cents, books),
         "drift_idx_spec", bucketCol = "cell_id", buckets = 8)
-      val (n1, t1) = Similarity.residualQuantizationError(healthy, cents, books)
+      val (n1, t1) = Similarity.quantizationError(
+        Similarity.ivfResiduals(healthy, cents), books)
       Similarity.recordDriftStat(spark, "drift_stat_spec", s"$dir/stat",
         gen = 1, n = n1, totalErr = t1)
       assert(Similarity.refreshResidualIfDrifted(spark,
@@ -1186,7 +1188,8 @@ class StorageSpec extends GraftSuite {
       Storage.appendBucketed(
         Similarity.ivfPqIndexResidual(drifted, cents, books),
         "drift_idx_spec", bucketCol = "cell_id", buckets = 8)
-      val (n2, t2) = Similarity.residualQuantizationError(drifted, cents, books)
+      val (n2, t2) = Similarity.quantizationError(
+        Similarity.ivfResiduals(drifted, cents), books)
       Similarity.recordDriftStat(spark, "drift_stat_spec", s"$dir/stat",
         gen = 2, n = n2, totalErr = t2)
       assert(t2 * n0 > 2.0 * t0 * n2,
@@ -1209,7 +1212,8 @@ class StorageSpec extends GraftSuite {
       val stats = Similarity.driftStats(spark, "drift_stat_spec").collect()
       assert(stats.length == 1 && stats(0).getLong(0) == 2,
         s"stats not restamped to a single latest-gen baseline: ${stats.toSeq}")
-      val (nF, tF) = Similarity.residualQuantizationError(full, cents2, books2)
+      val (nF, tF) = Similarity.quantizationError(
+        Similarity.ivfResiduals(full, cents2), books2)
       assert(stats(0).getLong(1) == nF && stats(0).getDouble(2) == tF,
         "restamped baseline is not the fresh-quantizer full-corpus stat")
       // and with only the baseline present, a second call is a no-op
@@ -1221,6 +1225,18 @@ class StorageSpec extends GraftSuite {
       spark.sql("DROP TABLE IF EXISTS drift_idx_spec")
       spark.sql("DROP TABLE IF EXISTS drift_stat_spec")
     }
+  }
+
+  test("quantizationError of an empty relation is (0, 0.0)") {
+    import graft.operators.Similarity
+    val rng = new scala.util.Random(37)
+    val emb = (0L until 20L).map(i => (i, Array.fill(8)(rng.nextDouble())))
+      .toDF("vec_id", "embedding")
+    val cents = Similarity.kmeansFit(emb, k = 2, iters = 1)
+    val books = Similarity.pqFitCodebooksResidual(emb, cents, m = 2,
+      ksub = 2, iters = 1)
+    assert(Similarity.quantizationError(
+      Similarity.ivfResiduals(emb.limit(0), cents), books) == ((0L, 0.0)))
   }
 
   test("OPQ drift twin: opqQuantizationError grows on a drifted batch and " +
@@ -1238,7 +1254,8 @@ class StorageSpec extends GraftSuite {
     dir.toFile.deleteOnExit()
     Storage.writeBucketed(Similarity.ivfPqIndexOpq(emb, cents, rot, books),
       "opqd_idx_spec", s"$dir/idx", bucketCol = "cell_id", buckets = 8)
-    val (n0, t0) = Similarity.opqQuantizationError(emb, cents, rot, books)
+    val (n0, t0) = Similarity.quantizationError(
+      Similarity.opqResiduals(emb, cents, rot), books)
     Similarity.recordDriftStat(spark, "opqd_stat_spec", s"$dir/stat",
       gen = 0, n = n0, totalErr = t0)
     try {
@@ -1247,7 +1264,8 @@ class StorageSpec extends GraftSuite {
       Storage.appendBucketed(
         Similarity.ivfPqIndexOpq(drifted, cents, rot, books),
         "opqd_idx_spec", bucketCol = "cell_id", buckets = 8)
-      val (n1, t1) = Similarity.opqQuantizationError(drifted, cents, rot, books)
+      val (n1, t1) = Similarity.quantizationError(
+        Similarity.opqResiduals(drifted, cents, rot), books)
       Similarity.recordDriftStat(spark, "opqd_stat_spec", s"$dir/stat",
         gen = 1, n = n1, totalErr = t1)
       assert(t1 * n0 > 2.0 * t0 * n1,

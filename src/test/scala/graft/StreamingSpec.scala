@@ -718,7 +718,8 @@ class StreamingSpec extends GraftSuite {
       bucketCol = "vec_id", buckets = 8)
     // baseline stat: the seed corpus under the initial quantizers
     // (gen -1 < every batchId, so it stays the oldest row)
-    val (nb, tb) = Similarity.residualQuantizationError(corpus0, cents0, books0)
+    val (nb, tb) = Similarity.quantizationError(
+      Similarity.ivfResiduals(corpus0, cents0), books0)
     Similarity.recordDriftStat(spark, "ann_loop_stat", s"$base/stat",
       gen = -1L, n = nb, totalErr = tb)
     val driftA = (0L until 15L).map(j =>
@@ -827,6 +828,46 @@ class StreamingSpec extends GraftSuite {
     } finally {
       q.stop()
       Seq("ann_loop_idx", "ann_loop_cor", "ann_loop_stat", "ann_loop_ts")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+    }
+  }
+
+  test("annSelfUpdating over empty stored tables starts, records no gen -1 " +
+      "baseline, and takes its first batch as the baseline") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    import graft.operators.Similarity
+    import graft.sources.Storage
+    val rng = new scala.util.Random(17)
+    val train = (0L until 20L).map(i => (i, Array.fill(8)(rng.nextDouble())))
+      .toDF("vec_id", "embedding")
+    val cents = Similarity.kmeansFit(train, k = 2, iters = 1)
+    val books = Similarity.pqFitCodebooksResidual(train, cents, m = 2,
+      ksub = 2, iters = 1)
+    val empty = train.limit(0)
+    val base = java.nio.file.Files.createTempDirectory("graft_ann_empty")
+    base.toFile.deleteOnExit()
+    Storage.writeBucketed(Similarity.ivfPqIndexResidual(empty, cents, books),
+      "ann_empty_idx", s"$base/idx", bucketCol = "cell_id", buckets = 8)
+    Storage.writeBucketed(empty, "ann_empty_cor", s"$base/cor",
+      bucketCol = "vec_id", buckets = 8)
+    val mem = MemoryStream[(Long, Array[Double])]
+    try {
+      val (q, _) = graft.streaming.DocumentStreams.annSelfUpdating(
+        mem.toDF.toDF("vec_id", "embedding"), "ann_empty_idx", "ann_empty_cor",
+        "ann_empty_stat", s"$base/stat", s"$base/pairs", s"$base/ckpt",
+        cents, books, k = 1, r = 1, nprobe = 1, kmK = 2, pqM = 2, pqKsub = 2)
+      try {
+        assert(!spark.catalog.tableExists("ann_empty_stat"),
+          "an empty seed corpus recorded a gen -1 baseline")
+        mem.addData((100L until 105L).map(i => (i, Array.fill(8)(rng.nextDouble()))): _*)
+        q.processAllAvailable()
+        val stats = Similarity.driftStats(spark, "ann_empty_stat").collect()
+        assert(stats.map(_.getLong(0)).toSeq == Seq(0L) && stats(0).getLong(1) == 5L,
+          s"the first absorbed batch is not the baseline: ${stats.toSeq}")
+      } finally q.stop()
+    } finally {
+      Seq("ann_empty_idx", "ann_empty_cor", "ann_empty_stat")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
     }
   }
